@@ -228,7 +228,7 @@ object Bench {
     // ≥16 cores — the low-core bench invocation exists to measure CORE
     // scaling of the 1× suite, and paying the ~5-minute 8× pass twice
     // per round buys no extra signal there.
-    val scaleResults: Seq[(String, Double, Long)] =
+    val scaleResults: Seq[(String, Double, Long, Boolean)] =
       if (sys.env.getOrElse("SPARK_GRAFT_SCALE_BLOCK",
           if (cpus.toInt >= 16) "1" else "0") == "0") Seq.empty
       else try {
@@ -259,15 +259,19 @@ object Bench {
             java.nio.file.Paths.get("target/ivf-bench"))
           val (tasks0, _) = drained()
           val t0 = System.nanoTime()
-          try fn(spark, sf8).write.mode("overwrite").format("noop").save()
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name (8x) FAILED: $e")
-          }
+          val ok =
+            try {
+              fn(spark, sf8).write.mode("overwrite").format("noop").save()
+              true
+            } catch {
+              case e: Throwable =>
+                System.err.println(s"[bench] $name (8x) FAILED: $e")
+                false
+            }
           val sec = (System.nanoTime() - t0) / 1e9
           graft.streaming.StreamingOps.lastRunStats.clear()
           val (tasks1, _) = drained()
-          (name, sec, tasks1 - tasks0)
+          (name, sec, tasks1 - tasks0, ok)
         }
       } catch {
         case scala.util.control.NonFatal(e) =>
@@ -299,14 +303,20 @@ object Bench {
     // scale-block fields render only when the block ran: queries_8x /
     // tasks_8x / total_8x sit EARLY in the line (right after sf) so the
     // judged stdout tail still ends with the 1× seconds map + totals
-    val q8 = scaleResults.map { case (k, v, _) => s"\"" + k + "\":" + r3(v) }
+    // a query that failed at 8x is counted in failed_8x and left out of
+    // the maps and the total: its partial time must never read as a fast
+    // timing
+    val scaleOk = scaleResults.filter(_._4)
+    val q8 = scaleOk.map { case (k, v, _, _) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val t8 = scaleResults.map { case (k, _, n) => s"\"" + k + "\":" + n }
+    val t8 = scaleOk.map { case (k, _, n, _) => s"\"" + k + "\":" + n }
       .mkString("{", ",", "}")
-    val total8 = r3(scaleResults.map(_._2).sum)
+    val total8 = r3(scaleOk.map(_._2).sum)
+    val failed8 = scaleResults.size - scaleOk.size
     val scaleFields =
       if (scaleResults.isEmpty) ""
-      else s""""total_8x":$total8,"tasks_8x":$t8,"queries_8x":$q8,"""
+      else s""""total_8x":$total8,"failed_8x":$failed8,""" +
+        s""""tasks_8x":$t8,"queries_8x":$q8,"""
     // field order is load-bearing (round-10 verdict #4): the judged view of
     // this line keeps only the LAST ~2000 stdout chars, so the per-query
     // SECONDS map goes after the tasks map — the truncation window then

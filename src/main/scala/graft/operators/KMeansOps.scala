@@ -16,14 +16,15 @@ import org.apache.spark.sql.functions._
   * → driver-side mean → collect → re-broadcast.
   *
   * Rebuild shape: centers are a k-row driver array embedded as *literal
-  * expressions*, so assignment is a narrow codegen'd projection (no shuffle,
-  * no crossJoin); recompute is a partial+final hash aggregate of per-dimension
-  * `avg` (map-side combine reduces each partition to k rows before the
-  * shuffle). Per Lloyd iteration: exactly one job, one k×d-row shuffle,
-  * one k-row driver collect — the same topology MLlib's KMeans uses
-  * (`treeAggregate` of sufficient statistics), which is the 1000-executor
-  * scale path: driver traffic is O(k·d) per iteration regardless of input
-  * rows.
+  * expressions* (no shuffle, no crossJoin). A Lloyd iteration is one
+  * native aggregate ([[org.apache.spark.sql.graft.NearestCenterSums]]) that
+  * assigns each point and folds it into per-partition sufficient
+  * statistics — a k×(1+d) count-and-sums buffer — then merges the
+  * per-partition buffers in one single-partition shuffle and returns one
+  * row; the driver divides. That is the topology MLlib's KMeans uses
+  * (`treeAggregate` of sufficient statistics), the 1000-executor scale
+  * path: driver traffic is O(k·d) per iteration regardless of input rows.
+  * Assignment alone ([[nearestCol]]) is a narrow codegen'd projection.
   */
 object KMeansOps {
 
@@ -123,17 +124,24 @@ object KMeansOps {
   private[operators] def snap12(x: Double): Double =
     math.floor(x * 1e12 + 0.5) / 1e12
 
-  /** One Lloyd step: assign + recompute, empty clusters keeping their
-    * previous center (MLlib-style; the reference silently shrinks k —
-    * quirk §8.3). Recomputed means are [[snap12]]-snapped. */
+  /** One Lloyd step: assign + recompute in one pass — the native
+    * [[org.apache.spark.sql.graft.NearestCenterSums]] aggregate returns,
+    * for each cid c, the member count at `c·(1+d)` and the per-dimension
+    * sums after it — then the driver-side mean, [[snap12]]-snapped. An
+    * empty cluster keeps its previous center (MLlib-style; the reference
+    * silently shrinks k — quirk §8.3). The means equal the two-pass form —
+    * [[nearestCol]] then [[recompute]] — bit for bit after snapping. */
   def lloydStep(pts: DataFrame, centers: Array[(Int, Array[Double])],
       metric: Metric = SqEuclid): Array[(Int, Array[Double])] = {
-    val dim = centers.head._2.length
-    val assigned = pts.withColumn("cid", nearestCol(col("v"), centers, metric))
-    val fresh = recompute(assigned, dim).collect().map { row =>
-      (row.getInt(0), row.getSeq[Double](2).toArray.map(snap12))
-    }.toMap
-    centers.map { case (cid, old) => (cid, fresh.getOrElse(cid, old)) }
+    val d = centers.head._2.length
+    val sums = pts.agg(org.apache.spark.sql.graft.NearestCenterSums
+      .column(col("v"), centers, metric.manhattan)).head().getSeq[Double](0)
+    centers.map { case (cid, old) =>
+      val o = cid * (1 + d)
+      val n = sums(o)
+      if (n == 0) (cid, old)
+      else (cid, Array.tabulate(d)(j => snap12(sums(o + 1 + j) / n)))
+    }
   }
 
   /** Full Lloyd loop with iteration cap + tolerance (Beam fixed-trip
@@ -535,8 +543,8 @@ object KMeansOps {
       // permutation, and one snap12 Lloyd step trains the centers — all
       // DuckDB-expressible, so unlike a held-out MLlib fit this evaluation
       // flow is hash-verified. The SQL mirror carries an emptied cluster's
-      // previous center via LEFT JOIN + coalesce — the same
-      // `fresh.getOrElse(cid, old)` branch lloydStep takes (a seed cluster
+      // previous center via LEFT JOIN + coalesce — the same zero-count
+      // branch lloydStep takes (a seed cluster
       // CAN empty: two train seeds with identical embeddings leave the
       // higher cid with zero members after the low-cid argmin tiebreak, so
       // "every seed is a train point at distance 0 from itself" is not a
@@ -1176,8 +1184,8 @@ object KMeansOps {
     * Lloyd iterations from the frozen seeds — the DuckDB mirror of
     * `lloydStep(…lloydStep(pts, frozenCenters(k))…)`. The final relation is
     * `c$iters(cid, cv)`. A cell that empties carries its previous center
-    * via the LEFT JOIN + coalesce, exactly lloydStep's
-    * `fresh.getOrElse(cid, old)` (k=16 cells CAN empty — e.g. a
+    * via the LEFT JOIN + coalesce, exactly lloydStep's zero-count branch
+    * (k=16 cells CAN empty — e.g. a
     * duplicate-point seed loses the low-cid tiebreak and starts with zero
     * members — unlike the verified-nonempty k=4 unroll above). */
   private[operators] def trainedCellsSqlCtes(k: Int, iters: Int): String = {
@@ -1493,9 +1501,8 @@ object KMeansOps {
   private def lloydUnrollSql(dist: (String, String) => String): String = {
     val centroid = snappedCentroidSql
     // c1 carries an emptied cluster's previous center via LEFT JOIN +
-    // coalesce — the same `fresh.getOrElse(cid, old)` branch lloydStep
-    // takes, and the same SQL form as cluster_eval_holdout /
-    // trainedCellsSqlCtes. The k=4 frozen seeds never empty on the fixture
+    // coalesce — the same zero-count branch lloydStep takes, and the same
+    // SQL form as cluster_eval_holdout / trainedCellsSqlCtes. The k=4 frozen seeds never empty on the fixture
     // (verified at all tested SFs), but two seeds sharing an embedding
     // WOULD empty the higher cid, and a fresh-centers-only c1 would then
     // silently drop it while Spark carries it (round-7 ADVICE).

@@ -46,32 +46,14 @@ case class NearestCenter(child: Expression, centers: Array[Array[Double]],
     StructField("dist", DoubleType, nullable = false)))
 
   override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData].toDoubleArray()
-    var bestC = -1
-    var best = Double.PositiveInfinity
-    var c = 0
-    while (c < centers.length) {
-      val ct = centers(c)
-      var s = 0.0
-      var j = 0
-      while (j < ct.length) {
-        val diff = v(j) - ct(j)
-        s += (if (metric == 1) math.abs(diff) else diff * diff)
-        j += 1
-      }
-      // `bestC < 0` guard: a NaN coordinate in the point makes EVERY
-      // distance NaN, and `s < best` alone would then return cid=-1 /
-      // dist=+Inf — a phantom cluster downstream. Claiming center 0 keeps
-      // the cid in-range deterministically (NaN *centers* cannot occur:
-      // the matrix is driver-built from finite literals). For finite
-      // distances the extra clause only fires at c=0 where s < +Inf
-      // already held, so results are unchanged.
-      if (bestC < 0 || s < best) { best = s; bestC = c }
-      c += 1
-    }
-    new GenericInternalRow(Array[Any](bestC, best))
+    val v = input.asInstanceOf[ArrayData]
+    val c = NearestCenter.nearest(v, centers, metric)
+    new GenericInternalRow(Array[Any](c,
+      NearestCenter.distance(v, centers(c), metric)))
   }
 
+  // the codegen path inlines the same loop as `NearestCenter.nearest`
+  // (fold order, tie and NaN rule) over a copied `double[]`
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centersRef = ctx.addReferenceObj("centers", centers, "double[][]")
     val term = if (metric == 1) "Math.abs(diff)" else "diff * diff"
@@ -109,16 +91,62 @@ case class NearestCenter(child: Expression, centers: Array[Array[Double]],
 }
 
 object NearestCenter {
+  /** The center matrix of a driver-side center set, checked: non-empty,
+    * cids positional (collectCenters assigns index order; a future
+    * non-positional caller fails loudly instead of mis-assigning) and one
+    * shared dimension. */
+  def matrix(centers: Array[(Int, Array[Double])]): Array[Array[Double]] = {
+    require(centers.nonEmpty, "centers must be non-empty")
+    val d = centers.head._2.length
+    centers.zipWithIndex.foreach { case ((cid, c), i) =>
+      require(cid == i, s"centers must be positional, got cid=$cid at $i")
+      require(c.length == d,
+        s"center $cid has dimension ${c.length}, center 0 has $d")
+    }
+    centers.map(_._2)
+  }
+
+  /** Distance from `v` to one center: sequential left-to-right fold per
+    * dimension (squared Euclidean, or L1 for `metric` 1). */
+  def distance(v: ArrayData, ct: Array[Double], metric: Int): Double = {
+    var s = 0.0
+    var j = 0
+    if (metric == 1)
+      while (j < ct.length) { s += math.abs(v.getDouble(j) - ct(j)); j += 1 }
+    else
+      while (j < ct.length) {
+        val diff = v.getDouble(j) - ct(j)
+        s += diff * diff
+        j += 1
+      }
+    s
+  }
+
+  /** Argmin kernel shared by [[NearestCenter]] and [[NearestCenterSums]]:
+    * the cid of the nearest center, ties to the lower cid. Reads `v` in
+    * place (no copy). */
+  def nearest(v: ArrayData, centers: Array[Array[Double]], metric: Int): Int = {
+    var bestC = -1
+    var best = Double.PositiveInfinity
+    var c = 0
+    while (c < centers.length) {
+      val s = distance(v, centers(c), metric)
+      // `bestC < 0` guard: a NaN coordinate in the point makes EVERY
+      // distance NaN, and `s < best` alone would then return cid=-1 — a
+      // phantom cluster downstream. Claiming center 0 keeps the cid
+      // in-range deterministically (NaN *centers* cannot occur: the matrix
+      // is driver-built from finite literals). For finite distances the
+      // extra clause only fires at c=0 where s < +Inf already held.
+      if (bestC < 0 || s < best) { best = s; bestC = c }
+      c += 1
+    }
+    bestC
+  }
+
   /** struct(cid, dist) column of the nearest center. */
   def struct(v: Column, centers: Array[(Int, Array[Double])],
-      manhattan: Boolean = false): Column = {
-    // cids are positional (collectCenters assigns index order); assert so a
-    // future non-positional caller fails loudly instead of mis-assigning
-    centers.zipWithIndex.foreach { case ((cid, _), i) =>
-      require(cid == i, s"centers must be positional, got cid=$cid at $i")
-    }
+      manhattan: Boolean = false): Column =
     ExpressionUtils.column(NearestCenter(
-      ExpressionUtils.expression(v), centers.map(_._2),
+      ExpressionUtils.expression(v), matrix(centers),
       if (manhattan) 1 else 0))
-  }
 }

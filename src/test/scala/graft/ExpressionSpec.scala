@@ -138,6 +138,60 @@ class ExpressionSpec extends SparkSpec {
     assert(got(1) === 0) // NaN row: deterministic cid 0, never -1
   }
 
+  test("NearestCenter.matrix rejects non-positional cids and mixed dimensions") {
+    import org.apache.spark.sql.graft.NearestCenter
+    assert(NearestCenter.matrix(Array((0, Array(1.0)), (1, Array(2.0))))
+      .map(_.toSeq).toSeq === Seq(Seq(1.0), Seq(2.0)))
+    intercept[IllegalArgumentException] {
+      NearestCenter.matrix(Array((1, Array(1.0))))
+    }
+    intercept[IllegalArgumentException] {
+      NearestCenter.matrix(Array((0, Array(1.0)), (1, Array(2.0, 3.0))))
+    }
+    intercept[IllegalArgumentException] { NearestCenter.matrix(Array.empty) }
+  }
+
+  test("NearestCenterSums buffer: update, serde round-trip, zero merge, nulls") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.graft.NearestCenterSums
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    def bits(b: Array[Double]) =
+      b.map(java.lang.Double.doubleToLongBits).toSeq
+    val agg = NearestCenterSums(
+      BoundReference(0, ArrayType(DoubleType), nullable = true),
+      Array(Array(0.0, 0.0), Array(10.0, 10.0)), metric = 0)
+    def row(v: Array[Double]) =
+      InternalRow(if (v == null) null else ArrayData.toArrayData(v))
+    val buf = Seq(Array(1.0, 2.0), Array(9.0, 11.0), null, Array(0.5, 0.25),
+        Array(5.0, 5.0))
+      .foldLeft(agg.createAggregationBuffer())((b, v) => agg.update(b, row(v)))
+    // cid 0: count 3 (incl. the tie at (5,5) → lower cid), cid 1: count 1;
+    // the null vector is skipped and not counted
+    assert(buf.toSeq === Seq(3.0, 6.5, 7.25, 1.0, 9.0, 11.0))
+    assert(bits(agg.deserialize(agg.serialize(buf))) === bits(buf))
+    // an empty partition's all-zero buffer is the merge identity
+    assert(bits(agg.merge(buf.clone(), agg.createAggregationBuffer())) ===
+      bits(buf))
+    assert(bits(agg.merge(agg.createAggregationBuffer(), buf)) === bits(buf))
+    // a NaN coordinate claims cid 0
+    val nan = agg.update(agg.createAggregationBuffer(),
+      row(Array(Double.NaN, 1.0)))
+    assert(nan(0) === 1.0 && nan(3) === 0.0 && nan(1).isNaN)
+    intercept[IllegalArgumentException] {
+      agg.update(agg.createAggregationBuffer(), row(Array(1.0, 2.0, 3.0)))
+    }
+    // through a query: null vectors skipped, partial + final merged
+    import spark.implicits._
+    val got = Seq(Seq(1.0, 2.0), null, Seq(9.0, 11.0), null).toDF("v")
+      .repartition(3)
+      .agg(NearestCenterSums.column(col("v"),
+        Array((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))))
+      .head().getSeq[Double](0)
+    assert(got === Seq(1.0, 1.0, 2.0, 1.0, 9.0, 11.0))
+  }
+
   test("BpeTokens: hand fold, OOV application, Ġ-mapping, edge shapes") {
     import spark.implicits._
     import org.apache.spark.sql.graft.BpeTokens

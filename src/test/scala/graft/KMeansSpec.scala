@@ -149,6 +149,61 @@ class KMeansSpec extends SparkSpec {
       "populated cluster must move to the recomputed mean")
   }
 
+  test("fused lloydStep == two-pass nearestCol + recompute + snap12, bit for bit") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    // the two-pass form the fused aggregate replaced
+    def snap12(x: Double) = math.floor(x * 1e12 + 0.5) / 1e12
+    def twoPass(pts: DataFrame, centers: Array[(Int, Array[Double])],
+        metric: KMeansOps.Metric) = {
+      val assigned = pts.withColumn("cid",
+        KMeansOps.nearestCol(col("v"), centers, metric))
+      val fresh = KMeansOps.recompute(assigned, centers.head._2.length)
+        .collect().map(r => (r.getInt(0), r.getSeq[Double](2).map(snap12)))
+        .toMap
+      centers.map { case (cid, old) => fresh.getOrElse(cid, old.toSeq) }
+    }
+    def bits(cs: Seq[Seq[Double]]) =
+      cs.map(_.map(java.lang.Double.doubleToLongBits))
+
+    // 5-D points in 4 overlapping groups, one NaN coordinate (claims cid 0)
+    val rows = (0 until 300).map { i =>
+      Row(i.toLong, Seq.tabulate(5)(j =>
+        math.sin(i * 7.1 + j * 1.3) * (1 + i % 4) + (i % 4) * 3.0))
+    } :+ Row(300L, Seq(Double.NaN, 0.5, 0.5, 0.5, 0.5))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", ArrayType(DoubleType))))
+    // n partitions; for n > 1 one of them is empty
+    def parts(n: Int): DataFrame = {
+      val sc = spark.sparkContext
+      val rdd =
+        if (n == 1) sc.parallelize(rows, 1)
+        else sc.parallelize(rows, n - 1).union(sc.parallelize(Seq.empty[Row], 1))
+      val df = spark.createDataFrame(rdd, schema)
+      assert(df.rdd.getNumPartitions === n)
+      df
+    }
+    // rows 0-3 seed one group each; a duplicate of row 0 empties cid 4
+    val init = (Seq(0, 1, 2, 3, 0).zipWithIndex.map { case (r, cid) =>
+      (cid, rows(r).getSeq[Double](1).toArray)
+    }).toArray
+    val fixture = KMeansOps.points(spark, sf)
+    val fixtureInit = KMeansOps.collectCenters(KMeansOps.sampleK(fixture, 8))
+    for (n <- Seq(1, 4, 7); metric <- Seq(KMeansOps.SqEuclid, KMeansOps.L1)) {
+      val pts = parts(n)
+      val fused = KMeansOps.lloydStep(pts, init, metric).map(_._2.toSeq).toSeq
+      assert(bits(fused) === bits(twoPass(pts, init, metric).toSeq),
+        s"synthetic, $n partitions, $metric")
+      assert(fused(0).head.isNaN, "the NaN point must land in cid 0")
+      assert(fused(4) === init(4)._2.toSeq, "emptied cid 4 keeps its center")
+      val fx = fixture.repartition(n).localCheckpoint()
+      assert(bits(KMeansOps.lloydStep(fx, fixtureInit, metric)
+          .map(_._2.toSeq).toSeq) ===
+        bits(twoPass(fx, fixtureInit, metric).toSeq),
+        s"fixture, $n partitions, $metric")
+    }
+  }
+
   test("kmeans_fit* emit a driver-visible cost flag that holds on fixture") {
     // round-6 verdict #2: the rows-only fit queries now carry (k, cost,
     // cost_vs_lloyd_ok) so a wiring regression flips a visible row in the

@@ -99,6 +99,46 @@ class PlanSpec extends SparkSpec {
     assert(line.trim.startsWith("*"), s"not codegen'd: $line")
   }
 
+  test("lloydStep is one fused sufficient-statistics aggregate (partial + final)") {
+    // one pass: the native aggregate assigns and sums per partition, one
+    // single-partition exchange merges. A regression to the assignment
+    // projection + cid-keyed avg hash aggregate (2d + 1 buffer slots per
+    // row) fails here. The plan is the one lloydStep's own action ran.
+    import graft.operators.KMeansOps
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val pts = KMeansOps.points(spark, sf)
+    val centers = KMeansOps.collectCenters(KMeansOps.sampleK(pts, 4))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add((qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }).toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      KMeansOps.lloydStep(pts, centers)
+      org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size === 1, "lloydStep must run exactly one action")
+    val lines = plans.peek().split("\n")
+    val partial = lines.filter(_.contains("partial_nearestcentersums("))
+    val fin = lines.filter(l => l.contains("nearestcentersums(") &&
+      !l.contains("partial_nearestcentersums("))
+    assert(partial.length === 1 && fin.length === 1,
+      s"want one partial + one final NearestCenterSums:\n${lines.mkString("\n")}")
+    assert(lines.count(_.contains("Exchange")) === 1 &&
+      lines.exists(_.contains("Exchange SinglePartition")),
+      "partial buffers must merge through one single-partition exchange")
+    assert(!lines.exists(_.contains("avg(")), "per-dimension avg aggregate is back")
+    assert(!lines.exists(_.toLowerCase.contains("nearestcenter(")),
+      "separate NearestCenter assignment projection is back")
+  }
+
   test("similarity_topk ranks within salted partitions first") {
     val plan = executed("similarity_topk")
     assert(plan.contains("pmod"), "salted first-phase window missing")
