@@ -1,101 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** One timed run of one plan. */
+  private final case class Sample(sec: Double, tasks: Long,
+      shuffleBytes: Long, ok: Boolean,
+      stream: Option[graft.streaming.StreamingOps.StreamRunStats])
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // bench mode: sketch hashes switch md5 -> xxhash64 (same plan shape and
-    // cardinalities, ~5x less hash cost); oracle runs (Verify) keep md5 so
-    // DuckDB can reproduce every bit.
-    System.setProperty("graft.fastHash", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // codegen class cache sized to the suite (default 100): the
-      // interleaved-pass protocol runs ~195 distinct plans per pass, so
-      // at the default size every pass evicts everything and every query
-      // re-pays generated-class compilation each rep (~50 s across the
-      // suite, measured). A long-lived production driver running a
-      // recurring query set would size this the same way.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // data-derived reduce parallelism (guide §2.2): with the default
-      // parallelismFirst=true, AQE coalesces post-shuffle partitions only
-      // down to the core count, so every reduce stage inherits cpus-many
-      // near-empty tasks whatever the data volume — the round-21 scaling
-      // block measured the FULL SUITE faster at 8 cores than 32 purely on
-      // that per-task fixed cost. parallelismFirst=false makes AQE honor
-      // the advisory target size instead, so reduce partition counts are
-      // a function of measured shuffle bytes — the same sizing rule that
-      // governs last-stage aggregates at 100 TB (a 6.4 TB shuffle still
-      // fans out to ~100k partitions at the 64 MB default; a 100 KB one
-      // no longer pays 32 empty tasks). Advisory size is env-overridable
-      // so cluster runs can tune bytes-per-task without a rebuild.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one-time layout ETL (bucketed tables, the IVF index), fixture
-    // staging (text/csv/jsonl files, the streaming landing dir), and the
-    // shared fit-verification yardstick all run OUTSIDE the timings:
-    // join_bucketed must measure the exchange-free join (not the CTAS),
-    // the scan_*/streaming_* queries the scan (not the staging write),
-    // and kmeans_fit the MLlib fit (not the memo fill of the reference-
-    // Lloyd cost its three variants share — round-7 ADVICE).
-    // each setup stage fails in ISOLATION: queries self-ensure their own
-    // staging, so a broken stage here costs those queries (their ensure
-    // re-throws inside the per-query try) — never the whole round. Round
-    // 11's bench died in THIS block on a fixture encoding change and
-    // zeroed every number.
-    // NonFatal only: an OOM/LinkageError leaves the JVM in a state where
-    // every subsequent timing is garbage — better the rc=1 than a full
-    // round of numbers from a corrupted session
-    def setup(what: String)(body: => Unit): Unit =
-      try body catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] setup $what failed " +
-            s"(continuing; affected queries will fail individually): $e")
-      }
-    setup("bucketed layouts") {
-      graft.sources.StorageOps.ensureLayouts(spark, sfDir)
-      graft.sources.StorageOps.ensureRebucketed(spark, sfDir) }
-    setup("text fixtures") { graft.sources.TextIO.ensureFixtures(spark, sfDir) }
-    setup("streaming landing dir") {
-      graft.streaming.StreamingOps.stageDir(spark, sfDir, "events")
-      graft.streaming.StreamingOps.stageDir(spark, sfDir, "documents"); () }
-    setup("ivf index") {
-      graft.operators.SimilarityOps.ensureIvfIndex(spark, sfDir); () }
-    setup("export layouts") {
-      graft.operators.PipelineOps.ensureExportShards(spark, sfDir)
-      graft.sources.StorageOps.ensureBaseManifest(spark, sfDir); () }
-    setup("mllib ref warm") { graft.operators.MLlibKMeans.warmRef(spark, sfDir) }
-    // de-noise + de-serialize the fixture scans (round-12 verdict item 4,
-    // extended r21): each fixture is one parquet row group, a 1-task scan
-    // that amplifies host contention 4-10x (lineitem, BASELINE.md's
-    // variance mechanism) and SERIALIZES every compute-heavy branch
-    // reading it (documents: the curate DAG re-scans it on 4-5 branches,
-    // each a 0.3-0.5 s single-thread job — r21 Probe breakdown). Stage
-    // row-identical multi-file copies once per fixture fingerprint and
-    // point every Tables read at them — bench times then measure the
-    // plan, not single-task scheduling luck. Bench-only: Verify and the
-    // DuckDB oracle keep reading the fixture bytes directly.
-    setup("multi-rowgroup tables") {
-      BenchLayout.stage(spark, sfDir, cpus.toInt)
-    }
-    // one untimed scan+aggregate+noop-write warmup: whole-session JIT,
-    // codegen compilation, parquet-reader and noop-sink init otherwise all
-    // land on whichever queries sort first alphabetically (the agg_*/
-    // approx_* family), making their round-over-round numbers reflect
-    // warmup luck rather than plan changes
-    setup("warmup") {
-      import org.apache.spark.sql.functions._
-      graft.Tables.events(spark, sfDir)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").format("noop").save()
-    }
-    var failed = 0
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus, bench = true)
+    // staging is untimed; the multi-file scan copies (BenchLayout) are
+    // bench-only: Verify and the DuckDB oracle read the fixture bytes
+    Harness.stage(spark, sfDir)
     // per-query task counter: separates plan regressions from host noise
     // mechanically — every judged round since r3 burned cycles
     // re-litigating single-task contention outliers (a 1-task fixture scan
@@ -127,6 +44,42 @@ object Bench {
       org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
       (taskCount.get(), shuffleBytes.get())
     }
+    // one isolated, timed run of a plan over a fixture dir: seconds, tasks,
+    // shuffle bytes, whether it succeeded, and the stream summary it left
+    def timed(name: String, fn: (SparkSession, String) => DataFrame,
+        dir: String): Sample = {
+      Harness.isolate(spark)
+      val (tasks0, sb0) = drained()
+      val t0 = System.nanoTime()
+      // noop-sink write: every row is fully materialized through the whole
+      // plan (count() lets Catalyst prune unreferenced projections, benching
+      // narrow per-row queries as bare scans), but nothing is persisted.
+      val ok =
+        try {
+          fn(spark, dir).write.mode("overwrite").format("noop").save()
+          true
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name over $dir FAILED: $e")
+            e.printStackTrace()
+            false
+        }
+      val sec = (System.nanoTime() - t0) / 1e9
+      // streaming rate/state artifact (round-12 verdict item 8): a query
+      // that ran a stream left its progress summary behind — claim it
+      // under this query's name and clear for the next query
+      val entries = graft.streaming.StreamingOps.lastRunStats.toMap
+      graft.streaming.StreamingOps.lastRunStats.clear()
+      val stream =
+        if (entries.isEmpty) None
+        else Some(graft.streaming.StreamingOps.StreamRunStats(
+          entries.values.map(_.inputRows).sum,
+          entries.values.map(_.batchMs).sum,
+          entries.values.map(_.stateRows).sum,
+          entries.values.map(_.batches).sum))
+      val (tasks1, sb1) = drained()
+      Sample(sec, tasks1 - tasks0, sb1 - sb0, ok, stream)
+    }
     // repeat-trials protocol: the reference's programs time 10x/5x trials
     // per run (/root/reference/SparKMeansGroupBy.java:56-57,
     // BeamKmeansSideInput.java:63-64); here each query runs REPS times
@@ -136,19 +89,9 @@ object Bench {
     // single-trial numbers of earlier rounds. SPARK_GRAFT_REPS=1 restores
     // the quick single-trial mode for local iteration.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    // deterministic alphabetical order: Map hash order varies with the key
-    // set, which made per-query numbers incomparable across rounds (a
-    // query's cost includes whatever codegen/reader warmup its
-    // predecessors didn't trigger)
     // local-iteration filter: SPARK_GRAFT_ONLY=<regex> benches a subset.
     // The driver never sets it, so judged runs always cover everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    val plans = (SparkEntry.queries ++ SparkEntry.benchOnly)
-      .toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-    val failedNames = scala.collection.mutable.Set.empty[String]
-    val streamStats = scala.collection.mutable.Map
-      .empty[String, graft.streaming.StreamingOps.StreamRunStats]
+    val plans = Harness.plans(sys.env.get("SPARK_GRAFT_ONLY").map(_.r))
     // reps are INTERLEAVED across full suite passes (round-14 verdict
     // item 1): pass 1 runs every query once, then pass 2, then pass 3 —
     // so one host-contention window inflates at most ONE rep of each
@@ -156,70 +99,25 @@ object Bench {
     // discards it. The old back-to-back protocol put all 3 reps of every
     // early query inside the same window, which inflated the judged r14
     // median 2.6x over the clean truth at identical task counts.
-    val samples: Seq[Seq[(String, Double, Long, Long)]] = (1 to reps).map { _ =>
-      plans.map { case (name, fn) =>
-        // isolate measurements: caches AND checkpoint/persisted blocks built
-        // inside one query (iterative k-means loops, LSH band self-joins)
-        // must not linger into the next query's timing or accumulate storage
-        // across the full query sequence (dedup_ngram measured 12 s
-        // mid-sequence vs 5 s isolated before this). clearCache only empties
-        // the SQL CacheManager; localCheckpoint blocks are RDD-level and
-        // otherwise wait for driver GC + ContextCleaner (round-7 ADVICE), so
-        // drop them explicitly.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        // sweep ivf_index_build's throwaway output here, outside any timed
-        // region: deleting the just-built index is teardown, not build ETL
-        // (round-8 ADVICE), and the cells df it returns is localCheckpoint-
-        // pinned so the files are not needed after the query returns
-        graft.sources.Staging.deleteRecursively(
-          java.nio.file.Paths.get("target/ivf-bench"))
-        val (tasks0, sb0) = drained()
-        val t0 = System.nanoTime()
-        // noop-sink write: every row is fully materialized through the whole
-        // plan (count() lets Catalyst prune unreferenced projections, benching
-        // narrow per-row queries as bare scans), but nothing is persisted.
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch {
-          case e: Throwable =>
-            if (failedNames.add(name)) failed += 1
-            System.err.println(s"[bench] $name FAILED: $e")
-            e.printStackTrace()
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // streaming rate/state artifact (round-12 verdict item 8): a query
-        // that ran a stream left its progress summary behind — claim it
-        // under this query's name (runs are sequential; later passes
-        // overwrite, so the reported stats describe the final pass) and
-        // clear for the next query
-        val entries = graft.streaming.StreamingOps.lastRunStats.toMap
-        graft.streaming.StreamingOps.lastRunStats.clear()
-        if (entries.nonEmpty)
-          streamStats(name) = graft.streaming.StreamingOps.StreamRunStats(
-            entries.values.map(_.inputRows).sum,
-            entries.values.map(_.batchMs).sum,
-            entries.values.map(_.stateRows).sum,
-            entries.values.map(_.batches).sum)
-        val (tasks1, sb1) = drained()
-        (name, sec, tasks1 - tasks0, sb1 - sb0)
-      }
+    val samples: Seq[Seq[Sample]] = (1 to reps).map { _ =>
+      plans.map { case (name, fn) => timed(name, fn, sfDir) }
     }
+    // a query that failed in any pass counts once
+    val failed = plans.indices.count(i => samples.exists(!_(i).ok))
     // lower-middle median across passes (exact middle for the odd
     // default); task count and shuffle bytes reported from the same
-    // sample as the chosen time so the columns describe one observed run
+    // sample as the chosen time so the columns describe one observed run.
+    // Stream stats come from the last pass that ran a stream.
     val results = plans.indices.map { i =>
-      val name = plans(i)._1
-      val perQuery = samples.map(_.apply(i))
-      val (_, sec, nTasks, sb) = perQuery.sortBy(_._2).apply((reps - 1) / 2)
-      (name, sec, nTasks, sb, streamStats.get(name))
+      val s = samples.map(_(i)).sortBy(_.sec).apply((reps - 1) / 2)
+      plans(i)._1 -> s.copy(stream = samples.flatMap(_(i).stream).lastOption)
     }
     // ---- 8× SCALE BLOCK (round-20 verdict item 8 / round-21 item 10):
     // one single-rep full-surface pass over an 8×-replicated fixture
     // (BenchLayout.stageScaleFixture — id-remapped unions, duplication
     // pressure preserved), so corpus-scaled regressions in old operators
-    // cannot hide behind sf0.1 fixed costs. UNTIMED staging mirrors the
-    // main setup; timings land in SEPARATE queries_8x/total_8x fields —
+    // cannot hide behind sf0.1 fixed costs. UNTIMED staging through the
+    // same harness; timings land in SEPARATE queries_8x/total_8x fields —
     // the headline queries/total stay 1×-comparable across rounds.
     // Single rep by design: this block is a volume-scaling signal (is a
     // query's cost data-dominated or fixed-cost-dominated?), not a
@@ -228,51 +126,13 @@ object Bench {
     // ≥16 cores — the low-core bench invocation exists to measure CORE
     // scaling of the 1× suite, and paying the ~5-minute 8× pass twice
     // per round buys no extra signal there.
-    val scaleResults: Seq[(String, Double, Long, Boolean)] =
+    val scaleResults: Seq[(String, Sample)] =
       if (sys.env.getOrElse("SPARK_GRAFT_SCALE_BLOCK",
-          if (cpus.toInt >= 16) "1" else "0") == "0") Seq.empty
+          if (cpus >= 16) "1" else "0") == "0") Seq.empty
       else try {
         val sf8 = BenchLayout.stageScaleFixture(spark, sfDir)
-        setup("scale: layouts") {
-          graft.sources.StorageOps.ensureLayouts(spark, sf8)
-          graft.sources.StorageOps.ensureRebucketed(spark, sf8) }
-        setup("scale: text fixtures") {
-          graft.sources.TextIO.ensureFixtures(spark, sf8) }
-        setup("scale: streaming landing dir") {
-          graft.streaming.StreamingOps.stageDir(spark, sf8, "events")
-          graft.streaming.StreamingOps.stageDir(spark, sf8, "documents"); () }
-        setup("scale: ivf index") {
-          graft.operators.SimilarityOps.ensureIvfIndex(spark, sf8); () }
-        setup("scale: export layouts") {
-          graft.operators.PipelineOps.ensureExportShards(spark, sf8)
-          graft.sources.StorageOps.ensureBaseManifest(spark, sf8); () }
-        setup("scale: mllib ref warm") {
-          graft.operators.MLlibKMeans.warmRef(spark, sf8) }
-        // the scaled fixture is written at data-proportional split
-        // counts; the 1× staging overrides must not redirect its reads
-        BenchLayout.clearOverrides()
-        plans.map { case (name, fn) =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          graft.sources.Staging.deleteRecursively(
-            java.nio.file.Paths.get("target/ivf-bench"))
-          val (tasks0, _) = drained()
-          val t0 = System.nanoTime()
-          val ok =
-            try {
-              fn(spark, sf8).write.mode("overwrite").format("noop").save()
-              true
-            } catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] $name (8x) FAILED: $e")
-                false
-            }
-          val sec = (System.nanoTime() - t0) / 1e9
-          graft.streaming.StreamingOps.lastRunStats.clear()
-          val (tasks1, _) = drained()
-          (name, sec, tasks1 - tasks0, ok)
-        }
+        Harness.stage(spark, sf8, splitScans = false)
+        plans.map { case (name, fn) => (name, timed(name, fn, sf8)) }
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] scale block failed (skipping): $e")
@@ -283,35 +143,32 @@ object Bench {
     // pushed most of the seconds map outside the judged artifact's
     // tail-truncation window
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val ts = results.map { case (k, _, n, _, _) => s"\"" + k + "\":" + n }
-      .mkString("{", ",", "}")
-    val sbs = results.map { case (k, _, _, b, _) => s"\"" + k + "\":" + b }
-      .mkString("{", ",", "}")
+    def obj(kvs: Seq[(String, Any)]): String =
+      kvs.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, s) => k -> r3(s.sec) })
+    val ts = obj(results.map { case (k, s) => k -> s.tasks })
+    val sbs = obj(results.map { case (k, s) => k -> s.shuffleBytes })
     // per-streaming-query rate + state summary (compact: only queries
     // that actually ran a stream appear)
-    val ss = results.collect { case (k, _, _, _, Some(st)) =>
+    val ss = obj(results.collect { case (k, Sample(_, _, _, _, Some(st))) =>
       val rps =
         if (st.batchMs > 0) math.rint(st.inputRows * 1000.0 / st.batchMs)
         else 0.0
-      s"\"$k\":{\"rows\":${st.inputRows},\"batch_ms\":${st.batchMs}," +
+      k -> (s"{\"rows\":${st.inputRows},\"batch_ms\":${st.batchMs}," +
         s"\"rows_per_sec\":$rps,\"state_rows\":${st.stateRows}," +
-        s"\"batches\":${st.batches}}"
-    }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+        s"\"batches\":${st.batches}}")
+    })
+    val total = results.map(_._2.sec).sum
     // scale-block fields render only when the block ran: queries_8x /
     // tasks_8x / total_8x sit EARLY in the line (right after sf) so the
     // judged stdout tail still ends with the 1× seconds map + totals
     // a query that failed at 8x is counted in failed_8x and left out of
     // the maps and the total: its partial time must never read as a fast
     // timing
-    val scaleOk = scaleResults.filter(_._4)
-    val q8 = scaleOk.map { case (k, v, _, _) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val t8 = scaleOk.map { case (k, _, n, _) => s"\"" + k + "\":" + n }
-      .mkString("{", ",", "}")
-    val total8 = r3(scaleOk.map(_._2).sum)
+    val scaleOk = scaleResults.filter(_._2.ok)
+    val q8 = obj(scaleOk.map { case (k, s) => k -> r3(s.sec) })
+    val t8 = obj(scaleOk.map { case (k, s) => k -> s.tasks })
+    val total8 = r3(scaleOk.map(_._2.sec).sum)
     val failed8 = scaleResults.size - scaleOk.size
     val scaleFields =
       if (scaleResults.isEmpty) ""

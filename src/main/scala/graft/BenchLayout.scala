@@ -22,18 +22,17 @@ import org.apache.spark.sql.SparkSession
   *    plan, before these per-table values were measured).
   *
   * A split of 1 means the fixture bytes are read directly (no staged
-  * copy, no override prop). `SPARK_GRAFT_SPLIT_<TABLE>` overrides a
-  * table's count for A/B runs; the split count is part of the staged
-  * dir key so changing it invalidates the cache. Results are unchanged
-  * by construction — same rows, different file split — re-proven by a
-  * staged-layout Verify run against the DuckDB oracle (282/282 green,
-  * OPTIMIZATION_r21.md). Verify/tests never set these props, so the
-  * oracle path always reads the fixture bytes.
+  * copy, no scan override in [[Tables]]). The split count is part of the
+  * staged dir key so changing it invalidates the cache. Results are
+  * unchanged by construction — same rows, different file split —
+  * re-proven by a staged-layout Verify run against the DuckDB oracle
+  * (282/282 green, OPTIMIZATION_r21.md). Verify/tests never stage, so
+  * the oracle path always reads the fixture bytes.
   *
   * events stages THROUGH [[Tables.events]] so the ts column lands
   * pre-normalized as epoch-nanos long; the others are plain row copies. */
 object BenchLayout {
-  /** Measured-at-sf0.1 defaults (see OPTIMIZATION_r21.md §staging and
+  /** Measured-at-sf0.1 split counts (see OPTIMIZATION_r21.md §staging and
     * OPTIMIZATION_r22.md):
     * lineitem keeps the round-12 judged value (13.6 MB of compute-heavy
     * scans — parse_points alone is ~1.5 s of CPU in one task unsplit);
@@ -50,32 +49,31 @@ object BenchLayout {
     * embed_cov 0.57→0.36, sim_topk_ivf_pq 1.10→0.91, knn_graph
     * 0.75→0.61), with 32-way still the r21-measured loss (iterative
     * loops 57→1638 tasks). */
-  private val DEFAULT_SPLIT: Map[String, Int] = Map(
+  private val splits: Map[String, Int] = Map(
     "lineitem" -> 32,
     "events" -> 1,
     "documents" -> 4,
     "embeddings" -> 4,
     "orders" -> 1)
 
-  def split(name: String): Int =
-    sys.env.get(s"SPARK_GRAFT_SPLIT_${name.toUpperCase}")
-      .map(_.toInt).getOrElse(DEFAULT_SPLIT(name))
-
   /** The 8×-replicated fixture behind Bench's scale block (round-20
     * verdict item 8 / round-21 item 10): documents/events/lineitem/
-    * embeddings each unioned 8× with per-replica id remaps (the
-    * committed scripts/build_scale_fixtures.scala conventions — ids stay
-    * join/window-valid, payload bytes repeat so the dedup families see
-    * real duplication pressure), every other table symlinked from the
-    * source fixture. Built once per source-fixture fingerprint; returns
-    * a dir shaped exactly like an sfDir so every query runs against it
-    * unchanged. */
+    * embeddings each unioned `reps`× with per-replica id remaps (doc_id
+    * and event_id/user_id + r·1e6, l_orderkey + r·6e6, vec_id + r·1e7:
+    * ids stay window-valid, payload bytes repeat so the dedup families
+    * see real duplication pressure), every other table copied from the
+    * source fixture as is — so lineitem⋈orders matches only replica 0's
+    * order keys. Built once per source-fixture fingerprint; returns a
+    * self-contained dir shaped exactly like an sfDir, so every query runs
+    * against it unchanged. Other factors for ad-hoc scaling runs, e.g.
+    * 64× from spark-shell: `graft.BenchLayout.stageScaleFixture(spark,
+    * sf, 64)`. */
   def stageScaleFixture(spark: SparkSession, sfDir: String,
       reps: Int = 8): String = {
     import org.apache.spark.sql.functions._
     val key = graft.sources.Staging.fixtureKey(sfDir)
     graft.sources.Staging.ensureDir(
-      s"target/bench-scale/$key-x$reps", marker = "_STAGED") { tmp =>
+      s"target/scale-fixture/$key-x$reps", marker = "_STAGED") { tmp =>
       // file counts scale the 1× split table by the replication factor
       // (capped at 32) — data-proportional scan parallelism, the same
       // bytes-per-task as the measured 1× splits
@@ -85,7 +83,7 @@ object BenchLayout {
           if (table == "events") Tables.events(spark, sfDir)
           else spark.read.parquet(s"$sfDir/$table.parquet")
         (0 until reps).map(i => remap(src, i)).reduce(_ unionAll _)
-          .repartition(math.min(32, BenchLayout.split(table) * reps))
+          .repartition(math.min(32, splits(table) * reps))
           .write.mode("overwrite").parquet(s"$tmp/$table.parquet")
       }
       rep("documents", (d, i) =>
@@ -99,9 +97,9 @@ object BenchLayout {
         d.withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
       for (t <- Seq("region", "nation", "customer", "supplier", "part",
           "orders"))
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(tmp, s"$t.parquet"),
-          java.nio.file.Paths.get(sfDir, s"$t.parquet").toAbsolutePath)
+        graft.sources.Staging.copyRecursively(
+          java.nio.file.Paths.get(sfDir, s"$t.parquet"),
+          java.nio.file.Paths.get(tmp, s"$t.parquet"))
       java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_STAGED"),
         Array.empty[Byte])
     }
@@ -112,20 +110,20 @@ object BenchLayout {
     * data-proportional split counts, and a leftover 1×-staging property
     * would silently point its reads back at the 1× copies. */
   def clearOverrides(): Unit =
-    for (t <- DEFAULT_SPLIT.keys)
-      System.clearProperty(s"graft.${t}Dir")
+    for (t <- splits.keys) Tables.setScanDir(t, None)
 
-  def stage(spark: SparkSession, sfDir: String, cpus: Int): Unit = {
+  /** Stage the multi-file copy of each table whose split exceeds 1 and
+    * point [[Tables]] at it. */
+  def stage(spark: SparkSession, sfDir: String): Unit = {
     def ensure(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val n = split(name)
-      if (n > 1) {
-        val dir = graft.sources.Staging.ensureDir(
+      val n = splits(name)
+      Tables.setScanDir(name, Option.when(n > 1) {
+        graft.sources.Staging.ensureDir(
           s"target/bench-$name/" +
             s"${graft.sources.Staging.fixtureKey(sfDir)}-s$n") { tmp =>
           df.repartition(n).write.mode("overwrite").parquet(tmp)
         }
-        System.setProperty(s"graft.${name}Dir", dir)
-      } else System.clearProperty(s"graft.${name}Dir")
+      })
     }
     ensure("lineitem")(spark.read.parquet(s"$sfDir/lineitem.parquet"))
     ensure("events")(Tables.events(spark, sfDir))

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: dump `.explain("formatted")` for declared queries to files —
   * the optimization rounds' before/after plan evidence
-  * (`plans/rNN/<query>_<suffix>.txt`). Session config mirrors [[Bench]]
-  * (same master/shuffle-partitions/fastHash) so the dumped plans are the
-  * shapes the bench actually times. NOT part of the shipped library and
-  * not a declared query.
+  * (`plans/rNN/<query>_<suffix>.txt`). Session and staging come from
+  * [[Harness]], as in [[Bench]], so the dumped plans are the shapes the
+  * bench actually times. NOT part of the shipped library and not a
+  * declared query.
   *
   * Usage: sbt "runMain graft.Plans <outDir> <suffix> <nameRegex>"
   */
@@ -17,34 +16,12 @@ object Plans {
     val outDir = args(0)
     val suffix = args(1)
     val pat = args(2).r
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    System.setProperty("graft.fastHash", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // mirror Bench's data-derived AQE partition sizing (guide §2.2)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the same one-time layout ETL Bench runs, so index/bucket-riding
-    // queries plan against their real layouts
-    graft.sources.StorageOps.ensureLayouts(spark, sfDir)
-    graft.sources.StorageOps.ensureRebucketed(spark, sfDir)
-    graft.sources.TextIO.ensureFixtures(spark, sfDir)
-    graft.operators.SimilarityOps.ensureIvfIndex(spark, sfDir)
-    graft.operators.PipelineOps.ensureExportShards(spark, sfDir)
-    graft.sources.StorageOps.ensureBaseManifest(spark, sfDir)
-    // mirror Bench's scan-layout overrides so dumped plans match benched
-    BenchLayout.stage(spark, sfDir, cpus.toInt)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(Harness.cpus, bench = true)
+    Harness.stage(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val all = (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
-    for ((name, fn) <- all if pat.findFirstIn(name).isDefined) {
+    for ((name, fn) <- Harness.plans(Some(pat))) {
+      Harness.isolate(spark)
       try {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(FormattedMode)

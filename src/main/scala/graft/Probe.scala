@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run declared queries under a job listener and print the
   * per-job wall breakdown (job id, seconds, task count) — the local-mode
@@ -15,31 +14,9 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val pat = args(0).r
     val reps = if (args.length > 1) args(1).toInt else 2
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    System.setProperty("graft.fastHash", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // mirror Bench's data-derived AQE partition sizing (guide §2.2)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.StorageOps.ensureLayouts(spark, sfDir)
-    graft.sources.StorageOps.ensureRebucketed(spark, sfDir)
-    graft.sources.TextIO.ensureFixtures(spark, sfDir)
-    graft.streaming.StreamingOps.stageDir(spark, sfDir, "events")
-    graft.streaming.StreamingOps.stageDir(spark, sfDir, "documents")
-    graft.operators.SimilarityOps.ensureIvfIndex(spark, sfDir)
-    graft.operators.PipelineOps.ensureExportShards(spark, sfDir)
-    graft.sources.StorageOps.ensureBaseManifest(spark, sfDir)
-    // mirror Bench's scan-layout overrides so probed shapes match benched
-    BenchLayout.stage(spark, sfDir, cpus.toInt)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(Harness.cpus, bench = true)
+    Harness.stage(spark, sfDir)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, Int, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -54,14 +31,9 @@ object Probe {
           done.add((e.jobId, (System.nanoTime() - st._1) / 1e9, st._2, st._3))
       }
     })
-    val all = (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
-    for ((name, fn) <- all if pat.findFirstIn(name).isDefined) {
+    for ((name, fn) <- Harness.plans(Some(pat))) {
       for (r <- 1 to reps) {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        graft.sources.Staging.deleteRecursively(
-          java.nio.file.Paths.get("target/ivf-bench"))
+        Harness.isolate(spark)
         done.clear()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()

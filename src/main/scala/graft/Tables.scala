@@ -57,20 +57,7 @@ object Tables {
     // exactly this loader's canonical-encoding stance, applied globally.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // `graft.eventsDir` is the BENCH-ONLY scan-layout override, the
-    // events twin of `graft.lineitemDir` below (r21 optimization): the
-    // driver fixture is one ~2 MB row group — a 1-task scan that
-    // serializes every events consumer's first stage. Bench stages a
-    // row-identical multi-file copy (written through THIS loader, so the
-    // ts column lands pre-normalized as epoch-nanos long and the
-    // normalization below passes it through). Verify/tests never set it —
-    // the oracle path always reads the fixture bytes; content is
-    // identical either way, only the file split changes.
-    sys.props.get("graft.eventsDir") match {
-      case Some(dir) => normalizeEventsTs(spark.read.parquet(dir))
-      case None =>
-        normalizeEventsTs(spark.read.parquet(s"$sfDir/events.parquet"))
-    }
+    normalizeEventsTs(scan(spark, sfDir, "events"))
   }
 
   /** Normalize an events frame's `ts` to the canonical epoch-nanos long,
@@ -119,38 +106,32 @@ object Tables {
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")
   def supplier(s: SparkSession, d: String): DataFrame  = table(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame      = table(s, d, "part")
-  /** `graft.lineitemDir` is a BENCH-ONLY scan-layout override (round-12
-    * verdict item 4): the driver fixture writes lineitem as one ~13.6 MB
-    * row group, an unsplittable 1-task scan that amplifies host
-    * contention 4-10× and has been BASELINE.md's recurring false
-    * "regression" mechanism. Bench stages a row-identical multi-file
-    * copy (fingerprint-keyed under target/) and points this property at
-    * it so lineitem scans parallelize like they would on any real lake
-    * layout. Verify/tests never set it — the oracle path always reads
-    * the fixture bytes; content is identical either way, only the file
-    * split changes. */
-  def lineitem(s: SparkSession, d: String): DataFrame =
-    sys.props.get("graft.lineitemDir")
-      .map(s.read.parquet(_))
-      .getOrElse(table(s, d, "lineitem"))
-  /** documents/embeddings/orders get the same BENCH-ONLY multi-file
-    * override (r21): each fixture is one row group, and its 1-task scan
-    * SERIALIZES every compute-heavy branch reading it — the pipeline
-    * family's curate DAG re-scans documents on 4-5 branches, each a
-    * 0.3-0.5 s single-thread job at sf0.1 (Probe breakdown,
-    * OPTIMIZATION_r21.md). Row-identical copies, split across `cpus`
-    * files; Verify/tests never set the props so the oracle path always
-    * reads the fixture bytes. */
-  def orders(s: SparkSession, d: String): DataFrame =
-    sys.props.get("graft.ordersDir")
-      .map(s.read.parquet(_))
-      .getOrElse(table(s, d, "orders"))
-  def documents(s: SparkSession, d: String): DataFrame =
-    sys.props.get("graft.documentsDir")
-      .map(s.read.parquet(_))
-      .getOrElse(table(s, d, "documents"))
-  def embeddings(s: SparkSession, d: String): DataFrame =
-    sys.props.get("graft.embeddingsDir")
-      .map(s.read.parquet(_))
-      .getOrElse(table(s, d, "embeddings"))
+  def lineitem(s: SparkSession, d: String): DataFrame   = scan(s, d, "lineitem")
+  def orders(s: SparkSession, d: String): DataFrame     = scan(s, d, "orders")
+  def documents(s: SparkSession, d: String): DataFrame  = scan(s, d, "documents")
+  def embeddings(s: SparkSession, d: String): DataFrame = scan(s, d, "embeddings")
+
+  /** BENCH-ONLY scan-layout override of `table`: the JVM property
+    * `graft.<table>Dir` names a row-identical multi-file copy that
+    * [[BenchLayout.stage]] wrote (fingerprint-keyed under target/).
+    * Each driver fixture is one parquet row group, an unsplittable 1-task
+    * scan that serializes every branch reading it and amplifies host
+    * contention 4-10× (BASELINE.md's recurring false "regression"
+    * mechanism; the curate DAG re-scans documents on 4-5 branches, each a
+    * 0.3-0.5 s single-thread job at sf0.1, OPTIMIZATION_r21.md). Verify
+    * and tests never set it, so the oracle path always reads the fixture
+    * bytes; content is identical either way, only the file split changes.
+    * The property names are also cleared by name outside this library, so
+    * they stay as they are. */
+  private def scanDirKey(table: String): String = s"graft.${table}Dir"
+
+  private def scan(s: SparkSession, d: String, table: String): DataFrame =
+    s.read.parquet(sys.props.getOrElse(scanDirKey(table), s"$d/$table.parquet"))
+
+  /** Set (`Some`) or clear (`None`) the scan-layout override of `table`. */
+  private[graft] def setScanDir(table: String, dir: Option[String]): Unit =
+    dir match {
+      case Some(d) => System.setProperty(scanDirKey(table), d)
+      case None => System.clearProperty(scanDirKey(table))
+    }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,20 +17,8 @@ object Verify {
       val unknown = f -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown query names in filter: $unknown")
     }
-    // Pin the sketch hashes to oracle mode BEFORE anything touches
-    // DedupOps: its hash-mode switch freezes at first use, and a JVM that
-    // somehow ran Bench first (fork disabled, ad-hoc harness) would
-    // otherwise dump xxhash64 results while emitting md5 oracle SQL —
-    // an unexplained hash-compare failure.
-    System.setProperty("graft.fastHash", "false")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // oracle mode: md5 sketch hashes, so DuckDB can reproduce every bit
+    val spark = Harness.session(Harness.cpus, bench = false)
     new java.io.File(outDir).mkdirs()
     // per-query failures are recorded HERE as well as on stderr: a query
     // that throws at dump time would otherwise just have no dump dir and
@@ -43,15 +30,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // queries pin relations internally (iterative loops, LSH buckets);
-      // drop them between queries so the ~90-query session doesn't
-      // accumulate executor storage. Both layers: clearCache empties the
-      // SQL CacheManager, and the explicit unpersist releases RDD-level
-      // localCheckpoint blocks that otherwise wait for driver GC +
-      // ContextCleaner (same discipline as Bench — round-7 ADVICE).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Harness.isolate(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

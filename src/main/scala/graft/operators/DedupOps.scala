@@ -34,7 +34,8 @@ object DedupOps {
     *  - oracle (default): md5-derived, identical in both engines —
     *    Spark `conv(substring(md5(s),1,15),16,10)::long` ==
     *    DuckDB `('0x' || substring(md5(s),1,15))::BIGINT`.
-    *  - bench (`-Dgraft.fastHash=true`, set by [[graft.Bench]]): xxhash64
+    *  - bench (`graft.fastHash=true`, set by [[graft.Harness.session]] in
+    *    bench mode, i.e. for Bench, Probe and Plans): xxhash64
     *    masked to 60 bits — same value range, same downstream plan shape and
     *    bucket cardinalities, ~5x cheaper per token (md5-per-word was a 5x
     *    bench regression in round 2). Results differ bit-wise between modes;
@@ -42,8 +43,9 @@ object DedupOps {
   // Captured ONCE at first use: reading the property per call would let a
   // mode flip mid-JVM silently mix hash functions between plans (or flip
   // later queries to bench hashes while the emitted oracle SQL stays md5).
-  // Bench.main sets the property before anything touches this object;
-  // everywhere else the mode is frozen to the oracle-reproducible default.
+  // Harness.session sets the property, to "true" in bench mode and to
+  // "false" in oracle mode (Verify, tests), before any query touches this
+  // object; where it is unset the mode is the oracle-reproducible md5.
   private lazy val fastHash: Boolean =
     sys.props.get("graft.fastHash").contains("true")
 
@@ -69,12 +71,6 @@ object DedupOps {
   def wordsCol(text: Column): Column =
     org.apache.spark.sql.graft.WordShingles.tokens(text)
 
-  /** Re-spread rows before a high-fan-out generator stage. A 30-70× shingle
-    * explode concentrates all generator work (and its memory) on the scan
-    * tasks; at 100 TB this bounds per-task fan-out, and on the local harness
-    * it breaks the one-small-parquet-file = one-task serialization. */
-  def spread(df: DataFrame): DataFrame = spreadBy(df, col("doc_id"))
-
   /** [[spreadBy]] only when the input is under-parallel (the single-file
     * small-fixture scans) — an already-parallel scan feeds the consumer
     * directly, so at scale (data-sized scan partitioning) this is the
@@ -88,8 +84,11 @@ object DedupOps {
         df.sparkSession.sparkContext.defaultParallelism) spreadBy(df, key)
     else df
 
-  /** [[spread]] with an explicit distribution key, for relations without
-    * a doc_id column (the BPE regex corpus). HASH partitioning, not the
+  /** Re-spread rows by `key` before a high-fan-out generator stage. A
+    * 30-70× shingle explode concentrates all generator work (and its
+    * memory) on the scan tasks; at 100 TB this bounds per-task fan-out,
+    * and on the local harness it breaks the one-small-parquet-file =
+    * one-task serialization. HASH partitioning, not the
     * historical keyless round-robin: a keyless `repartition(n)` first
     * locally sorts its whole input so retried tasks reproduce the same
     * row→partition assignment (spark.sql.execution.sortBeforeRepartition,

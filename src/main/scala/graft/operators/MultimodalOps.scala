@@ -265,9 +265,9 @@ object MultimodalOps {
     * real fixture (the embedding form needed a constructed corpus for
     * that path). */
   // 1e9, far above any scaled fixture's id range: the replica fixtures
-  // (scripts/build_scale_fixtures.scala) stride doc_ids by 1e6 per
+  // (BenchLayout.stageScaleFixture) stride doc_ids by 1e6 per
   // replica and the embedding replicas by 1e7, so a 1e6 offset would
-  // collide delta ids with standing replica ids on target/scale-test*
+  // collide delta ids with standing replica ids on a scaled fixture
   // (replica r doc k's delta id == replica r+1 doc k's id) and silently
   // void the re-keyed-past-the-corpus invariant this offset exists for
   private[graft] val MEDIA_DELTA_OFFSET = 1000000000L

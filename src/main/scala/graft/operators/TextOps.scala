@@ -1228,7 +1228,7 @@ object TextOps {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("w")).limit(BPE_REGEX_VOCAB)
 
-  /** Conditional [[DedupOps.spread]]: repartition only an under-parallel
+  /** Conditional [[DedupOps.spreadBy]]: repartition only an under-parallel
     * source (the single-file small fixtures); an already-parallel scan
     * feeds the downstream map-side-combining pipeline directly (see
     * [[regexHistogram]]'s scaladoc for the measured cost of the
@@ -3031,7 +3031,7 @@ object TextOps {
       // substr, emitted as digest + bounds so rows stay narrow. Zero
       // shuffle at any scale: scan → explode → narrow projection; the
       // 30-70x row fan-out lands on scan-partition tasks ([[DedupOps
-      // .spread]] is unnecessary — substr+digest per chunk is cheap,
+      // .spreadBy]] is unnecessary — substr+digest per chunk is cheap,
       // unlike the interpreted shingle HOFs that motivated spread).
       // Empty docs carry no chunks; every non-empty doc's last chunk is
       // the (possibly short) tail, chunk_len = len - chunk_start.

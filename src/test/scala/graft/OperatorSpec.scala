@@ -811,7 +811,7 @@ class OperatorSpec extends SparkSpec {
     // and the fixture's planted dups are exact or near-exact).
     import graft.operators.DedupOps
     val docs = Tables.documents(spark, sf)
-    val ex = DedupOps.spread(docs).select(col("doc_id"),
+    val ex = DedupOps.spreadBy(docs, col("doc_id")).select(col("doc_id"),
       explode(DedupOps.shinglesOf(col("text"))).as("s"))
     val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     val inter = ex.select(col("doc_id").as("doc_a"), col("s"))
