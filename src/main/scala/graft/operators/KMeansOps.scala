@@ -3,7 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.VectorOps._
 import graft.functions.VectorSql
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,16 +56,6 @@ object KMeansOps {
       vCol: String = "v"): Array[(Int, Array[Double])] =
     df.select(col(idCol), col(vCol)).collect().zipWithIndex.map {
       case (row, i) => (i, row.getSeq[Double](1).toArray)
-    }
-
-  /** Like [[collectCenters]] but keeping the source point id — seeding
-    * queries expose the chosen ids so the oracle verifies seed *identity*
-    * (the fixture embeddings are unit-normalized, so norms alone are a
-    * degenerate check: every seed has l2_norm == 1). */
-  def collectSeeds(df: DataFrame, idCol: String = "id",
-      vCol: String = "v"): Array[(Long, Array[Double])] =
-    df.select(col(idCol), col(vCol)).collect().map { row =>
-      (row.getLong(0), row.getSeq[Double](1).toArray)
     }
 
   /** Distance paradigm — the reference's `--paradigm` knob
@@ -167,6 +157,14 @@ object KMeansOps {
     (centers, it)
   }
 
+  /** `k` centroid cells trained by two snap12 Lloyd steps over `pts` from
+    * the frozen seeds — the Scala twin of [[trainedCellsSqlCtes]] at
+    * `iters` = 2, shared by the IVF index build and the k ∝ n in-query
+    * cell models. */
+  def trainedCells(s: SparkSession, d: String, pts: DataFrame, k: Int)
+      : Array[(Int, Array[Double])] =
+    lloydStep(pts, lloydStep(pts, frozenCenters(s, d, k)))
+
   /** Per-cluster summary of a finished clustering: size + RMS distance.
     * The NearestCenter struct materializes ONCE per row (cid and dist read
     * from the same column) — two separate expression instances would each
@@ -183,35 +181,50 @@ object KMeansOps {
 
   // ---------------------------------------------------------------- seeding
 
-  /** Farthest-point ("maximin") seeding, first seed = extremal norm
-    * (`/root/reference/SparKMeansGroupByPlusPlusInitMaxFarthest.java:91-120`,
-    * `...Manhattan.java:92-121`). Deterministic: no randomness at all.
-    * Each round is one distributed argmax (TakeOrdered of 1). */
-  def farthestInit(pts: DataFrame, k: Int, manhattanFirst: Boolean)
-      : Array[(Int, Array[Double])] =
-    farthestSeeds(pts, k, manhattanFirst).zipWithIndex.map {
-      case ((_, v), i) => (i, v)
-    }
-
-  /** [[farthestInit]] with seed identities retained for the oracle. */
-  def farthestSeeds(pts: DataFrame, k: Int, manhattanFirst: Boolean)
-      : Array[(Long, Array[Double])] = {
-    val firstNorm =
-      if (manhattanFirst) l1Norm(col("v")) else l2Norm(col("v"))
-    val first = pts
-      .withColumn("norm", firstNorm)
-      .orderBy(col("norm").desc, col("id")).limit(1)
-      .select(col("id"), col("v"))
-    var seeds = collectSeeds(first)
+  /** The one greedy seeding loop: seed r is the first row of `pts` under
+    * `key(seeds so far, r)` — descending when `largest` — then `ties`.
+    * Every seed is one distributed TakeOrdered(1) (O(d) driver traffic per
+    * seed); a seeding strategy is only its key and its tie rule. Returns
+    * the seeds' `(v, extra…)` rows in pick order. */
+  private def greedySeeds(pts: DataFrame, k: Int, largest: Boolean,
+      ties: Seq[Column], extra: Column*)(
+      key: (Array[(Int, Array[Double])], Int) => Column): Array[Row] = {
+    var seeds = Array.empty[Row]
     while (seeds.length < k) {
-      val centers = seeds.zipWithIndex.map { case ((_, v), i) => (i, v) }
-      val cand = pts
-        .withColumn("md", minSqDistCol(col("v"), centers))
-        .orderBy(col("md").desc, col("id")).limit(1)
-      seeds = seeds ++ collectSeeds(cand)
+      val centers = seeds.zipWithIndex.map { case (row, i) =>
+        (i, row.getSeq[Double](0).toArray)
+      }
+      val first = if (largest) col("key").desc else col("key").asc
+      seeds = seeds ++ pts.withColumn("key", key(centers, seeds.length))
+        .orderBy(first +: ties: _*).limit(1)
+        .select(col("v") +: extra: _*).collect()
     }
     seeds
   }
+
+  /** Seed rows from [[greedySeeds]] with `id` as the extra column, as
+    * (id, vector) — seeding queries expose the chosen ids so the oracle
+    * verifies seed *identity* (the fixture embeddings are unit-normalized,
+    * so norms alone are a degenerate check: every seed has l2_norm == 1). */
+  private def withIds(seeds: Array[Row]): Array[(Long, Array[Double])] =
+    seeds.map(row => (row.getLong(1), row.getSeq[Double](0).toArray))
+
+  /** Farthest-point ("maximin") seeding, first seed = extremal norm
+    * (`/root/reference/SparKMeansGroupByPlusPlusInitMaxFarthest.java:91-120`,
+    * `...Manhattan.java:92-121`). Deterministic: no randomness at all. */
+  def farthestInit(pts: DataFrame, k: Int, manhattanFirst: Boolean)
+      : Array[(Int, Array[Double])] =
+    positional(farthestSeeds(pts, k, manhattanFirst).map(_._2))
+
+  /** [[farthestInit]] with seed identities retained for the oracle: seed 0
+    * has the largest L1 (or L2) norm, each later seed the largest squared
+    * distance to its nearest chosen seed; ties go to the lower id. */
+  def farthestSeeds(pts: DataFrame, k: Int, manhattanFirst: Boolean)
+      : Array[(Long, Array[Double])] =
+    withIds(greedySeeds(pts, k, largest = true, Seq(col("id")), col("id")) {
+      case (_, 0) => if (manhattanFirst) l1Norm(col("v")) else l2Norm(col("v"))
+      case (seeds, _) => minSqDistCol(col("v"), seeds)
+    })
 
   /** K-Means++ seeding with D² weighting
     * (`/root/reference/SparKMeansGroupByPlusPlus.java:80-123`). The reference
@@ -223,28 +236,44 @@ object KMeansOps {
     * window, no driver O(n) materialization. Driver traffic: O(d) per seed.
     */
   def plusPlusInit(pts: DataFrame, k: Int): Array[(Int, Array[Double])] =
-    plusPlusSeeds(pts, k).zipWithIndex.map { case ((_, v), i) => (i, v) }
+    positional(plusPlusSeeds(pts, k).map(_._2))
 
-  /** [[plusPlusInit]] with seed identities retained for the oracle. */
-  def plusPlusSeeds(pts: DataFrame, k: Int): Array[(Long, Array[Double])] = {
-    var seeds = collectSeeds(sampleK(pts, 1))
-    var next = 1
-    while (next < k) {
-      val centers = seeds.zipWithIndex.map { case ((_, v), i) => (i, v) }
-      // the round index is mixed into the per-id draw (roundUniform) so
-      // every round gets fresh randomness; a round-constant u would favor
-      // lucky-small draws in EVERY round and the seeding would not be
-      // k-means++ (round-2 verdict). roundUniform is overflow-safe for
-      // 100 TB id ranges (round-3 ADVICE).
-      val key = -log(roundUniform(col("id"), next)) /
-        greatest(minSqDistCol(col("v"), centers), lit(1e-300))
-      val cand = pts.withColumn("race", key)
-        .orderBy(col("race").asc, col("id")).limit(1)
-      seeds = seeds ++ collectSeeds(cand)
-      next += 1
-    }
-    seeds
+  /** [[plusPlusInit]] with seed identities retained for the oracle: seed 0
+    * is the first id of the `perm` permutation ([[sampleK]]'s order),
+    * seed r the smallest race key; ties go to the lower id. The round
+    * index is mixed into the per-id draw (roundUniform) so every round
+    * gets fresh randomness; a round-constant u would favor lucky-small
+    * draws in EVERY round and the seeding would not be k-means++ (round-2
+    * verdict). roundUniform is overflow-safe for 100 TB id ranges (round-3
+    * ADVICE). */
+  def plusPlusSeeds(pts: DataFrame, k: Int): Array[(Long, Array[Double])] =
+    withIds(greedySeeds(pts, k, largest = false, Seq(col("id")), col("id")) {
+      case (_, 0) => perm(col("id"))
+      case (seeds, r) => -log(roundUniform(col("id"), r)) /
+        greatest(minSqDistCol(col("v"), seeds), lit(1e-300))
+    })
+
+  /** Farthest-point seeding keyed purely by CONTENT (no row ids): the
+    * reference's data files carry no stable identifiers, and any
+    * synthesized id (zipWithIndex, monotonically_increasing_id) depends
+    * on partition layout — unusable for a cross-engine oracle. First seed
+    * = max L2 norm; each later seed = argmax of min squared distance to
+    * the chosen set; ALL ties break by the point's lexicographic
+    * component order — a total order because the staged files hold no
+    * duplicate rows (verified at staging). */
+  def farthestSeedsByContent(pts: DataFrame, k: Int, dim: Int)
+      : Array[(Int, Array[Double])] = {
+    val comps = (1 to dim).map(i => element_at(col("v"), i))
+    positional(greedySeeds(pts, k, largest = true, comps.map(_.asc)) {
+      case (_, 0) => comps.map(c => c * c).reduce(_ + _)
+      case (seeds, _) => minSqDistCol(col("v"), seeds)
+    }.map(_.getSeq[Double](0).toArray))
   }
+
+  /** A seed list as a positional center set (cid = pick order). */
+  private def positional(seeds: Array[Array[Double]])
+      : Array[(Int, Array[Double])] =
+    seeds.zipWithIndex.map { case (v, i) => (i, v) }
 
   // ------------------------------------------------------------- queries
 
@@ -592,7 +621,7 @@ object KMeansOps {
       // is the one-pass fold, iteration is summary-sized). Every loop
       // quantity lives in EXACT INTEGER micro-units (reps are rIeee@6
       // grid values → ×1e6 ints; distances, argmins, and the
-      // round-half-up weighted-mean division are all int64), so the
+      // round-half-away weighted-mean division are all int64), so the
       // trajectory is bit-identical cross-engine with no snap/tolerance
       // machinery at all — the strongest determinism contract of any
       // Lloyd form in the repo. Seeding = farthest-point from the max-L2
@@ -720,17 +749,16 @@ object KMeansOps {
 
   private[graft] val CORESET_TRIPS = 5
 
-  /** Weighted Lloyd over the coreset, every quantity in EXACT INTEGER
-    * micro-units (reps are rIeee@6 grid values → ×1e6 int64; squared
-    * distances ≤ 6e14; the weighted-mean update is the round-half-up
-    * integer division floorDiv(2·Σwx + Σw, 2·Σw)) — the trajectory is
-    * bit-identical cross-engine by construction, no snap/tolerance
-    * machinery. The loop itself is O(cells·k·trips) DRIVER arithmetic
-    * (embed_pca's precedent: the corpus contributes only the coreset
-    * fold; 116 reps make the iteration summary-sized at any corpus
-    * scale). Seeding: farthest-point from the max-L2 rep, ties broken
-    * by (x, y) ascending — the reference's InitMaxFarthest discipline
-    * applied to reps. */
+  /** Round-half-AWAY integer division (sign-symmetric): DuckDB's `//`
+    * truncates toward zero while Java's floorDiv floors, so the
+    * engine-neutral form works on |a| and restores the sign. The update
+    * division of both exact-integer loops ([[minibatch]],
+    * [[coresetLloyd]]). */
+  private def divHalfAway(a: Long, b: Long): Long = {
+    val q = (2 * math.abs(a) + b) / (2 * b)
+    if (a < 0) -q else q
+  }
+
   /** Mini-batch k-means (Sculley 2010, WWW — "Web-scale k-means
     * clustering"): each trip touches only a deterministic hash-rate
     * sample of the corpus, and centers move by the per-center
@@ -760,10 +788,6 @@ object KMeansOps {
     * sum of squared micro-distances. */
   private[graft] def minibatch(s: SparkSession, d: String): DataFrame = {
     def quant(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
-    def divHalfAway(a: Long, b: Long): Long = {
-      val q = (2 * math.abs(a) + b) / (2 * b)
-      if (a < 0) -q else q
-    }
     val pq = points(s, d).select(col("id"),
         transform(col("v"),
           x => floor(x * lit(1000000.0) + lit(0.5)).cast("long")).as("q"))
@@ -806,6 +830,17 @@ object KMeansOps {
         col("n_assigned"), col("sum_sqdist"))
   }
 
+  /** Weighted Lloyd over the coreset, every quantity in EXACT INTEGER
+    * micro-units (reps are rIeee@6 grid values → ×1e6 int64; squared
+    * distances ≤ 6e14; the weighted-mean update is the round-half-away
+    * integer division [[divHalfAway]]) — the trajectory is
+    * bit-identical cross-engine by construction, no snap/tolerance
+    * machinery. The loop itself is O(cells·k·trips) DRIVER arithmetic
+    * (embed_pca's precedent: the corpus contributes only the coreset
+    * fold; 116 reps make the iteration summary-sized at any corpus
+    * scale). Seeding: farthest-point from the max-L2 rep, ties broken
+    * by (x, y) ascending — the reference's InitMaxFarthest discipline
+    * applied to reps. */
   private[graft] def coresetLloyd(s: SparkSession): DataFrame = {
     val reps: Array[(Long, Long, Long)] = coresetReps(s)
       .select(col("cx"), col("cy"), col("weight")).collect()
@@ -844,13 +879,6 @@ object KMeansOps {
       // require() rather than a silent keep-old fallback the SQL oracle
       // does not model (a fixture change would fail loudly here)
       require(sw.forall(_ > 0), "empty cluster — oracle contract broken")
-      // round-half-AWAY division (sign-symmetric): DuckDB's `//`
-      // truncates toward zero while Java's floorDiv floors, so the
-      // engine-neutral form works on |a| and restores the sign
-      def divHalfAway(a: Long, b: Long): Long = {
-        val q = (2 * math.abs(a) + b) / (2 * b)
-        if (a < 0) -q else q
-      }
       centers = (0 until K).map { i =>
         (divHalfAway(swx(i), sw(i)), divHalfAway(swy(i), sw(i)))
       }.toArray
@@ -924,32 +952,6 @@ object KMeansOps {
     val assigned = uciTestSplit(s, testPath, dim, labelDdl)
       .select(nearestCol(col("v"), c1).as("cluster_id"), col("label"))
     purityOf(assigned, "label", "top_label")
-  }
-
-  /** Farthest-point seeding keyed purely by CONTENT (no row ids): the
-    * reference's data files carry no stable identifiers, and any
-    * synthesized id (zipWithIndex, monotonically_increasing_id) depends
-    * on partition layout — unusable for a cross-engine oracle. First seed
-    * = max L2 norm; each later seed = argmax of min squared distance to
-    * the chosen set; ALL ties break by the point's lexicographic
-    * component order — a total order because the staged files hold no
-    * duplicate rows (verified at staging). Every round is one distributed
-    * TakeOrdered(1): O(k·d) driver traffic, like [[farthestSeeds]]. */
-  def farthestSeedsByContent(pts: DataFrame, k: Int, dim: Int)
-      : Array[(Int, Array[Double])] = {
-    val comps = (1 to dim).map(i => element_at(col("v"), i))
-    val lex = comps.map(_.asc)
-    val norm = comps.map(c => c * c).reduce(_ + _)
-    var seeds = pts.orderBy(norm.desc +: lex: _*).limit(1)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    while (seeds.length < k) {
-      val centers = seeds.zipWithIndex.map { case (v, i) => (i, v) }
-      seeds = seeds ++ pts
-        .withColumn("md", minSqDistCol(col("v"), centers))
-        .orderBy(col("md").desc +: lex: _*).limit(1)
-        .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    }
-    seeds.zipWithIndex.map { case (v, i) => (i, v) }
   }
 
   /** Majority-label purity per cluster of a (cluster_id, label)
@@ -1278,11 +1280,6 @@ object KMeansOps {
        |      FROM read_csv('$refPointsPath', header=false))
        |GROUP BY cell_x, cell_y""".stripMargin
 
-  /** DuckDB mirror of [[coresetLloyd]] — the unrolled weighted loop in the
-    * same exact integer micro-unit arithmetic (round(rep·1e6) ints,
-    * integer squared distances, the identical floor-division
-    * round-half-up mean update), so both engines walk a bit-identical
-    * trajectory with no tolerance machinery. */
   /** DuckDB mirror of [[minibatch]] — the 4-trip Sculley loop unrolled:
     * pq quantizes once (the same floor(x·1e6+0.5) IEEE steps), each trip
     * filters its roundUniform batch, assigns against the previous center
@@ -1340,6 +1337,11 @@ object KMeansOps {
     sb.toString
   }
 
+  /** DuckDB mirror of [[coresetLloyd]] — the unrolled weighted loop in the
+    * same exact integer micro-unit arithmetic (round(rep·1e6) ints,
+    * integer squared distances, the identical round-half-away mean update
+    * of [[divHalfAway]]), so both engines walk a bit-identical trajectory
+    * with no tolerance machinery. */
   private def coresetLloydSql: String = {
     val sb = new StringBuilder
     sb.append(s"WITH cs AS (\n$coresetSql),\n")

@@ -294,15 +294,55 @@ object SimilarityOps {
     * ([[graft.operators.KMeansOps.trainedCellsSqlCtes]]) reproduces it
     * without ever reading the files. NCELLS is part of the path: a config
     * change can never probe a stale layout. */
-  def ensureIvfIndex(s: SparkSession, d: String): String = {
-    // basename + fixture fingerprint: a regenerated embeddings fixture
-    // re-keys the index path (Staging.fixtureKey) instead of probing a
-    // stale layout
-    val sfTag = graft.sources.Staging.fixtureKey(d)
+  def ensureIvfIndex(s: SparkSession, d: String): String =
+    ivfLayout(d, "")(tmp => buildIvfIndexInto(s, d, tmp))
+
+  /** Stage the IVF layout `variant` of fixture `d` ("" for the standing
+    * index, "-delta", "-deleted", … for its maintained forms) with `build`,
+    * at most once; returns its dir. The path holds the fixture's basename
+    * + fingerprint (a regenerated embeddings fixture re-keys the layout
+    * — Staging.fixtureKey — instead of probing a stale one) and NCELLS;
+    * the layout is published atomically once `vectors/` commits. */
+  private def ivfLayout(d: String, variant: String)(
+      build: String => Unit): String =
     graft.sources.Staging.ensureDir(
-      s"target/ivf-index/$sfTag/nc$NCELLS-q8", marker = "vectors/_SUCCESS") {
-      tmp => buildIvfIndexInto(s, d, tmp)
-    }
+      s"target/ivf-index/${graft.sources.Staging.fixtureKey(d)}/nc$NCELLS-q8$variant",
+      marker = "vectors/_SUCCESS")(build)
+
+  /** The cell model of the layout at `dir`, read to the driver as a
+    * positional center set (cid = cell, in cell order). */
+  private[graft] def ivfCells(s: SparkSession, dir: String)
+      : Array[(Int, Array[Double])] =
+    KMeansOps.collectCenters(
+      s.read.parquet(s"$dir/cells").orderBy(col("cell")), "cell", "cv")
+
+  /** A driver-side cell model as (cell, cv) rows. */
+  private def cellRows(s: SparkSession,
+      cells: Seq[(Int, Array[Double])]): DataFrame =
+    s.createDataFrame(cells.map { case (c, v) => (c, v.toSeq) })
+      .toDF("cell", "cv")
+
+  /** Write a (cell, cv) model as the layout's `cells/`, one file. */
+  private def writeCells(model: DataFrame, dir: String): Unit =
+    model.coalesce(1).write.mode("overwrite").parquet(s"$dir/cells")
+
+  /** Partition surgery's carry-over: every `vectors/cell=<c>` partition of
+    * the layout at `from` whose cell is not `rewritten` is copied verbatim
+    * into `to` (a file copy only because ensureDir publishes whole
+    * directories atomically — on a real lake they are simply left in
+    * place). `_SUCCESS` is NOT carried: the caller's rewrite of the
+    * remaining cells re-marks the dir only after the surgery commits. */
+  private def carryCells(from: String, to: String,
+      rewritten: Seq[Int]): Unit = {
+    import java.nio.file.{Files, Paths}
+    val skip = rewritten.map(c => s"cell=$c").toSet + "_SUCCESS"
+    val entries = Files.list(Paths.get(s"$from/vectors"))
+    try entries.forEach { e =>
+      val n = e.getFileName.toString
+      if (!skip.contains(n))
+        graft.sources.Staging.copyRecursively(e,
+          Paths.get(s"$to/vectors").resolve(n))
+    } finally entries.close()
   }
 
   /** The index-build ETL body: train cells, write the model + the
@@ -316,11 +356,8 @@ object SimilarityOps {
     // identity
     val pts = DedupOps.spreadNarrow(KMeansOps.points(s, d), col("id"))
       .localCheckpoint()
-    val cells = KMeansOps.lloydStep(pts,
-      KMeansOps.lloydStep(pts, KMeansOps.frozenCenters(s, d, NCELLS)))
-    s.createDataFrame(cells.toSeq.map { case (cid, v) => (cid, v.toSeq) })
-      .toDF("cell", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cells")
+    val cells = KMeansOps.trainedCells(s, d, pts, NCELLS)
+    writeCells(cellRows(s, cells), dir)
     // cluster by the partition key before the partitionBy write (guide
     // §6, Iceberg's hash distribution-mode shape): the checkpointed
     // points relation is 1-2 partitions, so without the exchange ONE
@@ -585,21 +622,15 @@ object SimilarityOps {
     * partition-pruned scans. Like [[ensureIvfIndex]] this is one-off
     * staged ETL, concurrent-JVM safe, keyed so a rebuilt index or
     * regenerated fixture re-stages the delta. */
-  private[graft] def ensureIvfDelta(s: SparkSession, d: String): String = {
-    val sfTag = graft.sources.Staging.fixtureKey(d)
-    graft.sources.Staging.ensureDir(
-      s"target/ivf-index/$sfTag/nc$NCELLS-q8-delta",
-      marker = "vectors/_SUCCESS") { tmp =>
-      val dir = ensureIvfIndex(s, d)
-      val cells = KMeansOps.collectCenters(
-        s.read.parquet(s"$dir/cells").orderBy(col("cell")), "cell", "cv")
+  private[graft] def ensureIvfDelta(s: SparkSession, d: String): String =
+    ivfLayout(d, "-delta") { tmp =>
+      val cells = ivfCells(s, ensureIvfIndex(s, d))
       ivfDeltaVectors(s, d)
         .select(col("id"), col("v"), q8Codes(col("v")).as("codes"),
           q8Scale(col("v")).as("scale"),
           KMeansOps.nearestCol(col("v"), cells).as("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/vectors")
     }
-  }
 
   /** `ivf_index_delete`'s takedown set — the rows a compliance pass must
     * remove from the standing layout. Content-clustered by construction
@@ -628,25 +659,13 @@ object SimilarityOps {
     * OperatorSpec proves delete == frozen-model rebuild minus the set,
     * bit-for-bit, AND that untouched partitions carried over as the
     * same files — so probe parity is structural. */
-  private[graft] def ensureIvfDeleted(s: SparkSession, d: String): String = {
-    val sfTag = graft.sources.Staging.fixtureKey(d)
-    graft.sources.Staging.ensureDir(
-      s"target/ivf-index/$sfTag/nc$NCELLS-q8-deleted",
-      marker = "vectors/_SUCCESS") { tmp =>
-      import java.nio.file.{Files, Paths}
+  private[graft] def ensureIvfDeleted(s: SparkSession, d: String): String =
+    ivfLayout(d, "-deleted") { tmp =>
+      import java.nio.file.Paths
       val dir = ensureIvfIndex(s, d)
       graft.sources.Staging.copyRecursively(
         Paths.get(s"$dir/cells"), Paths.get(s"$tmp/cells"))
-      val affected = IVF_DELETE_CELLS.map(c => s"cell=$c").toSet
-      val entries = Files.list(Paths.get(s"$dir/vectors"))
-      try entries.forEach { e =>
-        val n = e.getFileName.toString
-        // _SUCCESS is NOT carried: the survivor write below re-marks the
-        // dir only after the surgery commits
-        if (!affected.contains(n) && n != "_SUCCESS")
-          graft.sources.Staging.copyRecursively(e,
-            Paths.get(s"$tmp/vectors").resolve(n))
-      } finally entries.close()
+      carryCells(dir, tmp, IVF_DELETE_CELLS)
       // survivors of the affected partitions only — the filter on the
       // partition column prunes the scan to exactly those cells
       s.read.parquet(s"$dir/vectors")
@@ -654,7 +673,6 @@ object SimilarityOps {
         .where(!(pmod(col("id"), lit(IVF_DELETE_MOD)) === 1))
         .write.mode("append").partitionBy("cell").parquet(s"$tmp/vectors")
     }
-  }
 
   /** Standing-index REFRESH — the maintenance step that closes the IVF
     * lifecycle (build → incremental append → delete → refresh): after
@@ -673,29 +691,20 @@ object SimilarityOps {
     * lloydStep recomputes exactly the per-current-cell means. An
     * emptied cell keeps its old centroid (lloydStep's contract),
     * mirrored by the oracle's LEFT JOIN + coalesce. */
-  private[graft] def ensureIvfRefreshed(s: SparkSession, d: String): String = {
-    val sfTag = graft.sources.Staging.fixtureKey(d)
-    graft.sources.Staging.ensureDir(
-      s"target/ivf-index/$sfTag/nc$NCELLS-q8-refreshed",
-      marker = "vectors/_SUCCESS") { tmp =>
+  private[graft] def ensureIvfRefreshed(s: SparkSession, d: String): String =
+    ivfLayout(d, "-refreshed") { tmp =>
       val churn = s.read.parquet(s"${ensureIvfDeleted(s, d)}/vectors")
         .select(col("id"), col("v"))
         .unionAll(s.read.parquet(s"${ensureIvfDelta(s, d)}/vectors")
           .select(col("id"), col("v")))
         .localCheckpoint()
-      val old = KMeansOps.collectCenters(
-        s.read.parquet(s"${ensureIvfIndex(s, d)}/cells").orderBy(col("cell")),
-        "cell", "cv")
-      val fresh = KMeansOps.lloydStep(churn, old)
-      s.createDataFrame(fresh.toSeq.map { case (cid, v) => (cid, v.toSeq) })
-        .toDF("cell", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/cells")
+      val fresh = KMeansOps.lloydStep(churn, ivfCells(s, ensureIvfIndex(s, d)))
+      writeCells(cellRows(s, fresh), tmp)
       churn.select(col("id"), col("v"),
           q8Codes(col("v")).as("codes"), q8Scale(col("v")).as("scale"),
           KMeansOps.nearestCol(col("v"), fresh).as("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/vectors")
     }
-  }
 
   /** HOT-CELL SPLIT (round 20) — the remediation for the condition
     * ivf_cell_stats only WARNS on (a cell breaching the within-cell
@@ -713,12 +722,8 @@ object SimilarityOps {
     * codes/scale columns ride through the rewrite unrecomputed (they are
     * per-vector, cell-independent). At 100 TB: one cell's partition
     * rewritten, a 2-row model delta, probes elsewhere unaffected. */
-  private[graft] def ensureIvfSplit(s: SparkSession, d: String): String = {
-    val sfTag = graft.sources.Staging.fixtureKey(d)
-    graft.sources.Staging.ensureDir(
-      s"target/ivf-index/$sfTag/nc$NCELLS-q8-split",
-      marker = "vectors/_SUCCESS") { tmp =>
-      import java.nio.file.{Files, Paths}
+  private[graft] def ensureIvfSplit(s: SparkSession, d: String): String =
+    ivfLayout(d, "-split") { tmp =>
       val dir = ensureIvfIndex(s, d)
       val vecs = s.read.parquet(s"$dir/vectors")
         .select(col("id"), col("v"), col("cell").cast("int").as("cell"))
@@ -744,19 +749,11 @@ object SimilarityOps {
       val oldCells = s.read.parquet(s"$dir/cells")
         .where(col("cell") =!= hot)
         .select(col("cell").cast("int").as("cell"), col("cv"))
-      oldCells.unionAll(
-          s.createDataFrame(sub.toSeq.map { case (cid, v) =>
-            (subIds(cid), v.toSeq) }).toDF("cell", "cv"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/cells")
+      writeCells(oldCells.unionAll(cellRows(s,
+        sub.toSeq.map { case (cid, v) => (subIds(cid), v) })), tmp)
       // partition surgery: every other cell's bytes carry verbatim; only
       // the hot partition is re-read and re-assigned to the sub-model
-      val entries = Files.list(Paths.get(s"$dir/vectors"))
-      try entries.forEach { e =>
-        val n = e.getFileName.toString
-        if (n != s"cell=$hot" && n != "_SUCCESS")
-          graft.sources.Staging.copyRecursively(e,
-            Paths.get(s"$tmp/vectors").resolve(n))
-      } finally entries.close()
+      carryCells(dir, tmp, Seq(hot))
       s.read.parquet(s"$dir/vectors")
         .where(col("cell") === hot)
         .select(col("id"), col("v"), col("codes"), col("scale"),
@@ -764,7 +761,6 @@ object SimilarityOps {
             .otherwise(lit(NCELLS)).as("cell"))
         .write.mode("append").partitionBy("cell").parquet(s"$tmp/vectors")
     }
-  }
 
   /** COLD-CELL MERGE (round 20) — ivf_cell_split's symmetric partner,
     * completing the rebalance toolkit: ivf_cell_stats reports empty and
@@ -779,12 +775,8 @@ object SimilarityOps {
     * members (the recompute contract; an empty union keeps the
     * surviving seed — lloydStep's coalesce). Vectors never move or
     * recompute their q8 codes; only the cell label changes. */
-  private[graft] def ensureIvfMerged(s: SparkSession, d: String): String = {
-    val sfTag = graft.sources.Staging.fixtureKey(d)
-    graft.sources.Staging.ensureDir(
-      s"target/ivf-index/$sfTag/nc$NCELLS-q8-merged",
-      marker = "vectors/_SUCCESS") { tmp =>
-      import java.nio.file.{Files, Paths}
+  private[graft] def ensureIvfMerged(s: SparkSession, d: String): String =
+    ivfLayout(d, "-merged") { tmp =>
       val dir = ensureIvfIndex(s, d)
       val vecs = s.read.parquet(s"$dir/vectors")
         .select(col("id"), col("v"), col("cell").cast("int").as("cell"))
@@ -804,24 +796,15 @@ object SimilarityOps {
       val keepCv = cells.where(col("cell") === keep)
         .collect()(0).getSeq[Double](1).toArray
       val merged = KMeansOps.lloydStep(members, Array((0, keepCv)))(0)._2
-      cells.where(col("cell") =!= keep && col("cell") =!= retire)
-        .unionAll(s.createDataFrame(Seq((keep, merged.toSeq)))
-          .toDF("cell", "cv"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/cells")
-      val entries = Files.list(Paths.get(s"$dir/vectors"))
-      try entries.forEach { e =>
-        val n = e.getFileName.toString
-        if (n != s"cell=$keep" && n != s"cell=$retire" && n != "_SUCCESS")
-          graft.sources.Staging.copyRecursively(e,
-            Paths.get(s"$tmp/vectors").resolve(n))
-      } finally entries.close()
+      writeCells(cells.where(col("cell") =!= keep && col("cell") =!= retire)
+        .unionAll(cellRows(s, Seq((keep, merged)))), tmp)
+      carryCells(dir, tmp, Seq(keep, retire))
       s.read.parquet(s"$dir/vectors")
         .where(col("cell").isin(keep, retire))
         .select(col("id"), col("v"), col("codes"), col("scale"),
           lit(keep).as("cell"))
         .write.mode("append").partitionBy("cell").parquet(s"$tmp/vectors")
     }
-  }
 
   /** `dedup_index_delete`'s tombstone set: the standing ids a takedown
     * removes from the band index. Every 32nd id — which includes the
@@ -1088,8 +1071,7 @@ object SimilarityOps {
       val base = s.read.parquet(s"$dir/vectors")
         .select(col("cell").cast("int").as("bucket"),
           lit(true).as("is_base"))
-      val cells = KMeansOps.collectCenters(
-        s.read.parquet(s"$dir/cells").orderBy(col("cell")), "cell", "cv")
+      val cells = ivfCells(s, dir)
       val delta = ivfDeltaVectors(s, d)
         .select(KMeansOps.nearestCol(col("v"), cells).as("bucket"),
           lit(false).as("is_base"))
@@ -1137,8 +1119,7 @@ object SimilarityOps {
       // free, this one pays a k-row training loop to keep cells bounded
       // as the corpus grows — exactly how a deployment scales k.
       val pts = KMeansOps.points(s, d).localCheckpoint()
-      val cells = KMeansOps.lloydStep(pts,
-        KMeansOps.lloydStep(pts, KMeansOps.frozenCenters(s, d, NCELLS_SCALED)))
+      val cells = KMeansOps.trainedCells(s, d, pts, NCELLS_SCALED)
       val asg = pts.select(col("id"),
         KMeansOps.nearestCol(col("v"), cells).as("cell"))
       semdedupFrom(asg, pts)
@@ -1208,9 +1189,7 @@ object SimilarityOps {
       // every cell under the cap as the corpus grows. Same capped
       // bare-id pair tail as knn_graph — ONE builder serves both.
       val pts = KMeansOps.points(s, d).localCheckpoint()
-      val cells = KMeansOps.lloydStep(pts,
-        KMeansOps.lloydStep(pts, KMeansOps.frozenCenters(s, d,
-          NCELLS_SCALED)))
+      val cells = KMeansOps.trainedCells(s, d, pts, NCELLS_SCALED)
       val asg = pts.select(col("id"),
         KMeansOps.nearestCol(col("v"), cells).as("cell"))
       knnTopKFrom(asg, pts)
@@ -1276,9 +1255,7 @@ object SimilarityOps {
       // ONE density tail serves both forms ([[densityFrom]]), exactly
       // as ONE graph builder serves both graph forms.
       val pts = KMeansOps.points(s, d).localCheckpoint()
-      val cells = KMeansOps.lloydStep(pts,
-        KMeansOps.lloydStep(pts, KMeansOps.frozenCenters(s, d,
-          NCELLS_SCALED)))
+      val cells = KMeansOps.trainedCells(s, d, pts, NCELLS_SCALED)
       val asg = pts.select(col("id"),
         KMeansOps.nearestCol(col("v"), cells).as("cell"))
       densityFrom(knnTopKFrom(asg, pts),

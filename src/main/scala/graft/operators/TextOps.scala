@@ -1220,21 +1220,13 @@ object TextOps {
     * aggregate already combines map-side. Only an under-parallel source
     * (the single-file small fixtures) gets spread. */
   private[graft] def regexHistogram(s: SparkSession, d: String): DataFrame =
-    spreadIfNarrow(s, regexCorpus(s, d))
+    DedupOps.spreadNarrow(regexCorpus(s, d), col("t"))
       .select(explode(regexp_extract_all(col("t"), lit(GPT2_PRE_PAT),
         lit(0))).as("tok"))
       .select(translate(col("tok"), " ", GWORD).as("w"))
       .where(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("w")).limit(BPE_REGEX_VOCAB)
-
-  /** Conditional [[DedupOps.spreadBy]]: repartition only an under-parallel
-    * source (the single-file small fixtures); an already-parallel scan
-    * feeds the downstream map-side-combining pipeline directly (see
-    * [[regexHistogram]]'s scaladoc for the measured cost of the
-    * unconditional form). */
-  private[graft] def spreadIfNarrow(s: SparkSession, df: DataFrame): DataFrame =
-    DedupOps.spreadNarrow(df, col("t"))
 
   /** The merge loop over a COLLECTED histogram — pure driver memory, zero
     * Spark jobs. This is deliberately a different control plane from
@@ -2211,7 +2203,7 @@ object TextOps {
       // must win over the punct arm) and bare mid-word apostrophes
       // ("table"→"t'ble": punct arm), so the leftmost-first branch
       // ORDER is what the hash proves, not just each arm alone.
-      val tok = spreadIfNarrow(s, regexCorpus(s, d))
+      val tok = DedupOps.spreadNarrow(regexCorpus(s, d), col("t"))
         .select(explode(regexp_extract_all(
           translate(col("t"), "a", "'"), lit(GPT2_PRE_PAT), lit(0)))
           .as("tok"))

@@ -244,9 +244,8 @@ object StreamingOps {
     * refreshed by ivf_index_refresh) and the stream NEVER retrains. */
   def ivfAssignStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.{KMeansOps, SimilarityOps}
-    val dir = SimilarityOps.ensureIvfIndex(spark, sfDir)
-    val cells = KMeansOps.collectCenters(
-      spark.read.parquet(s"$dir/cells").orderBy(col("cell")), "cell", "cv")
+    val cells = SimilarityOps.ivfCells(spark,
+      SimilarityOps.ensureIvfIndex(spark, sfDir))
     spark.readStream.schema(embSchema)
       .parquet(stageDir(spark, sfDir, "embeddings"))
       .select(col("vec_id").as("id"),

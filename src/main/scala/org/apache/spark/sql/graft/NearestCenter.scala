@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -18,11 +19,16 @@ import org.apache.spark.sql.types._
   * zip_with(...))` subtrees — builds on higher-order functions, which are
   * CodegenFallback in Spark: every row pays k interpreted lambda walks plus
   * k zip-array allocations. This expression participates in whole-stage
-  * codegen (`doGenCode` emits two tight scalar loops over a referenced
-  * `double[][]`; the centers never serialize per row) and allocates nothing
-  * but the output struct. Same floating-point fold order (sequential
-  * left-to-right per dimension), so results are bit-identical to the HOF
-  * form and all oracles are unaffected.
+  * codegen (`doGenCode` emits one call to [[assign]], which runs the shared
+  * argmin kernel [[NearestCenter.nearest]] over the point in place; the
+  * centers never serialize per row) and allocates nothing but the output
+  * struct. Same floating-point fold order (sequential left-to-right per
+  * dimension), so results are bit-identical to the HOF form and all
+  * oracles are unaffected.
+  *
+  * A point whose length is not the centers' dimension fails the query
+  * with an `IllegalArgumentException` (the kernel's check), in the
+  * interpreted path, the generated path and [[NearestCenterSums]] alike.
   *
   * Lives under org.apache.spark.sql because the Column↔Expression lift
   * (`ExpressionUtils`) and `AbstractDataType` are private[sql] — the
@@ -45,45 +51,21 @@ case class NearestCenter(child: Expression, centers: Array[Array[Double]],
     StructField("cid", IntegerType, nullable = false),
     StructField("dist", DoubleType, nullable = false)))
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** struct(cid, dist) of the center nearest `v`: the one body behind
+    * the interpreted and the generated path. */
+  def assign(v: ArrayData): InternalRow = {
     val c = NearestCenter.nearest(v, centers, metric)
     new GenericInternalRow(Array[Any](c,
       NearestCenter.distance(v, centers(c), metric)))
   }
 
-  // the codegen path inlines the same loop as `NearestCenter.nearest`
-  // (fold order, tie and NaN rule) over a copied `double[]`
+  override def nullSafeEval(input: Any): Any =
+    assign(input.asInstanceOf[ArrayData])
+
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centersRef = ctx.addReferenceObj("centers", centers, "double[][]")
-    val term = if (metric == 1) "Math.abs(diff)" else "diff * diff"
-    nullSafeCodeGen(ctx, ev, arr => {
-      val v = ctx.freshName("v")
-      val bestC = ctx.freshName("bestC")
-      val best = ctx.freshName("best")
-      val c = ctx.freshName("c")
-      val ct = ctx.freshName("ct")
-      val s = ctx.freshName("s")
-      val j = ctx.freshName("j")
-      val diff = ctx.freshName("diff")
-      val termJ = term.replace("diff", diff)
-      s"""
-         |double[] $v = $arr.toDoubleArray();
-         |int $bestC = -1;
-         |double $best = Double.POSITIVE_INFINITY;
-         |for (int $c = 0; $c < $centersRef.length; $c++) {
-         |  double[] $ct = $centersRef[$c];
-         |  double $s = 0.0;
-         |  for (int $j = 0; $j < $ct.length; $j++) {
-         |    double $diff = $v[$j] - $ct[$j];
-         |    $s += $termJ;
-         |  }
-         |  if ($bestC < 0 || $s < $best) { $best = $s; $bestC = $c; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[]{$bestC, $best});
-       """.stripMargin
-    })
+    val ref = ctx.addReferenceObj("nearestCenter", this,
+      classOf[NearestCenter].getName)
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.assign($v);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -124,8 +106,13 @@ object NearestCenter {
 
   /** Argmin kernel shared by [[NearestCenter]] and [[NearestCenterSums]]:
     * the cid of the nearest center, ties to the lower cid. Reads `v` in
-    * place (no copy). */
+    * place (no copy). A point whose length is not the centers' dimension
+    * throws: read past its end or cut to the first d coordinates, it
+    * would be assigned silently. */
   def nearest(v: ArrayData, centers: Array[Array[Double]], metric: Int): Int = {
+    if (v.numElements() != centers(0).length)
+      throw new IllegalArgumentException(
+        s"point has dimension ${v.numElements()}, centers have ${centers(0).length}")
     var bestC = -1
     var best = Double.PositiveInfinity
     var c = 0

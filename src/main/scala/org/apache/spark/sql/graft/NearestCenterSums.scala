@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * the count on the driver gives the same means.
   *
   * Null vectors are skipped and not counted. A vector whose length is not
-  * the centers' dimension fails the query.
+  * the centers' dimension fails the query (the kernel's check).
   */
 case class NearestCenterSums(child: Expression, centers: Array[Array[Double]],
     metric: Int, mutableAggBufferOffset: Int = 0,
@@ -55,9 +55,6 @@ case class NearestCenterSums(child: Expression, centers: Array[Array[Double]],
     val v = child.eval(input).asInstanceOf[ArrayData]
     if (v != null) {
       val d = dim
-      if (v.numElements() != d)
-        throw new IllegalArgumentException(
-          s"point has dimension ${v.numElements()}, centers have $d")
       val o = NearestCenter.nearest(v, centers, metric) * (1 + d)
       buf(o) += 1.0
       var j = 0

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * are CodegenFallback in Spark. With 4 tables × 12 planes × 64 dims that
   * is ~3k interpreted lambda frames per row on the bucketing projection
   * (the dominant cost of `dedup_embedding`/`sim_topk_lsh` at bench).
-  * Like [[NearestCenter]], this emits two tight scalar loops over a
-  * referenced `double[][]` inside whole-stage codegen. The inner fold is
+  * This emits two tight scalar loops over a referenced `double[][]`
+  * inside whole-stage codegen. The inner fold is
   * sequential left-to-right per plane — the same IEEE accumulation order as
   * the HOF form and as the DuckDB oracle's `list_aggregate('sum')`, so
   * bucket ids (and therefore the hash-verified LSH results) are

@@ -151,6 +151,48 @@ class ExpressionSpec extends SparkSpec {
     intercept[IllegalArgumentException] { NearestCenter.matrix(Array.empty) }
   }
 
+  test("NearestCenter rejects a point of the wrong dimension on every path") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+    import org.apache.spark.sql.graft.{NearestCenter, NearestCenterSums}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val centers = Array((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))
+    // the generated code is one call into the shared kernel, no loop of its own
+    val code = NearestCenter(BoundReference(0, ArrayType(DoubleType), nullable = true),
+        NearestCenter.matrix(centers), 0)
+      .genCode(new CodegenContext).code.toString
+    assert(!code.contains("for (") && !code.contains("while ("), code)
+    // a Range-backed relation: a local Seq would be folded into a
+    // LocalRelation before execution and never reach generated code
+    def pts(bad: Seq[Double]) = spark.range(4).select(
+      when(col("id") === 2, typedlit(bad))
+        .otherwise(array(col("id").cast("double"), lit(1.0))).as("v"))
+    def failure(run: => Any): String = {
+      val e = intercept[Exception](run)
+      val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: IllegalArgumentException => t }
+      assert(iae.isDefined, e)
+      iae.get.getMessage
+    }
+    def checkAll(): Unit = for ((bad, n) <- Seq((Seq(1.0, 1.0, 100.0), 3), (Seq(9.0), 1))) {
+      val want = s"point has dimension $n, centers have 2"
+      assert(failure(pts(bad).select(
+        NearestCenter.struct(col("v"), centers)).collect()) === want)
+      assert(failure(pts(bad).agg(
+        NearestCenterSums.column(col("v"), centers)).collect()) === want)
+    }
+    assert(pts(Seq(9.0)).select(NearestCenter.struct(col("v"), centers))
+      .queryExecution.executedPlan.toString.contains("*("),
+      "the projection should run inside whole-stage codegen")
+    checkAll()
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    try {
+      spark.conf.set(keys(0), "false")
+      spark.conf.set(keys(1), "NO_CODEGEN")
+      checkAll()
+    } finally keys.foreach(spark.conf.unset)
+  }
+
   test("NearestCenterSums buffer: update, serde round-trip, zero merge, nulls") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference

@@ -543,4 +543,75 @@ class KMeansSpec extends SparkSpec {
     assert((throughRep - fullCost) / fullCost < 0.05,
       s"boundary effect ${(throughRep - fullCost) / fullCost} too large")
   }
+
+  test("every seeding strategy picks the seeds a plain-Scala replay picks") {
+    // greedy replay over collected points: seed r is the best point under
+    // its strategy's key (the kernel's sequential-fold squared distance
+    // to the nearest seed so far for r > 0), ties to the lower id or the
+    // lexicographically smaller content
+    def sq(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var j = 0
+      while (j < b.length) { val d = a(j) - b(j); s += d * d; j += 1 }
+      s
+    }
+    def md(v: Array[Double], seeds: Seq[Array[Double]]) = seeds.map(sq(v, _)).min
+    def replay[T](pts: Seq[T], k: Int, v: T => Array[Double],
+        better: ((Double, T), (Double, T)) => Boolean)(
+        key: (Seq[Array[Double]], Int, T) => Double): Seq[T] =
+      (0 until k).foldLeft(Vector.empty[T]) { (seeds, r) =>
+        seeds :+ pts.map(p => (key(seeds.map(v), r, p), p))
+          .reduce((a, b) => if (better(b, a)) b else a)._2
+      }
+    type P = (Long, Array[Double])
+    // larger (or smaller) key wins, then the lower id
+    val largest = (a: (Double, P), b: (Double, P)) =>
+      a._1 > b._1 || (a._1 == b._1 && a._2._1 < b._2._1)
+    val smallest = (a: (Double, P), b: (Double, P)) =>
+      a._1 < b._1 || (a._1 == b._1 && a._2._1 < b._2._1)
+    def ids(seeds: Seq[P]) = seeds.map(_._1)
+    def vecs(seeds: Seq[P]) = seeds.map(_._2.toSeq)
+    val k = 8
+    val pts = KMeansOps.points(spark, sf).localCheckpoint()
+    val byId: Seq[P] = pts.collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    for (manhattan <- Seq(true, false)) {
+      val want = replay(byId, k, (p: P) => p._2, largest) {
+        case (_, 0, (_, v)) =>
+          if (manhattan) v.foldLeft(0.0)((a, x) => a + math.abs(x))
+          else math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
+        case (seeds, _, (_, v)) => md(v, seeds)
+      }
+      val got = KMeansOps.farthestSeeds(pts, k, manhattanFirst = manhattan).toSeq
+      assert(ids(got) === ids(want), s"farthest, manhattanFirst=$manhattan")
+      assert(vecs(got) === vecs(want))
+    }
+    // ++: seed 0 is the first id of the hash permutation, seed r the
+    // smallest exponential-race key over that round's roundUniform draw
+    val u = pts.select(col("id") +: (1 until k).map(r =>
+        graft.functions.VectorOps.roundUniform(col("id"), r)): _*)
+      .collect().map(r => r.getLong(0) -> (1 until k).map(r.getDouble)).toMap
+    val pp = replay(byId, k, (p: P) => p._2, smallest) {
+      case (_, 0, (id, _)) =>
+        java.lang.Math.floorMod(id * 2654435761L, 4294967296L).toDouble
+      case (seeds, r, (id, v)) =>
+        -StrictMath.log(u(id)(r - 1)) / math.max(md(v, seeds), 1e-300)
+    }
+    val gotPp = KMeansOps.plusPlusSeeds(pts, k).toSeq
+    assert(ids(gotPp) === ids(pp))
+    assert(vecs(gotPp) === vecs(pp))
+    // by content on the 10k reference file: no ids, lexicographic ties
+    val ref = KMeansOps.refPoints(spark).localCheckpoint()
+    val refPts = ref.collect().map(_.getSeq[Double](0).toArray).toSeq
+    def lexLess(a: Array[Double], b: Array[Double]): Boolean =
+      a.zip(b).find { case (x, y) => x != y }.exists { case (x, y) => x < y }
+    val byContent = replay(refPts, 4, (v: Array[Double]) => v,
+        (a: (Double, Array[Double]), b: (Double, Array[Double])) =>
+          a._1 > b._1 || (a._1 == b._1 && lexLess(a._2, b._2))) {
+      case (_, 0, v) => v.map(c => c * c).reduce(_ + _)
+      case (seeds, _, v) => md(v, seeds)
+    }
+    val gotRef = KMeansOps.farthestSeedsByContent(ref, 4, dim = 2)
+    assert(gotRef.map(_._1).toSeq === (0 until 4))
+    assert(gotRef.map(_._2.toSeq).toSeq === byContent.map(_.toSeq))
+  }
 }
