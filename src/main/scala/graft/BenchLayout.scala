@@ -58,22 +58,25 @@ object BenchLayout {
 
   /** The 8×-replicated fixture behind Bench's scale block (round-20
     * verdict item 8 / round-21 item 10): documents/events/lineitem/
-    * embeddings each unioned `reps`× with per-replica id remaps (doc_id
-    * and event_id/user_id + r·1e6, l_orderkey + r·6e6, vec_id + r·1e7:
-    * ids stay window-valid, payload bytes repeat so the dedup families
-    * see real duplication pressure), every other table copied from the
-    * source fixture as is — so lineitem⋈orders matches only replica 0's
-    * order keys. Built once per source-fixture fingerprint; returns a
-    * self-contained dir shaped exactly like an sfDir, so every query runs
-    * against it unchanged. Other factors for ad-hoc scaling runs, e.g.
-    * 64× from spark-shell: `graft.BenchLayout.stageScaleFixture(spark,
-    * sf, 64)`. */
+    * orders/embeddings each unioned `reps`× with per-replica id remaps
+    * (doc_id and event_id/user_id + r·1e6, l_orderkey and o_orderkey +
+    * r·6e6, vec_id + r·1e7: ids stay window-valid, payload bytes repeat
+    * so the dedup families see real duplication pressure). Every
+    * lineitem row of replica r finds its order in replica r, so
+    * lineitem⋈orders scales with the factor; o_custkey keeps pointing at
+    * the one copy of customer. The other small tables are copied from
+    * the source fixture as is. Built once per source-fixture fingerprint
+    * (the `-o` suffix keys the orders-replicating layout apart from the
+    * older one that copied orders unchanged); returns a self-contained
+    * dir shaped exactly like an sfDir, so every query runs against it
+    * unchanged. Other factors for ad-hoc scaling runs, e.g. 64× from
+    * spark-shell: `graft.BenchLayout.stageScaleFixture(spark, sf, 64)`. */
   def stageScaleFixture(spark: SparkSession, sfDir: String,
       reps: Int = 8): String = {
     import org.apache.spark.sql.functions._
     val key = graft.sources.Staging.fixtureKey(sfDir)
     graft.sources.Staging.ensureDir(
-      s"target/scale-fixture/$key-x$reps", marker = "_STAGED") { tmp =>
+      s"target/scale-fixture/$key-x$reps-o", marker = "_STAGED") { tmp =>
       // file counts scale the 1× split table by the replication factor
       // (capped at 32) — data-proportional scan parallelism, the same
       // bytes-per-task as the measured 1× splits
@@ -93,10 +96,11 @@ object BenchLayout {
           .withColumn("user_id", col("user_id") + lit(i * 1000000L)))
       rep("lineitem", (d, i) =>
         d.withColumn("l_orderkey", col("l_orderkey") + lit(i * 6000000L)))
+      rep("orders", (d, i) =>
+        d.withColumn("o_orderkey", col("o_orderkey") + lit(i * 6000000L)))
       rep("embeddings", (d, i) =>
         d.withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
-      for (t <- Seq("region", "nation", "customer", "supplier", "part",
-          "orders"))
+      for (t <- Seq("region", "nation", "customer", "supplier", "part"))
         graft.sources.Staging.copyRecursively(
           java.nio.file.Paths.get(sfDir, s"$t.parquet"),
           java.nio.file.Paths.get(tmp, s"$t.parquet"))

@@ -137,14 +137,11 @@ object DedupOps {
   private val BANDS = 8 // 8 bands × 4 rows
   private val ROWS_PER_BAND = MINHASH_PERMS / BANDS
   private val M = 2147483647L // Mersenne prime 2^31-1
-  // Max docs per (band_id, band_hash) cell in the LSH self-join. Without a
-  // cap, N exact-duplicate (or boilerplate) docs share all 8 band hashes and
-  // one cell emits N²/2 candidate rows — quadratic exactly on the corpora
-  // dedup exists for. Over-populated cells are dropped (same discipline as
-  // CHUNK_CAP / SimilarityOps.BUCKET_CAP); members of a dropped cell still
-  // pair through their other 7 bands' cells when those stay under cap, and
-  // the all-bands-hot exact-duplicate cluster is precisely what the cheaper
-  // digest-based dedup_exact already catches.
+  // Max docs per (band_id, band_hash) cell in the LSH self-join
+  // ([[dropOverCap]]). Members of a dropped cell still pair through their
+  // other 7 bands' cells when those stay under cap, and the all-bands-hot
+  // exact-duplicate cluster is precisely what the cheaper digest-based
+  // dedup_exact already catches.
   // private[graft]: PlanSpec interpolates the cap into its over-cap-filter
   // plan assertion so tuning the constant keeps the test honest (r6 ADVICE)
   private[graft] final val BAND_CAP = 1000
@@ -198,34 +195,106 @@ object DedupOps {
       broadcast(drop)
     else drop
 
-  /** Drop rows of over-populated (band_id, band_hash) cells before a
-    * self-join. The broadcast side is the OVER-cap drop set, never the
-    * under-cap keep set: band hashes are 60-bit, so the keep relation is the
-    * distinct-cell relation — mostly singletons, O(corpus) rows at 100 TB, a
-    * driver/executor OOM as a broadcast. The drop set is pigeonhole-bounded
-    * at total_band_rows / cap — still LINEAR in corpus size, but a 1000×
-    * reduction at cap=1000, and reached only by a corpus that is mostly
-    * heavy-hitter cells (real drop sets are the few pathological cells).
-    * At the scale where rows/cap outgrows the broadcast budget the cap
-    * itself must rise with the deployment (the cell population a self-join
-    * can stomach grows with the cluster), which shrinks the drop set in
-    * step; for duplicate-degenerate corpora the [[dropSetHint]] conf gates
-    * the hint off and AQE plans a shuffled anti-join. (Keep-broadcasts
-    * remain correct where the cell DOMAIN is bounded — SimilarityOps' 4×4096
-    * LSH buckets — but the simhash chunk cap below uses the drop-set form
-    * too: strictly smaller and uniform discipline.) Result is identical
-    * either way; the DuckDB oracle keeps its `HAVING count(*) <= cap`
-    * keep-join formulation. `cap` is parameterized for the property test;
-    * production callers use [[BAND_CAP]]. */
-  private[graft] def cappedBands(bands: DataFrame,
-      cap: Int = BAND_CAP): DataFrame = {
-    val drop = bands.groupBy(col("band_id"), col("band_hash"))
-      .agg(count(lit(1)).as("bcnt"))
-      .where(col("bcnt") > cap)
-      .select(col("band_id"), col("band_hash"))
-    bands.join(dropSetHint(bands, drop), Seq("band_id", "band_hash"),
-      "left_anti")
+  // ------------------------------------------- the near-dup candidate path
+  // Every LSH near-dup family (MinHash, SimHash, fuzzy, media, hyperplane,
+  // IVF cells) buckets rows into cells, caps the cells, pairs the rows in
+  // each cell, verifies the pairs and collapses components; the shared
+  // steps below serve them all.
+
+  /** Rows per cell of `pop`, counted by one map-side-combined aggregate. */
+  private def cellCounts(pop: DataFrame, keys: Seq[String]): DataFrame =
+    pop.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bcnt"))
+
+  /** The cell cap, drop-set form: `rows` minus every row of a cell (the
+    * `keys` columns) holding more than `cap` rows of `pop` — `rows`
+    * itself, or the base+delta population an incremental caller caps
+    * both sides by. Without a cap, N exact-duplicate docs share every
+    * cell and one cell emits N²/2 candidate pairs — quadratic exactly on
+    * the corpora dedup exists for. The broadcast side is the OVER-cap
+    * drop set, never the under-cap keep set: cell keys are hashes, so the
+    * keep relation is mostly singletons, O(corpus) rows — an OOM as a
+    * broadcast — while the drop set is bounded by rows / cap (where that
+    * outgrows the broadcast budget the cap must rise with the
+    * deployment; [[dropSetHint]] gates the hint off for
+    * duplicate-degenerate corpora). The DuckDB oracles keep their
+    * `HAVING count(*) <= cap` keep-join formulation. */
+  private[graft] def dropOverCap(rows: DataFrame, keys: Seq[String],
+      cap: Int, pop: Option[DataFrame] = None): DataFrame = {
+    val drop = cellCounts(pop.getOrElse(rows), keys)
+      .where(col("bcnt") > cap).select(keys.map(col): _*)
+    rows.join(dropSetHint(rows, drop), keys, "left_anti")
   }
+
+  /** The cell cap, keep-set form: `rows` joined to the broadcast set of
+    * cells holding at most `cap` rows of `pop` (`rows` itself by
+    * default). Keeps exactly the rows [[dropOverCap]] keeps, but its
+    * broadcast is the under-cap set, so it is only for BOUNDED cell
+    * domains — the hyperplane buckets (T × 2^P cells) and the IVF cells
+    * — where that set stays small at any corpus size. */
+  private[graft] def keepUnderCap(rows: DataFrame, keys: Seq[String],
+      cap: Int, pop: Option[DataFrame] = None): DataFrame = {
+    val keep = cellCounts(pop.getOrElse(rows), keys)
+      .where(col("bcnt") <= cap).select(keys.map(col): _*)
+    rows.join(broadcast(keep), keys)
+  }
+
+  /** The within-cell pair join: `side(tag)` projects one side of a cell
+    * relation with its row id named `id + tag`; the two sides join on the
+    * cell `keys`, and each unordered pair comes out once per shared cell,
+    * the lower id on the first side. Callers keep their own projection,
+    * verify and `distinct`. */
+  private[graft] def cellPairs(keys: Seq[String], id: String,
+      tags: (String, String) = ("a", "b"))(
+      side: String => DataFrame): DataFrame =
+    side(tags._1).join(side(tags._2), keys)
+      .where(col(id + tags._1) < col(id + tags._2))
+
+  /** Ids of a (doc_a, doc_b) pair graph that are not their component's
+    * representative (its min id, [[componentsOf]]): the docs a
+    * keep-one-per-cluster dedup drops. */
+  private def nonRepOf(pairs: DataFrame): DataFrame =
+    componentsOf(pairs).where(col("doc_id") =!= col("cluster_rep"))
+      .select(col("doc_id"))
+
+  /** The incremental near-dup survivors: delta docs (`!isBase`) with no
+    * verified base collision (`collide`) that represent their
+    * within-delta cluster of `pairs`. */
+  private def deltaSurvivors(docs: DataFrame, isBase: Column,
+      collide: DataFrame, pairs: DataFrame): DataFrame =
+    docs.where(!isBase).select(col("doc_id"))
+      .join(collide, Seq("doc_id"), "left_anti")
+      .join(nonRepOf(pairs), Seq("doc_id"), "left_anti")
+
+  /** The incremental near-dup verdict over a delta's ids (the one column
+    * of `ids`): a row in `dropD` (collapsed within the delta) reads
+    * 'delta', that stage firing first and winning; a row in `dropB`
+    * (matched against the base) reads 'base'; the rest read 'kept' and
+    * keep = true. Both drop sets carry the ids under the same name. */
+  private[graft] def stageVerdict(ids: DataFrame, dropD: DataFrame,
+      dropB: DataFrame): DataFrame = {
+    val id = ids.columns.head
+    ids.join(dropD.withColumn("dd", lit(true)), Seq(id), "left")
+      .join(dropB.withColumn("db", lit(true)), Seq(id), "left")
+      .select(col(id),
+        (col("dd").isNull && col("db").isNull).as("keep"),
+        when(col("dd").isNotNull, "delta")
+          .when(col("db").isNotNull, "base")
+          .otherwise("kept").as("stage"))
+  }
+
+  /** Drop rows of over-populated (band_id, band_hash) cells before a
+    * self-join ([[dropOverCap]]). `cap` is parameterized for the
+    * property test; production callers use [[BAND_CAP]]. */
+  private[graft] def cappedBands(bands: DataFrame,
+      cap: Int = BAND_CAP): DataFrame =
+    dropOverCap(bands, Seq("band_id", "band_hash"), cap)
+
+  /** Bare (doc_a, doc_b) candidate pairs of a capped band relation. */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    cellPairs(Seq("band_id", "band_hash"), "doc_")(t =>
+      bands.select(col("doc_id").as(s"doc_$t"), col("band_id"),
+        col("band_hash")))
+      .select(col("doc_a"), col("doc_b")).distinct()
 
   /** MinHash-LSH candidate pairs of a (doc_id, text) relation — the body of
     * `dedup_minhash` (which adds its presentation sort), factored so the
@@ -238,14 +307,7 @@ object DedupOps {
     // count and the self-join probe; an eager checkpoint materializes it
     // once and its blocks are released when the plan is GC'd, instead of
     // occupying the cache for the session lifetime (round-4 ADVICE).
-    val bands = cappedBands(minhashBands(docs).localCheckpoint(), cap)
-    val a = bands.select(col("doc_id").as("doc_a"), col("band_id"),
-      col("band_hash"))
-    val b = bands.select(col("doc_id").as("doc_b"), col("band_id"),
-      col("band_hash"))
-    a.join(b, Seq("band_id", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    bandPairs(cappedBands(minhashBands(docs).localCheckpoint(), cap))
   }
 
   /** `dedup_fuzzy`'s verification radius: the fixture's near-dup
@@ -261,27 +323,32 @@ object DedupOps {
     * (banded O(len·τ) DP, not the O(len²) full matrix — at 100 TB the
     * quadratic form is the difference between a verify pass and a second
     * engine); for kept rows it returns the true distance, so the output
-    * column equals DuckDB's unbounded levenshtein on the same pairs.
-    * Texts join onto the BARE candidate ids (candidates ≪ corpus; the
-    * band self-join never carries text). */
+    * column equals DuckDB's unbounded levenshtein on the same pairs
+    * ([[editDist]]). Texts join onto the BARE candidate ids (candidates ≪
+    * corpus; the band self-join never carries text). */
   private[graft] def fuzzyPairs(docs: DataFrame,
       tau: Int = FUZZY_TAU): DataFrame = {
     val t = docs.select(col("doc_id"), col("text"))
-    // exact-equality fast path before the DP: a band-candidate set is
-    // clone-heavy by construction (exact dups share every band), and
-    // levenshtein costs ~0.4 ms/pair even threshold-banded while an
-    // equality memcmp is O(len) — measured 61 s → ~2 s on the 8×
-    // clone-replicated fixture, where ~99% of the 156k candidates are
-    // identical texts. levenshtein(x, x) = 0, so the result is
-    // unchanged and the DuckDB oracle needs no fast path.
     minhashPairs(docs)
       .join(t.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
       .join(t.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        when(col("ta") === col("tb"), lit(0))
-          .otherwise(levenshtein(col("ta"), col("tb"), tau)).as("edit_dist"))
+        editDist(col("ta"), col("tb"), tau).as("edit_dist"))
       .where(col("edit_dist") =!= -1)
   }
+
+  /** The thresholded edit distance: levenshtein(a, b) when it is at most
+    * `tau`, else -1. Spark's threshold variant is a banded O(len·τ) DP
+    * behind an exact-equality fast path: a band-candidate set is
+    * clone-heavy by construction (exact dups share every band), and
+    * levenshtein costs ~0.4 ms/pair even threshold-banded while an
+    * equality memcmp is O(len) — measured 61 s → ~2 s on the 8×
+    * clone-replicated fixture, where ~99% of the 156k candidates are
+    * identical texts. levenshtein(x, x) = 0, so the result is unchanged
+    * and the DuckDB oracles need no fast path. */
+  private def editDist(a: Column, b: Column,
+      tau: Int = FUZZY_TAU): Column =
+    when(a === b, lit(0)).otherwise(levenshtein(a, b, tau))
 
   /** Band relation from an existing signature relation (callers that also
     * need the signatures themselves compute them once and reuse). */
@@ -353,42 +420,43 @@ object DedupOps {
     * candidate generation is COMPLETE for the ≤ 3 threshold (the round-2
     * claim of ≤ 16 was only heuristic; 17 chunks of <4 bits would be needed
     * to *guarantee* 16, with useless 8-value buckets). A per-(chunk_id,
-    * chunk) population cap bounds the within-bucket self-join under skew
-    * (near-constant docs collapsing to one fingerprint), trading recall
-    * only on those degenerate cells. localCheckpoint, not cache: fp feeds
-    * both the chunk explode and (via capped) both join sides; an eager
-    * checkpoint's blocks die with the plan instead of occupying the cache
-    * for the session (round-5 ADVICE — same fix minhash_scored carries). */
+    * chunk) population cap ([[dropOverCap]]) bounds the within-bucket
+    * self-join under skew (near-constant docs collapsing to one
+    * fingerprint), trading recall only on those degenerate cells.
+    * localCheckpoint, not cache: fp feeds both the chunk explode and (via
+    * capped) both join sides; an eager checkpoint's blocks die with the
+    * plan instead of occupying the cache for the session (round-5 ADVICE
+    * — same fix minhash_scored carries). */
   private[graft] def simhashPairs(docs: DataFrame,
       cap: Int = CHUNK_CAP): DataFrame = {
     val fp = simhashFingerprints(docs).localCheckpoint()
-    val chunks = fp.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until CHUNKS).map(c =>
-        shiftright(col("simhash"), CHUNK_BITS * c)
-          .bitwiseAND(lit((1L << CHUNK_BITS) - 1))): _*))
-        .as(Seq("chunk_id", "chunk")))
-    // drop-set anti-join, not keep-broadcast: the (chunk_id, chunk) domain
-    // is bounded (4 × 2^15 cells) so a keep-broadcast would not OOM, but
-    // the over-cap set is pigeonhole-bounded at rows/CHUNK_CAP — strictly
-    // smaller — and keeps one capping discipline across the dedup family
-    // (see cappedBands; the broadcast hint is conf-gated the same way).
-    val drop = chunks.groupBy(col("chunk_id"), col("chunk"))
-      .agg(count(lit(1)).as("bcnt"))
-      .where(col("bcnt") > cap)
-      .select(col("chunk_id"), col("chunk"))
-    val capped = chunks.join(dropSetHint(chunks, drop),
-      Seq("chunk_id", "chunk"), "left_anti")
-    val a = capped.select(col("doc_id").as("doc_a"),
-      col("simhash").as("sim_a"), col("chunk_id"), col("chunk"))
-    val b = capped.select(col("doc_id").as("doc_b"),
-      col("simhash").as("sim_b"), col("chunk_id"), col("chunk"))
-    a.join(b, Seq("chunk_id", "chunk")).where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
+    chunkPairs(dropOverCap(simhashChunks(fp), CHUNK_KEYS, cap))
+      .select(col("doc_a"), col("doc_b"), hamming.as("hamming"))
       .distinct()
       .where(col("hamming") <= HAMMING_MAX)
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  private val CHUNK_KEYS = Seq("chunk_id", "chunk")
+
+  /** (doc_id, simhash, chunk_id, chunk): each fingerprint exploded into
+    * its [[CHUNKS]] 15-bit chunks, the SimHash LSH cells. */
+  private[graft] def simhashChunks(fp: DataFrame): DataFrame =
+    fp.select(col("doc_id"), col("simhash"),
+      posexplode(array((0 until CHUNKS).map(c =>
+        shiftright(col("simhash"), CHUNK_BITS * c)
+          .bitwiseAND(lit((1L << CHUNK_BITS) - 1))): _*))
+        .as(CHUNK_KEYS))
+
+  /** Within-chunk pairs of a capped chunk relation, each side carrying its
+    * fingerprint (sim_a, sim_b) for the [[hamming]] verify. */
+  private def chunkPairs(chunks: DataFrame): DataFrame =
+    cellPairs(CHUNK_KEYS, "doc_")(t =>
+      chunks.select(col("doc_id").as(s"doc_$t"),
+        col("simhash").as(s"sim_$t"), col("chunk_id"), col("chunk")))
+
+  private val hamming: Column =
+    bit_count(col("sim_a").bitwiseXOR(col("sim_b")))
 
   /** Duplicate-CLUSTER extraction: connected components over the MinHash
     * candidate-pair graph, as (doc_id, cluster_rep = min doc_id of the
@@ -651,18 +719,7 @@ object DedupOps {
         Seq("band_id", "band_hash"), "left_semi")
       .select(col("doc_id")).distinct()
     val rem = deltaB.join(collide, Seq("doc_id"), "left_anti")
-    val pairs = rem.select(col("doc_id").as("doc_a"), col("band_id"),
-        col("band_hash"))
-      .join(rem.select(col("doc_id").as("doc_b"), col("band_id"),
-        col("band_hash")), Seq("band_id", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val nonRep = componentsOf(pairs)
-      .where(col("doc_id") =!= col("cluster_rep"))
-      .select(col("doc_id"))
-    docs.where(!isBase).select(col("doc_id"))
-      .join(collide, Seq("doc_id"), "left_anti")
-      .join(nonRep, Seq("doc_id"), "left_anti")
+    deltaSurvivors(docs, isBase, collide, bandPairs(rem))
   }
 
   /** EXACT-substring dedup audit (the suffix-array ExactSubstr step of
@@ -1146,10 +1203,7 @@ object DedupOps {
         .agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id")).localCheckpoint()
       val surv = docs.join(kept1, Seq("doc_id"), "left_semi")
-      val nonRep = componentsOf(
-          minhashPairs(surv).select(col("doc_a"), col("doc_b")))
-        .where(col("doc_id") =!= col("cluster_rep"))
-        .select(col("doc_id"))
+      val nonRep = nonRepOf(minhashPairs(surv))
       docs.select(col("doc_id"))
         .join(kept1.withColumn("s1", lit(true)), Seq("doc_id"), "left")
         .join(nonRep.withColumn("s2", lit(true)), Seq("doc_id"), "left")
@@ -1184,9 +1238,6 @@ object DedupOps {
         .localCheckpoint()
       val baseB = capped.where(col("is_base"))
       val deltaB = capped.where(!col("is_base"))
-      def editOk(a: Column, b: Column): Column =
-        when(a === b, lit(0))
-          .otherwise(levenshtein(a, b, FUZZY_TAU)) =!= -1
       val collide = deltaB.select(col("doc_id"), col("band_id"),
           col("band_hash"))
         .join(baseB.select(col("doc_id").as("doc_b"), col("band_id"),
@@ -1195,26 +1246,17 @@ object DedupOps {
         .join(t.select(col("doc_id"), col("text").as("ta")), "doc_id")
         .join(t.select(col("doc_id").as("doc_b"), col("text").as("tb")),
           "doc_b")
-        .where(editOk(col("ta"), col("tb")))
+        .where(editDist(col("ta"), col("tb")) =!= -1)
         .select(col("doc_id")).distinct()
       val rem = deltaB.join(collide, Seq("doc_id"), "left_anti")
-      val pairs = rem.select(col("doc_id").as("doc_a"), col("band_id"),
-          col("band_hash"))
-        .join(rem.select(col("doc_id").as("doc_b"), col("band_id"),
-          col("band_hash")), Seq("band_id", "band_hash"))
-        .where(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
+      val pairs = bandPairs(rem)
         .join(t.select(col("doc_id").as("doc_a"), col("text").as("ta")),
           "doc_a")
         .join(t.select(col("doc_id").as("doc_b"), col("text").as("tb")),
           "doc_b")
-        .where(editOk(col("ta"), col("tb")))
+        .where(editDist(col("ta"), col("tb")) =!= -1)
         .select(col("doc_a"), col("doc_b"))
-      val nonRep = componentsOf(pairs)
-        .where(col("doc_id") =!= col("cluster_rep")).select(col("doc_id"))
-      docs.where(!isBase).select(col("doc_id"))
-        .join(collide, Seq("doc_id"), "left_anti")
-        .join(nonRep, Seq("doc_id"), "left_anti")
+      deltaSurvivors(docs, isBase, collide, pairs)
     },
     "dedup_fuzzy_apply" -> { (s, d) =>
       // the keep set under the EDIT-verified pair relation — same
@@ -1226,10 +1268,7 @@ object DedupOps {
       // semantic difference between banding-as-candidates and
       // banding-as-truth.
       val docs = Tables.documents(s, d)
-      val nonRep = componentsOf(
-          fuzzyPairs(docs).select(col("doc_a"), col("doc_b")))
-        .where(col("doc_id") =!= col("cluster_rep"))
-        .select(col("doc_id"))
+      val nonRep = nonRepOf(fuzzyPairs(docs).select(col("doc_a"), col("doc_b")))
       docs.select(col("doc_id"))
         .join(dropSetHint(docs, nonRep), Seq("doc_id"), "left_anti")
     },
@@ -1267,14 +1306,7 @@ object DedupOps {
       // its blocks die with the plan, unlike a session-lifetime cache)
       // and joined three ways on doc_id.
       val sig = minhashSignatures(Tables.documents(s, d)).localCheckpoint()
-      val bands = cappedBands(bandsOf(sig))
-      val a = bands.select(col("doc_id").as("doc_a"), col("band_id"),
-        col("band_hash"))
-      val b = bands.select(col("doc_id").as("doc_b"), col("band_id"),
-        col("band_hash"))
-      val pairs = a.join(b, Seq("band_id", "band_hash"))
-        .where(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
+      val pairs = bandPairs(cappedBands(bandsOf(sig)))
       val sigA = sig.select(col("doc_id").as("doc_a") +:
         (0 until MINHASH_PERMS).map(j => col(s"m$j").as(s"a_m$j")): _*)
       val sigB = sig.select(col("doc_id").as("doc_b") +:
@@ -1372,24 +1404,14 @@ object DedupOps {
       // collision here is only a CANDIDATE: the drop decision is the
       // exact hamming ≤ HAMMING_MAX verify on the 64-bit fingerprints
       // (dedup_simhash_pairs' own criterion), applied both against the
-      // standing index and within the delta (capped chunk cells, the one
-      // family capping discipline; components via the shared min-label
-      // propagation). Survivors = delta docs that collide with nothing
+      // standing index and within the delta (chunk cells capped by
+      // [[dropOverCap]], components by [[nonRepOf]]). Survivors = delta docs that collide with nothing
       // standing and are their within-delta cluster's representative.
       val docs = Tables.documents(s, d)
       val isBase =
         graft.functions.VectorOps.unitUniform(col("doc_id")) < 0.7
       val fp = simhashFingerprints(docs).localCheckpoint()
-      val chunks = fp.select(col("doc_id"), col("simhash"),
-        posexplode(array((0 until CHUNKS).map(c =>
-          shiftright(col("simhash"), CHUNK_BITS * c)
-            .bitwiseAND(lit((1L << CHUNK_BITS) - 1))): _*))
-          .as(Seq("chunk_id", "chunk")))
-      val drop = chunks.groupBy(col("chunk_id"), col("chunk"))
-        .agg(count(lit(1)).as("bcnt")).where(col("bcnt") > CHUNK_CAP)
-        .select(col("chunk_id"), col("chunk"))
-      val capped = chunks.join(dropSetHint(chunks, drop),
-          Seq("chunk_id", "chunk"), "left_anti")
+      val capped = dropOverCap(simhashChunks(fp), CHUNK_KEYS, CHUNK_CAP)
         .withColumn("is_base", isBase)
         .localCheckpoint()
       val baseC = capped.where(col("is_base"))
@@ -1401,19 +1423,9 @@ object DedupOps {
           HAMMING_MAX)
         .select(col("doc_id")).distinct()
       val rem = deltaC.join(collide, Seq("doc_id"), "left_anti")
-      val pairs = rem.select(col("doc_id").as("doc_a"),
-          col("simhash").as("sim_a"), col("chunk_id"), col("chunk"))
-        .join(rem.select(col("doc_id").as("doc_b"),
-          col("simhash").as("sim_b"), col("chunk_id"), col("chunk")),
-          Seq("chunk_id", "chunk"))
-        .where(col("doc_a") < col("doc_b") &&
-          bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= HAMMING_MAX)
+      val pairs = chunkPairs(rem).where(hamming <= HAMMING_MAX)
         .select(col("doc_a"), col("doc_b")).distinct()
-      val nonRep = componentsOf(pairs)
-        .where(col("doc_id") =!= col("cluster_rep")).select(col("doc_id"))
-      docs.where(!isBase).select(col("doc_id"))
-        .join(collide, Seq("doc_id"), "left_anti")
-        .join(nonRep, Seq("doc_id"), "left_anti")
+      deltaSurvivors(docs, isBase, collide, pairs)
     },
     "dedup_clusters" -> { (s, d) =>
       duplicateClusters(Tables.documents(s, d))
@@ -1429,11 +1441,9 @@ object DedupOps {
       // (graft.dropSetBroadcast=false ⇒ AQE plans the shuffled fallback
       // on a pathologically duplicated corpus).
       val docs = Tables.documents(s, d)
-      val nonRep = duplicateClusters(docs)
-        .where(col("doc_id") =!= col("cluster_rep"))
-        .select(col("doc_id"))
       docs.select(col("doc_id"))
-        .join(dropSetHint(docs, nonRep), Seq("doc_id"), "left_anti")
+        .join(dropSetHint(docs, nonRepOf(minhashPairs(docs))),
+          Seq("doc_id"), "left_anti")
     },
     "split_leakage_safe" -> { (s, d) =>
       // DEDUP-AWARE train/val/test split — the leakage-safe form of
@@ -1530,9 +1540,7 @@ object DedupOps {
         .join(t.select(col("doc_id").as("eval_id"),
           col("text").as("te")), "eval_id")
         .select(col("doc_id"), col("eval_id"),
-          when(col("tt") === col("te"), lit(0))
-            .otherwise(levenshtein(col("tt"), col("te"), FUZZY_TAU))
-            .as("edit_dist"))
+          editDist(col("tt"), col("te")).as("edit_dist"))
         .where(col("edit_dist") =!= -1)
     },
     "decontaminate" -> { (s, d) =>

@@ -1527,13 +1527,18 @@ object KMeansOps {
        |GROUP BY a.cluster_id""".stripMargin
   }
 
+  /** DuckDB: squared distance from `p.v` to the nearest of the chosen
+    * seed CTEs — the min-to-set term both unrolled seedings order by. */
+  private def minTo(seeds: Seq[String]): String = {
+    import graft.functions.{VectorSql => V}
+    if (seeds.size == 1) V.sqDist("p.v", s"${seeds.head}.v")
+    else s"least(${seeds.map(s0 => V.sqDist("p.v", s"$s0.v")).mkString(", ")})"
+  }
+
   /** Unrolled farthest-point seeding (k=4, L1 first seed): each round is a
     * top-1 over the min-distance-to-chosen-set, chained through CTEs. */
   private lazy val farthestSql: String = {
     import graft.functions.{VectorSql => V}
-    def minTo(seeds: Seq[String]): String =
-      if (seeds.size == 1) V.sqDist("p.v", s"${seeds.head}.v")
-      else s"least(${seeds.map(s0 => V.sqDist("p.v", s"$s0.v")).mkString(", ")})"
     val rounds = (1 until K).map { r =>
       val prev = (0 until r).map(i => s"s$i")
       s"""s$r AS (SELECT p.vec_id, p.v FROM pts p, ${prev.mkString(", ")}
@@ -1553,9 +1558,6 @@ object KMeansOps {
     * exactly plusPlusInit's expressions. */
   private lazy val plusPlusSql: String = {
     import graft.functions.{VectorSql => V}
-    def minTo(seeds: Seq[String]): String =
-      if (seeds.size == 1) V.sqDist("p.v", s"${seeds.head}.v")
-      else s"least(${seeds.map(s0 => V.sqDist("p.v", s"$s0.v")).mkString(", ")})"
     def u(r: Int): String = V.roundUniform("p.vec_id", r)
     val rounds = (1 until FLAGSHIP_K).map { r =>
       val prev = (0 until r).map(i => s"s$i")

@@ -126,6 +126,10 @@ object MultimodalOps {
   private[graft] val MEDIA_GRID = 0.008
   private[graft] val MEDIA_CELL_CAP = 256
   private val MEDIA_LANES = 4
+  /** The band cell of [[mediaFeatureBands]]: modality, offset combo and
+    * the four quantized lanes. */
+  private[graft] val MEDIA_CELL_KEYS: Seq[String] =
+    "media_type" +: "combo" +: (0 until MEDIA_LANES).map(i => s"c$i")
 
   /** Two-offset grid bands of the decoded feature relation: for each of the
     * 2^4 per-lane offset choices (offset 0 or eps), quantize every lane to
@@ -153,9 +157,16 @@ object MultimodalOps {
         (0 until MEDIA_LANES).map(i => col(s"cell.c$i").as(s"c$i")): _*)
   }
 
+  /** Bare (`id+tag1`, `id+tag2`) pairs of the media rows sharing a cell. */
+  private def mediaCellPairs(cells: DataFrame, id: String,
+      tags: (String, String)): DataFrame =
+    DedupOps.cellPairs(MEDIA_CELL_KEYS, id, tags)(t =>
+      cells.select(col("doc_id").as(id + t) +: MEDIA_CELL_KEYS.map(col): _*))
+      .select(col(id + tags._1), col(id + tags._2)).distinct()
+
   /** `dedup_media`'s body: decode → 16-combo grid bands → population-capped
-    * cell self-join (the dedup family's drop-set discipline,
-    * [[DedupOps.dropSetHint]]) → bare-id candidate pairs → feature rejoin →
+    * cell self-join ([[DedupOps.dropOverCap]], [[DedupOps.cellPairs]]) →
+    * bare-id candidate pairs → feature rejoin →
     * exact L∞ verify. Pairs carry the modality, the verified distance, and
     * whether the (stub-decoded) dimensions agree — a real image pipeline
     * keeps the higher-resolution member of a near-dup pair, so the dims
@@ -178,20 +189,10 @@ object MultimodalOps {
     * [[mediaApplyOf]], which pins feats for its own argmax/reinstate
     * joins too, does not materialize the decode output twice. */
   private def mediaPairsPinned(feats: DataFrame): DataFrame = {
-    val keyCols = "media_type" +: "combo" +:
-      (0 until MEDIA_LANES).map(i => s"c$i")
-    val bands = mediaFeatureBands(feats)
-    val drop = bands.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bcnt"))
-      .where(col("bcnt") > MEDIA_CELL_CAP)
-      .select(keyCols.map(col): _*)
-    val capped = bands.join(DedupOps.dropSetHint(bands, drop),
-      keyCols, "left_anti")
-    val a = capped.select(col("doc_id").as("doc_a") +: keyCols.map(col): _*)
-    val b = capped.select(col("doc_id").as("doc_b") +: keyCols.map(col): _*)
+    val capped = DedupOps.dropOverCap(mediaFeatureBands(feats),
+      MEDIA_CELL_KEYS, MEDIA_CELL_CAP)
     // bare id pairs through the distinct — 2 longs, not 2×(4 doubles+dims)
-    val cand = a.join(b, keyCols).where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    val cand = mediaCellPairs(capped, "doc_", ("a", "b"))
     val fa = feats.select(col("doc_id").as("doc_a"), col("media_type"),
       col("width").as("wa"), col("height").as("ha"),
       col("f0").as("fa0"), col("f1").as("fa1"),
@@ -286,8 +287,8 @@ object MultimodalOps {
     * family (dedupEmbIncrementalOf's stage order and attribution applied
     * to the grid-banded feature space): within-delta min-id collapse
     * fires first ('delta'), then the delta probes the standing bands
-    * ('base'); cells cap over the COMBINED population (the over-cap
-    * drop-set anti-join, this family's convention), and the base side is
+    * ('base') — [[DedupOps.stageVerdict]]; cells cap over the COMBINED
+    * population ([[DedupOps.dropOverCap]]), and the base side is
     * semi-restricted to the delta's cells before any pair join (delta ≪
     * corpus; its cell set broadcasts). Bare-id candidate pairs; features
     * rejoin only for the exact L∞ verify. */
@@ -295,23 +296,15 @@ object MultimodalOps {
       deltaFeats0: DataFrame): DataFrame = {
     val baseFeats = baseFeats0.localCheckpoint()
     val deltaFeats = deltaFeats0.localCheckpoint()
-    val keyCols = "media_type" +: "combo" +:
-      (0 until MEDIA_LANES).map(i => s"c$i")
+    val keyCols = MEDIA_CELL_KEYS
     val bb = mediaFeatureBands(baseFeats).localCheckpoint()
     val db = mediaFeatureBands(deltaFeats).localCheckpoint()
-    val drop = bb.unionByName(db).groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bcnt"))
-      .where(col("bcnt") > MEDIA_CELL_CAP)
-      .select(keyCols.map(col): _*)
-    val dc = db.join(DedupOps.dropSetHint(db, drop), keyCols, "left_anti")
-    val bc = bb.join(DedupOps.dropSetHint(bb, drop), keyCols, "left_anti")
+    val pop = Some(bb.unionByName(db))
+    val dc = DedupOps.dropOverCap(db, keyCols, MEDIA_CELL_CAP, pop)
+    val bc = DedupOps.dropOverCap(bb, keyCols, MEDIA_CELL_CAP, pop)
       .join(broadcast(dc.select(keyCols.map(col): _*).distinct()),
         keyCols, "left_semi")
-    val candD = dc.select(col("doc_id").as("id_1") +: keyCols.map(col): _*)
-      .join(dc.select(col("doc_id").as("id_2") +: keyCols.map(col): _*),
-        keyCols)
-      .where(col("id_1") < col("id_2"))
-      .select(col("id_1"), col("id_2")).distinct()
+    val candD = mediaCellPairs(dc, "id_", ("1", "2"))
     val candB = dc.select(col("doc_id").as("id_d") +: keyCols.map(col): _*)
       .join(bc.select(col("doc_id").as("id_b") +: keyCols.map(col): _*),
         keyCols)
@@ -332,14 +325,7 @@ object MultimodalOps {
     val dropB = candB.join(fad, "id_d").join(fbb, "id_b")
       .where(linfD < lit(MEDIA_EPS))
       .select(col("id_d").as("doc_id")).distinct()
-    deltaFeats.select(col("doc_id"))
-      .join(dropD.withColumn("dd", lit(true)), Seq("doc_id"), "left")
-      .join(dropB.withColumn("db", lit(true)), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("dd").isNull && col("db").isNull).as("keep"),
-        when(col("dd").isNotNull, "delta")
-          .when(col("db").isNotNull, "base")
-          .otherwise("kept").as("stage"))
+    DedupOps.stageVerdict(deltaFeats.select(col("doc_id")), dropD, dropB)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -44,6 +44,9 @@ object PipelineOps {
     * under oracle parity, asserted in OperatorSpec). */
   private val QMIN = 0.45
 
+  private def maybePin(pin: Boolean)(df: DataFrame): DataFrame =
+    if (pin) df.localCheckpoint() else df
+
   /** The curation DAG's successive stage relations — (raw docs, quality
     * keeps, dedup survivors, substring-pass survivors, decontaminated) —
     * shared by the composed pipelines and the per-stage loss report.
@@ -57,10 +60,8 @@ object PipelineOps {
     * shuffle (and everything upstream) runs twice per plan. */
   private def stages(s: SparkSession, d: String, pin: Boolean = false)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    def maybePin(df: DataFrame): DataFrame =
-      if (pin) df.localCheckpoint() else df
     val docs = Tables.documents(s, d)
-    val keep = maybePin(TextOps.qualityScored(docs)
+    val keep = maybePin(pin)(TextOps.qualityScored(docs)
       .where(col("quality") >= QMIN))
     val (sur, sub, clean) = curateTail(docs, keep, "quality", pin)
     (docs, keep, sur, sub, clean)
@@ -73,8 +74,6 @@ object PipelineOps {
     * pipeline_curate_learned) and the stage semantics can never drift. */
   private def curateTail(docs: DataFrame, keep: DataFrame, metric: String,
       pin: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    def maybePin(df: DataFrame): DataFrame =
-      if (pin) df.localCheckpoint() else df
     // survivors: one doc per distinct text; the metric is a pure
     // function of text, so min() is just "the" group value
     val sur = keep
@@ -88,7 +87,7 @@ object PipelineOps {
     // the scan into the window explode, never through the digest
     // aggregate (the "never raw text through dedup shuffles" discipline).
     val surDocs = docs.join(sur.select(col("doc_id")), Seq("doc_id"))
-    val sub = maybePin(sur.join(
+    val sub = maybePin(pin)(sur.join(
       DedupOps.substringApply(surDocs).select(col("doc_id")),
       Seq("doc_id"), "left_semi"))
     val hits = DedupOps.contamPairs(docs).select(col("doc_id")).distinct()

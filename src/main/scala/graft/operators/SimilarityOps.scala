@@ -87,24 +87,10 @@ object SimilarityOps {
 
   /** The semdedup tail shared by the standing-index and scaled-k forms:
     * cap over-populated cells out (keep-all degrade, never O(n²)),
-    * generate bare-id within-cell pairs, rejoin vectors for the cosine
-    * verify, keep = no lower-id in-cell neighbor at τ. */
+    * generate within-cell pairs, cosine-verify them, keep = no lower-id
+    * in-cell neighbor at τ. */
   private def semdedupFrom(asg: DataFrame, pts: DataFrame): DataFrame = {
-    val counts = asg.groupBy(col("cell")).agg(count(lit(1)).as("ccnt"))
-    val capped = asg.join(broadcast(counts
-      .where(col("ccnt") <= BUCKET_CAP).select(col("cell"))), Seq("cell"))
-    // vectors attach BEFORE the in-cell self-join (r22, guide §2.3): the
-    // join input carries v at O(rows·d) through the one cell exchange,
-    // where the former bare-id pair list re-joined pts TWICE — the
-    // second id-keyed exchange carried O(pairs·d) (every pair dragging
-    // its va array), the dominant shuffle of the family at any scale
-    // (pairs ≈ cell²/2 vs rows = cell). Same pairs, same cosine inputs.
-    val cappedV = capped.join(pts, Seq("id"))
-    val dropped = cappedV
-      .select(col("cell"), col("id").as("id_a"), col("v").as("va"))
-      .join(cappedV.select(col("cell"), col("id").as("id_b"),
-        col("v").as("vb")), Seq("cell"))
-      .where(col("id_a") < col("id_b"))
+    val dropped = cellVecPairs(asg, pts)
       .where(r4(cos(col("va"), col("vb"))) >= SEMDEDUP_TAU)
       .select(col("id_b").as("vec_id")).distinct()
     asg.select(col("id").as("vec_id"), col("cell"))
@@ -136,21 +122,22 @@ object SimilarityOps {
     knnTopKFrom(asg, KMeansOps.points(s, d))
   }
 
+  /** Within-cell (id_a, va, id_b, vb) pairs of an `(id, cell)` assignment,
+    * over-populated cells capped out ([[DedupOps.keepUnderCap]]; the IVF
+    * cell domain is bounded). Vectors attach BEFORE the in-cell self-join,
+    * so the cell exchange carries v at O(rows·d); rejoining them onto the
+    * pair list would shuffle O(pairs·d), and pairs ≈ cell²/2. */
+  private def cellVecPairs(asg: DataFrame, pts: DataFrame): DataFrame = {
+    val cappedV = DedupOps.keepUnderCap(asg, Seq("cell"), BUCKET_CAP)
+      .join(pts, Seq("id"))
+    DedupOps.cellPairs(Seq("cell"), "id_")(t =>
+      cappedV.select(col("cell"), col("id").as(s"id_$t"),
+        col("v").as(s"v$t")))
+  }
+
   /** The knn_graph tail over an arbitrary `(id, cell)` assignment. */
   private def knnTopKFrom(asg: DataFrame, pts: DataFrame): DataFrame = {
-    val counts = asg.groupBy(col("cell")).agg(count(lit(1)).as("ccnt"))
-    val capped = asg.join(broadcast(counts
-      .where(col("ccnt") <= BUCKET_CAP).select(col("cell"))), Seq("cell"))
-    // vectors attach BEFORE the in-cell self-join — semdedupFrom's r22
-    // restructure (O(rows·d) through the cell exchange instead of
-    // O(pairs·d) through a second id-keyed one); pairs and cosine
-    // inputs unchanged.
-    val cappedV = capped.join(pts, Seq("id"))
-    val half = cappedV
-      .select(col("cell"), col("id").as("id_a"), col("v").as("va"))
-      .join(cappedV.select(col("cell"), col("id").as("id_b"),
-        col("v").as("vb")), Seq("cell"))
-      .where(col("id_a") < col("id_b"))
+    val half = cellVecPairs(asg, pts)
       .select(col("id_a"), col("id_b"),
         r4(cos(col("va"), col("vb"))).as("sim"))
     val sym = half.select(col("id_a").as("src_id"),
@@ -229,22 +216,18 @@ object SimilarityOps {
       .select(col("id"), col("v"), col("tb.t").as("t"), col("tb.b").as("b"))
   }
 
-  /** Drop rows in over-populated (table, bucket) cells before a self-join;
-    * the count relation is tiny (≤ T·2^P rows) and broadcasts. The input is
-    * `localCheckpoint()`-pinned: it feeds both the count aggregation and
-    * the join probe, and recomputing it would evaluate the T×P hyperplane
-    * dot products per row twice. Checkpoint, not cache: blocks are
-    * released by the ContextCleaner once the plan is unreferenced, so no
-    * storage leaks past the query and no unpersist bookkeeping is needed
-    * (round-6 verdict: same lifecycle discipline as the dedup family's
-    * checkpointed relations). */
-  private[graft] def capBuckets(bucketed: DataFrame): DataFrame = {
-    val pinned = bucketed.localCheckpoint()
-    val counts = pinned.groupBy(col("t"), col("b"))
-      .agg(count(lit(1)).as("bcnt"))
-    pinned.join(broadcast(counts.where(col("bcnt") <= BUCKET_CAP)
-      .select(col("t"), col("b"))), Seq("t", "b"))
-  }
+  /** Drop rows in over-populated (table, bucket) cells before a
+    * self-join ([[DedupOps.keepUnderCap]]: the cell domain is ≤ T·2^P).
+    * The input is `localCheckpoint()`-pinned: it feeds both the count
+    * aggregation and the join probe, and recomputing it would evaluate
+    * the T×P hyperplane dot products per row twice. Checkpoint, not
+    * cache: blocks are released by the ContextCleaner once the plan is
+    * unreferenced, so no storage leaks past the query and no unpersist
+    * bookkeeping is needed (round-6 verdict: same lifecycle discipline as
+    * the dedup family's checkpointed relations). */
+  private[graft] def capBuckets(bucketed: DataFrame): DataFrame =
+    DedupOps.keepUnderCap(bucketed.localCheckpoint(), Seq("t", "b"),
+      BUCKET_CAP)
 
   /** Salted two-phase per-query top-k: phase 1 ranks within
     * (q_id, vec_id % SALT) — SALT·|queries| independent partitions — and
@@ -498,10 +481,8 @@ object SimilarityOps {
     val pts = KMeansOps.points(s, d)
     val bucketed = capBuckets(bucketedAllTables(pts, dim, PLANES_DEDUP))
       .select(col("id"), col("t"), col("b"))
-    val a = bucketed.select(col("id").as("id_a"), col("t"), col("b"))
-    val b = bucketed.select(col("id").as("id_b"), col("t"), col("b"))
-    val candIds = a.join(b, Seq("t", "b"))
-      .where(col("id_a") < col("id_b"))
+    val candIds = DedupOps.cellPairs(Seq("t", "b"), "id_")(x =>
+        bucketed.select(col("id").as(s"id_$x"), col("t"), col("b")))
       .select(col("id_a"), col("id_b")).distinct()
     candIds
       .join(pts.select(col("id").as("id_a"), col("v").as("va")), "id_a")
@@ -576,18 +557,14 @@ object SimilarityOps {
       .select(col("id"), col("t"), col("b")).localCheckpoint()
     val deltaB = bucketedAllTables(delta, dim, PLANES_DEDUP)
       .select(col("id"), col("t"), col("b")).localCheckpoint()
-    val keepCells = baseB.select(col("t"), col("b"))
-      .unionAll(deltaB.select(col("t"), col("b")))
-      .groupBy(col("t"), col("b")).agg(count(lit(1)).as("n"))
-      .where(col("n") <= BUCKET_CAP).select(col("t"), col("b"))
-    val dc = deltaB.join(broadcast(keepCells), Seq("t", "b"))
-    val bc = baseB.join(broadcast(keepCells), Seq("t", "b"))
+    val pop = Some(baseB.select(col("t"), col("b"))
+      .unionAll(deltaB.select(col("t"), col("b"))))
+    val dc = DedupOps.keepUnderCap(deltaB, Seq("t", "b"), BUCKET_CAP, pop)
+    val bc = DedupOps.keepUnderCap(baseB, Seq("t", "b"), BUCKET_CAP, pop)
       .join(broadcast(dc.select(col("t"), col("b")).distinct()),
         Seq("t", "b"), "left_semi")
-    val candD = dc.select(col("t"), col("b"), col("id").as("id_1"))
-      .join(dc.select(col("t"), col("b"), col("id").as("id_2")),
-        Seq("t", "b"))
-      .where(col("id_1") < col("id_2"))
+    val candD = DedupOps.cellPairs(Seq("t", "b"), "id_", ("1", "2"))(x =>
+        dc.select(col("t"), col("b"), col("id").as(s"id_$x")))
       .select(col("id_1"), col("id_2")).distinct()
     val candB = dc.select(col("t"), col("b"), col("id").as("id_d"))
       .join(bc.select(col("t"), col("b"), col("id").as("id_b")),
@@ -603,14 +580,7 @@ object SimilarityOps {
       .join(pts.select(col("id").as("id_b"), col("v").as("vb")), "id_b")
       .where(r4(cos(col("vd"), col("vb"))) >= 0.3)
       .select(col("id_d").as("vec_id")).distinct()
-    delta.select(col("id").as("vec_id"))
-      .join(dropD.withColumn("dd", lit(true)), Seq("vec_id"), "left")
-      .join(dropB.withColumn("db", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        (col("dd").isNull && col("db").isNull).as("keep"),
-        when(col("dd").isNotNull, "delta")
-          .when(col("db").isNotNull, "base")
-          .otherwise("kept").as("stage"))
+    DedupOps.stageVerdict(delta.select(col("id").as("vec_id")), dropD, dropB)
   }
 
   /** Incremental IVF ingest ETL (round-14 verdict item 4 —

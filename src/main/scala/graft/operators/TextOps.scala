@@ -440,7 +440,7 @@ object TextOps {
   /** Core of `domain_weights` over a `(source, text)` relation — see the
     * query entry for the DoReMi framing and scale shape. */
   private[graft] def domainWeightsOf(docs: DataFrame): DataFrame = {
-    def ilog2(x: Column): Column = (length(bin(x)) - 1).cast("long")
+    import graft.functions.VectorOps.ilog2
     val sw = docs
       .select(col("source"), explode(wordsCol(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
@@ -542,7 +542,7 @@ object TextOps {
   private[graft] val UNIGRAM_VOCAB = 16
   private def unigramDocScores(s: SparkSession, d: String,
       lmOnTrainSplit: Boolean = false): DataFrame = {
-    def ilog2(x: Column): Column = (length(bin(x)) - 1).cast("long")
+    import graft.functions.VectorOps.ilog2
     val u = graft.functions.VectorOps.unitUniform(col("doc_id"))
     val tok = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.sources.Staging.fixtureKey
 import graft.functions.VectorOps._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,11 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object TextIO {
 
-  /** Staged-dir key for a fixture dir: its basename + content fingerprint,
-    * so a regenerated fixture can never be served a stale staged
-    * derivative ([[Staging.fixtureKey]]). */
-  private def sfName(sfDir: String): String = Staging.fixtureKey(sfDir)
-
   /** Text rendering of the embeddings table: "vec_id,f1,...,f64" per line. */
   private def pointLines(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).select(
@@ -43,7 +39,7 @@ object TextIO {
   /** Write the canonical points text fixture once per scale factor
     * (atomically staged — see [[Staging.ensureDir]]). */
   def ensurePointsText(s: SparkSession, d: String): String =
-    Staging.ensureDir(s"target/text-fixtures/${sfName(d)}/points") { tmp =>
+    Staging.ensureDir(s"target/text-fixtures/${fixtureKey(d)}/points") { tmp =>
       pointLines(s, d).coalesce(1).write.mode("overwrite").text(tmp)
     }
 
@@ -71,7 +67,7 @@ object TextIO {
     * label, the `data/UCI/HTRU_2.csv` shape from the reference's README)
     * once per scale factor, derived from the embeddings table. */
   def ensurePointsCsv(s: SparkSession, d: String): String =
-    Staging.ensureDir(s"target/text-fixtures/${sfName(d)}/points_csv") { tmp =>
+    Staging.ensureDir(s"target/text-fixtures/${fixtureKey(d)}/points_csv") { tmp =>
       val cols = col("vec_id") +:
         (1 to 8).map(i =>
           element_at(asDouble(col("embedding")), i).as(s"f$i")) :+
@@ -94,7 +90,7 @@ object TextIO {
     * lines can be planted; the header sorts first via the -1 key and the
     * single-shard write preserves the sort. */
   def ensurePointsCsvBad(s: SparkSession, d: String): String =
-    Staging.ensureDir(s"target/text-fixtures/${sfName(d)}/points_csv_bad") {
+    Staging.ensureDir(s"target/text-fixtures/${fixtureKey(d)}/points_csv_bad") {
       tmp =>
         val header = s.range(1).select(lit(-1L).as("k"),
           lit("vec_id," + (1 to 4).map(i => s"f$i").mkString(",")).as("value"))
@@ -113,7 +109,7 @@ object TextIO {
     * emitted as epoch-µs longs (JSON has no timestamp type; µs stays in
     * float64's exact-int range for the compare). */
   def ensureEventsJsonl(s: SparkSession, d: String): String =
-    Staging.ensureDir(s"target/text-fixtures/${sfName(d)}/events_jsonl") { tmp =>
+    Staging.ensureDir(s"target/text-fixtures/${fixtureKey(d)}/events_jsonl") { tmp =>
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
           expr("ts div 1000").as("ts_us"), col("event_type"),
@@ -126,7 +122,7 @@ object TextIO {
     * `scan_orc` exercises the format end-to-end (write → predicate-pushed
     * read) against the parquet source of truth. */
   def ensureDocsOrc(s: SparkSession, d: String): String =
-    Staging.ensureDir(s"target/text-fixtures/${sfName(d)}/docs_orc") { tmp =>
+    Staging.ensureDir(s"target/text-fixtures/${fixtureKey(d)}/docs_orc") { tmp =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .coalesce(1).write.mode("overwrite").orc(tmp)
@@ -144,7 +140,7 @@ object TextIO {
     * and the oracle reconstructs the whole layout from the parquet
     * source of truth. */
   def ensureDocsEvolved(s: SparkSession, d: String): String =
-    Staging.ensureDir(s"target/text-fixtures/${sfName(d)}/docs_evolved",
+    Staging.ensureDir(s"target/text-fixtures/${fixtureKey(d)}/docs_evolved",
       marker = "gen2/_SUCCESS") { tmp =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -278,7 +274,7 @@ object TextIO {
       // Spark's shortest-decimal rendering make the round-trip lossless.
       // Same single-shard contract note as sink_text: a 100 TB export
       // drops the coalesce and writes one shard per task.
-      val out = s"target/text-fixtures/${sfName(d)}/docs_sink_jsonl"
+      val out = s"target/text-fixtures/${fixtureKey(d)}/docs_sink_jsonl"
       val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
       Tables.documents(s, d).select(cols.map(col): _*)
         .coalesce(1).write.mode("overwrite").json(out)
@@ -296,7 +292,7 @@ object TextIO {
       // and the oracle (reading the PARQUET source) hash-proves it. Same
       // single-shard contract note as sink_text: a 100 TB export drops
       // the coalesce and writes one shard per task.
-      val out = s"target/text-fixtures/${sfName(d)}/docs_sink_orc"
+      val out = s"target/text-fixtures/${fixtureKey(d)}/docs_sink_orc"
       val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
       Tables.documents(s, d).select(cols.map(col): _*)
         .coalesce(1).write.mode("overwrite").orc(out)
@@ -308,7 +304,7 @@ object TextIO {
       // aggregate fingerprint like round(sum(round(x,4)),2) is a latent
       // flake: the grid sum can land on a .005 boundary where Spark's and
       // DuckDB's different summation orders round apart.)
-      val out = s"target/text-fixtures/${sfName(d)}/points_sink"
+      val out = s"target/text-fixtures/${fixtureKey(d)}/points_sink"
       pointLines(s, d).coalesce(1).write.mode("overwrite").text(out)
       parseLines(s, out)
     },
@@ -319,7 +315,7 @@ object TextIO {
       // whole corpus through one task). Same per-row round-trip contract
       // and oracle as sink_text; OperatorSpec pins that >1 part file was
       // actually written (a silent coalesce would pass the row compare).
-      val out = s"target/text-fixtures/${sfName(d)}/points_sink_sharded"
+      val out = s"target/text-fixtures/${fixtureKey(d)}/points_sink_sharded"
       pointLines(s, d)
         .repartition(SINK_SHARDS, col("value"))
         .write.mode("overwrite").text(out)
@@ -334,7 +330,7 @@ object TextIO {
 
   /** The sharded sink's output dir for a fixture (spec hook: count files). */
   private[graft] def shardedSinkDir(s: SparkSession, d: String): String =
-    s"target/text-fixtures/${sfName(d)}/points_sink_sharded"
+    s"target/text-fixtures/${fixtureKey(d)}/points_sink_sharded"
 
   // `round(x,4) + 0` — NOT plain round: DuckDB's float round yields -0.0
   // for x in (-5e-5, 0), while Spark's exact-decimal round canonicalizes

@@ -182,6 +182,63 @@ class PropertySpec extends SparkSpec {
     val bands = DedupOps.minhashBands(docs).localCheckpoint()
     assert(DedupOps.cappedBands(bands, cap = n).count() === bands.count())
     assert(DedupOps.cappedBands(bands, cap = n - 1).count() === 0L)
+    // the same boundary for both cap forms beyond band keys, at cap = 3:
+    // one group of 3 docs fills every one of its cells to exactly the cap
+    // (kept), one group of 4 overfills every one of its cells (dropped),
+    // the singletons stay. Driven over SimHash's 2-column chunk cells and
+    // media's 6-column grid cells, with the drop set broadcast and with
+    // the hint off; the drop-set and keep-set forms must agree.
+    val cap = 3
+    val atCap = Seq(0L, 1L, 2L)
+    val overCap = Seq(3L, 4L, 5L, 6L)
+    val singles = Seq(7L, 8L, 9L)
+    // 4 × 15-bit chunks chosen so the three groups share no chunk value
+    def fingerprint(chunks: Seq[Long]): Long =
+      chunks.zipWithIndex.map { case (c, i) => c << (15 * i) }.sum
+    val fp = (atCap.map(_ -> fingerprint(Seq(1, 2, 3, 4))) ++
+      overCap.map(_ -> fingerprint(Seq(5, 6, 7, 8))) ++
+      singles.map(i => i -> fingerprint(Seq(100 + i, 200 + i, 300 + i,
+        400 + i)))).toDF("doc_id", "simhash")
+    val chunks = DedupOps.simhashChunks(fp).localCheckpoint()
+    // identical features per group; groups ≥ 0.05 apart per lane, far
+    // outside one 0.008-wide grid cell
+    def lanes(x: Double) = (x, x, x, x)
+    val feats = (atCap.map(i => (i, "image", lanes(0.1))) ++
+      overCap.map(i => (i, "image", lanes(0.5))) ++
+      singles.map(i => (i, "image", lanes(0.05 * i))))
+      .map { case (i, m, (a, b, c, d)) => (i, m, a, b, c, d) }
+      .toDF("doc_id", "media_type", "f0", "f1", "f2", "f3")
+    val grid = graft.operators.MultimodalOps.mediaFeatureBands(feats)
+      .localCheckpoint()
+    val cases = Seq(
+      ("simhash", chunks, Seq("chunk_id", "chunk"), 4),
+      ("media", grid, graft.operators.MultimodalOps.MEDIA_CELL_KEYS, 16))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id")).as[Long].collect().toSeq.sorted
+    for (hint <- Seq("true", "false")) {
+      spark.conf.set("graft.dropSetBroadcast", hint)
+      try for ((name, rows, keys, perDoc) <- cases) {
+        assert(keys.length === (if (name == "media") 6 else 2))
+        val dropped = DedupOps.dropOverCap(rows, keys, cap)
+        val kept = DedupOps.keepUnderCap(rows, keys, cap)
+        def rowsOf(docs: Seq[Long]) = docs.flatMap(Seq.fill(perDoc)(_)).sorted
+        assert(ids(dropped) === rowsOf(atCap ++ singles),
+          s"$name drop-set, hint=$hint")
+        assert(ids(kept) === rowsOf(atCap ++ singles),
+          s"$name keep-set, hint=$hint")
+        // at cap - 1 the at-cap cells are over too: only singletons stay
+        assert(ids(DedupOps.dropOverCap(rows, keys, cap - 1)) ===
+          rowsOf(singles))
+        assert(ids(DedupOps.keepUnderCap(rows, keys, cap - 1)) ===
+          rowsOf(singles))
+        // the combined-population form counts `pop`, not `rows`
+        val pop = Some(rows.unionByName(rows.where(col("doc_id") === 0L)))
+        assert(ids(DedupOps.dropOverCap(rows, keys, cap, pop)) ===
+          ids(DedupOps.keepUnderCap(rows, keys, cap, pop)))
+        assert(!ids(DedupOps.dropOverCap(rows, keys, cap, pop))
+          .contains(0L), s"$name: pop pushes the at-cap cells over")
+      } finally spark.conf.unset("graft.dropSetBroadcast")
+    }
   }
 
   test("split_leakage_safe: no near-dup pair straddles two splits") {

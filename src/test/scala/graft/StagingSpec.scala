@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Concurrency contract of [[graft.sources.Staging.ensureDir]] (round-7
   * verdict #7): the old check-marker-then-write-in-place ensures could
   * interleave between two JVMs sharing target/ (a Bench and a Verify run),
@@ -9,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * atomic-rename protocol must leave exactly one complete published copy,
   * clean up the losing writer's temp, and make later ensures no-ops.
   */
-class StagingSpec extends AnyFunSuite {
+class StagingSpec extends SparkSpec {
   import java.nio.file._
   import java.util.concurrent.{CountDownLatch, TimeUnit}
 
@@ -137,6 +135,27 @@ class StagingSpec extends AnyFunSuite {
     assert(nullTier.count() === g1.count(), "null backfill drifted")
     assert(nullTier.where(pmod(col("doc_id"), lit(2)) =!= 0).count() === 0L,
       "a gen-2 row surfaced a null tier")
+  }
+
+  test("the scale fixture replicates orders with lineitem's key offsets") {
+    // each lineitem replica offsets l_orderkey; orders must carry the same
+    // offsets, or every replica past the first dangles in lineitem⋈orders
+    val dir = BenchLayout.stageScaleFixture(spark, sf, reps = 2)
+    def read(root: String, t: String) = spark.read.parquet(s"$root/$t.parquet")
+    val orders = read(dir, "orders")
+    val lineitem = read(dir, "lineitem")
+    val n = read(sf, "orders").count()
+    assert(orders.count() === 2 * n)
+    assert(orders.select("o_orderkey").distinct().count() === 2 * n)
+    assert(lineitem.count() === 2 * read(sf, "lineitem").count())
+    assert(lineitem.join(orders, lineitem("l_orderkey") ===
+      orders("o_orderkey"), "left_anti").count() === 0L,
+      "a lineitem row finds no order")
+    // customers stay 1×: every replica's o_custkey points at them
+    val customer = read(dir, "customer")
+    assert(customer.count() === read(sf, "customer").count())
+    assert(orders.join(customer, orders("o_custkey") ===
+      customer("c_custkey"), "left_anti").count() === 0L)
   }
 
   test("a pre-protocol partial dir (no marker) is rebuilt") {
