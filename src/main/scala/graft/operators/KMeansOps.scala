@@ -4,8 +4,11 @@ import graft.Tables
 import graft.functions.VectorOps._
 import graft.functions.VectorSql
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{NearestCenter, NearestCenterSums}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** K-Means pipeline operators — the reference's entire query surface
   * (SURVEY.md §2.3–§2.5), re-architected for Spark SQL.
@@ -16,14 +19,15 @@ import org.apache.spark.sql.functions._
   * → driver-side mean → collect → re-broadcast.
   *
   * Rebuild shape: centers are a k-row driver array embedded as *literal
-  * expressions* (no shuffle, no crossJoin). A Lloyd iteration is one
-  * native aggregate ([[org.apache.spark.sql.graft.NearestCenterSums]]) that
-  * assigns each point and folds it into per-partition sufficient
-  * statistics — a k×(1+d) count-and-sums buffer — then merges the
-  * per-partition buffers in one single-partition shuffle and returns one
-  * row; the driver divides. That is the topology MLlib's KMeans uses
-  * (`treeAggregate` of sufficient statistics), the 1000-executor scale
-  * path: driver traffic is O(k·d) per iteration regardless of input rows.
+  * expressions* (no shuffle, no crossJoin). A Lloyd iteration is one job
+  * with one stage and no exchange: each partition assigns its points and
+  * folds them into one k×(1+d) count-and-sums buffer
+  * ([[org.apache.spark.sql.graft.NearestCenterSums]]), the driver merges
+  * the partition buffers in task-completion order and divides, and
+  * [[snap12]] makes the means independent of that order. That is the
+  * topology MLlib's KMeans uses (`treeAggregate` of sufficient
+  * statistics), the 1000-executor scale path: driver traffic is O(k·d)
+  * per partition regardless of input rows.
   * Assignment alone ([[nearestCol]]) is a narrow codegen'd projection.
   */
 object KMeansOps {
@@ -114,18 +118,34 @@ object KMeansOps {
   private[operators] def snap12(x: Double): Double =
     math.floor(x * 1e12 + 0.5) / 1e12
 
-  /** One Lloyd step: assign + recompute in one pass — the native
-    * [[org.apache.spark.sql.graft.NearestCenterSums]] aggregate returns,
-    * for each cid c, the member count at `c·(1+d)` and the per-dimension
-    * sums after it — then the driver-side mean, [[snap12]]-snapped. An
-    * empty cluster keeps its previous center (MLlib-style; the reference
-    * silently shrinks k — quirk §8.3). The means equal the two-pass form —
-    * [[nearestCol]] then [[recompute]] — bit for bit after snapping. */
+  /** One Lloyd step: assign + recompute in one job with one stage — each
+    * partition of `pts` folds its points into one
+    * [[org.apache.spark.sql.graft.NearestCenterSums]] buffer (for each cid
+    * c, the member count at `c·(1+d)` and the per-dimension sums after it),
+    * the driver merges the buffers in task-completion order, divides, and
+    * [[snap12]]-snaps, so the merge order cannot move a mean. The job runs
+    * as one SQL execution named `lloydStep` over `pts`' plan, so query
+    * listeners see it. An empty cluster keeps its previous center
+    * (MLlib-style; the reference silently shrinks k — quirk §8.3), and so
+    * does every center of an input with no rows or no partitions. The
+    * means equal the two-pass form — [[nearestCol]] then [[recompute]] —
+    * bit for bit after snapping. */
   def lloydStep(pts: DataFrame, centers: Array[(Int, Array[Double])],
       metric: Metric = SqEuclid): Array[(Int, Array[Double])] = {
     val d = centers.head._2.length
-    val sums = pts.agg(org.apache.spark.sql.graft.NearestCenterSums
-      .column(col("v"), centers, metric.manhattan)).head().getSeq[Double](0)
+    pts.schema("v").dataType match {
+      case ArrayType(DoubleType, _) =>
+      case t => throw new IllegalArgumentException(
+        s"v must be array<double>, got ${t.simpleString}")
+    }
+    val stats = NearestCenterSums(NearestCenter.matrix(centers),
+      if (metric.manhattan) 1 else 0)
+    val qe = pts.select(col("v")).queryExecution
+    val sums = SQLExecution.withNewExecutionId(qe, Some("lloydStep")) {
+      qe.toRdd.aggregate(stats.zero)(
+        (buf, row) => stats.update(buf, row.getArray(0)),
+        NearestCenterSums.merge)
+    }
     centers.map { case (cid, old) =>
       val o = cid * (1 + d)
       val n = sums(o)

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
 /** Flagship MLlib path (SURVEY.md §7 step 4): the reference's whole program
   * family collapses into `ml.clustering.KMeans`, which internalizes the
   * Lloyd loop as `treeAggregate` of per-partition sufficient statistics.
-  * [[KMeansOps.lloydStep]] has the same topology (one native aggregate of
-  * per-partition count-and-sums buffers, merged in one shuffle); MLlib's is
+  * [[KMeansOps.lloydStep]] has the same topology (one job folding each
+  * partition into a count-and-sums buffer, the buffers merged on the driver
+  * in task-completion order, snap12 absorbing that order); MLlib's is
   * hardened for clusters
   * (`initMode` maps the reference's seeding strategies: random →"random",
   * ++/farthest → "k-means||", the Bahmani et al. scalable variant).

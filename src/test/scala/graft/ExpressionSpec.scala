@@ -154,7 +154,7 @@ class ExpressionSpec extends SparkSpec {
   test("NearestCenter rejects a point of the wrong dimension on every path") {
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
-    import org.apache.spark.sql.graft.{NearestCenter, NearestCenterSums}
+    import org.apache.spark.sql.graft.NearestCenter
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val centers = Array((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))
     // the generated code is one call into the shared kernel, no loop of its own
@@ -178,8 +178,8 @@ class ExpressionSpec extends SparkSpec {
       val want = s"point has dimension $n, centers have 2"
       assert(failure(pts(bad).select(
         NearestCenter.struct(col("v"), centers)).collect()) === want)
-      assert(failure(pts(bad).agg(
-        NearestCenterSums.column(col("v"), centers)).collect()) === want)
+      assert(failure(graft.operators.KMeansOps.lloydStep(pts(bad), centers))
+        === want)
     }
     assert(pts(Seq(9.0)).select(NearestCenter.struct(col("v"), centers))
       .queryExecution.executedPlan.toString.contains("*("),
@@ -193,45 +193,42 @@ class ExpressionSpec extends SparkSpec {
     } finally keys.foreach(spark.conf.unset)
   }
 
-  test("NearestCenterSums buffer: update, serde round-trip, zero merge, nulls") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
+  test("NearestCenterSums fold: update, zero merge, nulls, through lloydStep") {
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.graft.NearestCenterSums
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
     def bits(b: Array[Double]) =
       b.map(java.lang.Double.doubleToLongBits).toSeq
-    val agg = NearestCenterSums(
-      BoundReference(0, ArrayType(DoubleType), nullable = true),
-      Array(Array(0.0, 0.0), Array(10.0, 10.0)), metric = 0)
-    def row(v: Array[Double]) =
-      InternalRow(if (v == null) null else ArrayData.toArrayData(v))
+    val centers = Array((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))
+    val sums = NearestCenterSums(centers.map(_._2), metric = 0)
+    def point(v: Array[Double]) =
+      if (v == null) null else ArrayData.toArrayData(v)
     val buf = Seq(Array(1.0, 2.0), Array(9.0, 11.0), null, Array(0.5, 0.25),
         Array(5.0, 5.0))
-      .foldLeft(agg.createAggregationBuffer())((b, v) => agg.update(b, row(v)))
+      .foldLeft(sums.zero)((b, v) => sums.update(b, point(v)))
     // cid 0: count 3 (incl. the tie at (5,5) → lower cid), cid 1: count 1;
     // the null vector is skipped and not counted
     assert(buf.toSeq === Seq(3.0, 6.5, 7.25, 1.0, 9.0, 11.0))
-    assert(bits(agg.deserialize(agg.serialize(buf))) === bits(buf))
     // an empty partition's all-zero buffer is the merge identity
-    assert(bits(agg.merge(buf.clone(), agg.createAggregationBuffer())) ===
-      bits(buf))
-    assert(bits(agg.merge(agg.createAggregationBuffer(), buf)) === bits(buf))
+    assert(bits(NearestCenterSums.merge(buf.clone(), sums.zero)) === bits(buf))
+    assert(bits(NearestCenterSums.merge(sums.zero, buf)) === bits(buf))
     // a NaN coordinate claims cid 0
-    val nan = agg.update(agg.createAggregationBuffer(),
-      row(Array(Double.NaN, 1.0)))
+    val nan = sums.update(sums.zero, point(Array(Double.NaN, 1.0)))
     assert(nan(0) === 1.0 && nan(3) === 0.0 && nan(1).isNaN)
     intercept[IllegalArgumentException] {
-      agg.update(agg.createAggregationBuffer(), row(Array(1.0, 2.0, 3.0)))
+      sums.update(sums.zero, point(Array(1.0, 2.0, 3.0)))
     }
-    // through a query: null vectors skipped, partial + final merged
+    // through a query: null vectors skipped (counted, they would pull cid
+    // 0's mean toward the origin), 3 partition buffers merged
     import spark.implicits._
-    val got = Seq(Seq(1.0, 2.0), null, Seq(9.0, 11.0), null).toDF("v")
-      .repartition(3)
-      .agg(NearestCenterSums.column(col("v"),
-        Array((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))))
-      .head().getSeq[Double](0)
-    assert(got === Seq(1.0, 1.0, 2.0, 1.0, 9.0, 11.0))
+    val got = graft.operators.KMeansOps.lloydStep(
+      Seq(Seq(1.0, 2.0), null, Seq(9.0, 11.0), null, Seq(2.0, 3.0)).toDF("v")
+        .repartition(3), centers)
+    assert(got.map(_._2.toSeq).toSeq === Seq(Seq(1.5, 2.5), Seq(9.0, 11.0)))
+    // a float vector is rejected, not read as doubles
+    val floats = Seq(Seq(1.0f, 2.0f)).toDF("v")
+    assert(intercept[IllegalArgumentException] {
+      graft.operators.KMeansOps.lloydStep(floats, centers)
+    }.getMessage === "v must be array<double>, got array<float>")
   }
 
   test("BpeTokens: hand fold, OOV application, Ġ-mapping, edge shapes") {

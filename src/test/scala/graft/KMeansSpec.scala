@@ -202,6 +202,17 @@ class KMeansSpec extends SparkSpec {
         bits(twoPass(fx, fixtureInit, metric).toSeq),
         s"fixture, $n partitions, $metric")
     }
+    // no partitions at all, and rows whose every v is null: every center
+    // keeps its place
+    val noParts = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+    assert(noParts.rdd.getNumPartitions === 0)
+    val nulls = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until 5).map(i => Row(i.toLong, null)), 2), schema)
+    for (pts <- Seq(noParts, nulls); metric <- Seq(KMeansOps.SqEuclid, KMeansOps.L1)) {
+      assert(bits(KMeansOps.lloydStep(pts, init, metric).map(_._2.toSeq).toSeq)
+        === bits(init.map(_._2.toSeq).toSeq))
+    }
   }
 
   test("kmeans_fit* emit a driver-visible cost flag that holds on fixture") {

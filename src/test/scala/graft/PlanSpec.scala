@@ -99,41 +99,52 @@ class PlanSpec extends SparkSpec {
     assert(line.trim.startsWith("*"), s"not codegen'd: $line")
   }
 
-  test("lloydStep is one fused sufficient-statistics aggregate (partial + final)") {
-    // one pass: the native aggregate assigns and sums per partition, one
-    // single-partition exchange merges. A regression to the assignment
-    // projection + cid-keyed avg hash aggregate (2d + 1 buffer slots per
-    // row) fails here. The plan is the one lloydStep's own action ran.
+  test("lloydStep is one SQL execution running one job with no exchange") {
+    // one pass: each partition assigns and sums its points into one buffer
+    // and the driver merges them, so one job, one stage and no exchange. A
+    // regression to a SQL aggregate (partial + exchange + final: two jobs)
+    // or to the assignment projection + cid-keyed avg hash aggregate fails
+    // here. The plan is the one lloydStep's own execution ran.
     import graft.operators.KMeansOps
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.util.QueryExecutionListener
     val pts = KMeansOps.points(spark, sf)
     val centers = KMeansOps.collectCenters(KMeansOps.sampleK(pts, 4))
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerSync.drain(sc)
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add((qe.executedPlan match {
+        runs.add((f, (qe.executedPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan
           case p => p
-        }).toString)
+        }).toString))
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobCounter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
     spark.listenerManager.register(listener)
+    sc.addSparkListener(jobCounter)
     try {
       KMeansOps.lloydStep(pts, centers)
-      org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    assert(plans.size === 1, "lloydStep must run exactly one action")
-    val lines = plans.peek().split("\n")
-    val partial = lines.filter(_.contains("partial_nearestcentersums("))
-    val fin = lines.filter(l => l.contains("nearestcentersums(") &&
-      !l.contains("partial_nearestcentersums("))
-    assert(partial.length === 1 && fin.length === 1,
-      s"want one partial + one final NearestCenterSums:\n${lines.mkString("\n")}")
-    assert(lines.count(_.contains("Exchange")) === 1 &&
-      lines.exists(_.contains("Exchange SinglePartition")),
-      "partial buffers must merge through one single-partition exchange")
+      org.apache.spark.graft.ListenerSync.drain(sc)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      sc.removeSparkListener(jobCounter)
+    }
+    assert(runs.size === 1, "lloydStep must run exactly one SQL execution")
+    val (name, plan) = runs.peek()
+    assert(name === "lloydStep")
+    assert(jobs.get === 1, "lloydStep must run exactly one Spark job")
+    val lines = plan.split("\n")
+    assert(!lines.exists(_.contains("Exchange")),
+      s"partition buffers must merge on the driver, not through an exchange:\n$plan")
+    assert(!lines.exists(_.contains("nearestcentersums(")),
+      s"the sufficient statistics are a SQL aggregate again:\n$plan")
     assert(!lines.exists(_.contains("avg(")), "per-dimension avg aggregate is back")
     assert(!lines.exists(_.toLowerCase.contains("nearestcenter(")),
       "separate NearestCenter assignment projection is back")

@@ -14,39 +14,41 @@ class StagingSpec extends SparkSpec {
   test("two concurrent ensures publish exactly one complete fixture") {
     val base = Files.createTempDirectory(
       Files.createDirectories(Paths.get("target")), "staging-spec-")
-    val dir = base.resolve("fixture").toString
-    val writes = new java.util.concurrent.atomic.AtomicInteger
-    // both writers held inside write() at once, so the publish genuinely
-    // races (if scheduling serializes them anyway, the await times out and
-    // the test still checks idempotence)
-    val gate = new CountDownLatch(2)
-    def ensure(): String = graft.sources.Staging.ensureDir(dir) { tmp =>
-      writes.incrementAndGet()
-      gate.countDown()
-      gate.await(10, TimeUnit.SECONDS)
-      val p = Paths.get(tmp)
-      Files.writeString(p.resolve("data"), "payload")
-      Files.writeString(p.resolve("_SUCCESS"), "")
-    }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    Seq(Future(ensure()), Future(ensure()))
-      .foreach(f => Await.result(f, 60.seconds))
-    // one complete copy is in place
-    assert(Files.exists(Paths.get(dir, "_SUCCESS")))
-    assert(Files.readString(Paths.get(dir, "data")) === "payload")
-    // the losing writer's temp sibling was discarded
-    val entries = Files.list(base)
-    val names = try {
-      import scala.jdk.CollectionConverters._
-      entries.iterator().asScala.map(_.getFileName.toString).toList.sorted
-    } finally entries.close()
-    assert(names === List("fixture"), s"leftover temp dirs: $names")
-    // a later ensure sees the marker and never re-invokes the writer
-    val before = writes.get
-    ensure()
-    assert(writes.get === before)
+    try {
+      val dir = base.resolve("fixture").toString
+      val writes = new java.util.concurrent.atomic.AtomicInteger
+      // both writers held inside write() at once, so the publish genuinely
+      // races (if scheduling serializes them anyway, the await times out and
+      // the test still checks idempotence)
+      val gate = new CountDownLatch(2)
+      def ensure(): String = graft.sources.Staging.ensureDir(dir) { tmp =>
+        writes.incrementAndGet()
+        gate.countDown()
+        gate.await(10, TimeUnit.SECONDS)
+        val p = Paths.get(tmp)
+        Files.writeString(p.resolve("data"), "payload")
+        Files.writeString(p.resolve("_SUCCESS"), "")
+      }
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      Seq(Future(ensure()), Future(ensure()))
+        .foreach(f => Await.result(f, 60.seconds))
+      // one complete copy is in place
+      assert(Files.exists(Paths.get(dir, "_SUCCESS")))
+      assert(Files.readString(Paths.get(dir, "data")) === "payload")
+      // the losing writer's temp sibling was discarded
+      val entries = Files.list(base)
+      val names = try {
+        import scala.jdk.CollectionConverters._
+        entries.iterator().asScala.map(_.getFileName.toString).toList.sorted
+      } finally entries.close()
+      assert(names === List("fixture"), s"leftover temp dirs: $names")
+      // a later ensure sees the marker and never re-invokes the writer
+      val before = writes.get
+      ensure()
+      assert(writes.get === before)
+    } finally graft.sources.Staging.deleteRecursively(base)
   }
 
   test("a fresh build sweeps superseded fingerprint keys, spares the rest") {
@@ -93,25 +95,27 @@ class StagingSpec extends SparkSpec {
     // caller-saw-stale/now-marked race window: the dir must survive intact
     // (restored via the move-aside round trip), never be deleted.
     val base = Files.createTempDirectory(Paths.get("target"), "staging-spec-")
-    val dir = base.resolve("fixture")
-    Files.createDirectories(dir)
-    Files.writeString(dir.resolve("data"), "published payload")
-    Files.writeString(dir.resolve("_SUCCESS"), "")
-    assert(graft.sources.Staging.clearUnmarked(dir, "_SUCCESS"),
-      "must report a complete copy in place")
-    assert(Files.readString(dir.resolve("data")) === "published payload")
-    assert(Files.exists(dir.resolve("_SUCCESS")))
-    // no .stale- sibling left behind
-    val entries = Files.list(base)
-    val names = try {
-      import scala.jdk.CollectionConverters._
-      entries.iterator().asScala.map(_.getFileName.toString).toList.sorted
-    } finally entries.close()
-    assert(names === List("fixture"), s"leftover siblings: $names")
-    // and a genuinely unmarked dir is still cleared
-    Files.delete(dir.resolve("_SUCCESS"))
-    assert(!graft.sources.Staging.clearUnmarked(dir, "_SUCCESS"))
-    assert(!Files.exists(dir))
+    try {
+      val dir = base.resolve("fixture")
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("data"), "published payload")
+      Files.writeString(dir.resolve("_SUCCESS"), "")
+      assert(graft.sources.Staging.clearUnmarked(dir, "_SUCCESS"),
+        "must report a complete copy in place")
+      assert(Files.readString(dir.resolve("data")) === "published payload")
+      assert(Files.exists(dir.resolve("_SUCCESS")))
+      // no .stale- sibling left behind
+      val entries = Files.list(base)
+      val names = try {
+        import scala.jdk.CollectionConverters._
+        entries.iterator().asScala.map(_.getFileName.toString).toList.sorted
+      } finally entries.close()
+      assert(names === List("fixture"), s"leftover siblings: $names")
+      // and a genuinely unmarked dir is still cleared
+      Files.delete(dir.resolve("_SUCCESS"))
+      assert(!graft.sources.Staging.clearUnmarked(dir, "_SUCCESS"))
+      assert(!Files.exists(dir))
+    } finally graft.sources.Staging.deleteRecursively(base)
   }
 
   test("scan_evolved's staged layout genuinely evolves its file schema") {
@@ -160,14 +164,16 @@ class StagingSpec extends SparkSpec {
 
   test("a pre-protocol partial dir (no marker) is rebuilt") {
     val base = Files.createTempDirectory(Paths.get("target"), "staging-spec-")
-    val dir = base.resolve("fixture")
-    Files.createDirectories(dir)
-    Files.writeString(dir.resolve("data"), "torn half-written copy")
-    graft.sources.Staging.ensureDir(dir.toString) { tmp =>
-      Files.writeString(Paths.get(tmp).resolve("data"), "payload")
-      Files.writeString(Paths.get(tmp).resolve("_SUCCESS"), "")
-    }
-    assert(Files.readString(dir.resolve("data")) === "payload")
-    assert(Files.exists(dir.resolve("_SUCCESS")))
+    try {
+      val dir = base.resolve("fixture")
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("data"), "torn half-written copy")
+      graft.sources.Staging.ensureDir(dir.toString) { tmp =>
+        Files.writeString(Paths.get(tmp).resolve("data"), "payload")
+        Files.writeString(Paths.get(tmp).resolve("_SUCCESS"), "")
+      }
+      assert(Files.readString(dir.resolve("data")) === "payload")
+      assert(Files.exists(dir.resolve("_SUCCESS")))
+    } finally graft.sources.Staging.deleteRecursively(base)
   }
 }
