@@ -2,14 +2,28 @@
 """Dev-only local correctness checker mimicking the driver's DuckDB compare.
 
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+       python3 scripts/check_oracle.py <sfDir> <verifyOutDir> <parentOracleJson>
 
-For each query dumped by graft.Verify: load the Spark parquet result and the
-DuckDB oracle result, sort columns by name, sort rows, compare values
-(floats to 1e-9 after the engine-side rounding). Reports per-query
-row-count / schema / value match. NOT part of the shipped library.
+With two arguments: for each query dumped by graft.Verify, load the Spark
+parquet result and the DuckDB oracle result, sort columns by name, sort rows,
+compare values (floats to 1e-9 after the engine-side rounding). Reports
+per-query row-count / schema / value match.
+
+With a third argument (the oracle_sql.json of another Verify run, say the
+parent commit's): compare the two oracle maps instead. The checkout path that
+the reference-file oracles embed is normalised first; every entry whose SQL
+still differs is run on both sides in DuckDB over <sfDir>, against this
+checkout's copy of the reference files, and its typed rows (column names,
+column types, sorted values, floats exact) must be identical. No Spark dump
+is read, so any scale factor can be checked against one pair of dumps.
+
+NOT part of the shipped library.
 """
-import sys, json, glob, os
+import sys, json, glob, os, re
 import duckdb
+
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REF_PATH = re.compile(r"'[^']*/(data/reference/[^']*)'")
 
 
 def norm_rows(rows):
@@ -31,7 +45,7 @@ def values_eq(a, b):
     return str(a) == str(b)
 
 
-def main(sf_dir, out_dir):
+def connect(sf_dir):
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
@@ -42,6 +56,65 @@ def main(sf_dir, out_dir):
             pat = pat + "/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{pat}')")
+    return con
+
+
+def load_oracles(path):
+    """An oracle_sql.json with the embedded checkout path normalised."""
+    return {q: REF_PATH.sub(r"'<checkout>/\1'", sql) for q, sql
+            in json.load(open(path, encoding="utf-8")).items()}
+
+
+def typed_rows(con, sql):
+    rel = con.sql(sql.replace("<checkout>/", CHECKOUT + "/"))
+    return (list(zip(rel.columns, map(str, rel.types))),
+            norm_rows(rel.fetchall()))
+
+
+def same_value(a, b):
+    if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
+        return True
+    return type(a) is type(b) and a == b
+
+
+def compare_parent(sf_dir, out_dir, parent_json):
+    con = connect(sf_dir)
+    mine = load_oracles(os.path.join(out_dir, "oracle_sql.json"))
+    parent = load_oracles(parent_json)
+    one_side = sorted(set(mine) ^ set(parent))
+    moved = sorted(q for q in set(mine) & set(parent) if mine[q] != parent[q])
+    bad = 0
+    for q in moved:
+        try:
+            (pc, pr), (mc, mr) = typed_rows(con, parent[q]), typed_rows(con, mine[q])
+        except Exception as e:
+            bad += 1
+            print(f"{q}  SQL_ERROR: {str(e)[:200]}")
+            continue
+        if pc != mc:
+            verdict = f"SCHEMA_DIFFERS parent={pc} change={mc}"
+        elif len(pr) != len(mr):
+            verdict = f"ROWCOUNT_DIFFERS parent={len(pr)} change={len(mr)}"
+        else:
+            diff = next((i for i, (a, b) in enumerate(zip(pr, mr))
+                         if len(a) != len(b) or
+                         not all(map(same_value, a, b))), None)
+            verdict = (f"SAME_ROWS({len(mr)})" if diff is None else
+                       f"ROWS_DIFFER row{diff} parent={pr[diff]} "
+                       f"change={mr[diff]}")
+        bad += not verdict.startswith("SAME_ROWS")
+        print(f"{q}  {verdict}")
+    for q in one_side:
+        print(f"{q}  ONLY_IN_{'CHANGE' if q in mine else 'PARENT'}")
+    print(f"\n{len(mine)} vs {len(parent)} oracles: "
+          f"{len(set(mine) & set(parent)) - len(moved)} identical SQL, "
+          f"{len(moved)} differ ({len(moved) - bad} same rows, {bad} not), "
+          f"{len(one_side)} on one side only")
+    return bad == 0 and not one_side
+
+
+def main(sf_dir, out_dir):
+    con = connect(sf_dir)
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
     dump_dirs = sorted(d for d in glob.glob(os.path.join(out_dir, "*"))
@@ -104,4 +177,6 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
+    if len(sys.argv) == 4:
+        sys.exit(0 if compare_parent(*sys.argv[1:4]) else 1)
     main(sys.argv[1], sys.argv[2])

@@ -327,11 +327,13 @@ object KMeansOps {
     idx
   }
 
-  /** DuckDB view of the same frozen centers, with the same 0-based cid. */
-  def frozenCentersSql(k: Int = K): String =
+  /** DuckDB view of the frozen centers over `src` (default: the whole
+    * corpus): the first `k` rows of the id permutation with the same
+    * 0-based cid — the twin of `collectCenters(sampleK(src, k))`. */
+  def frozenCentersSql(k: Int = K, src: String = "embeddings"): String =
     s"""(SELECT (row_number() OVER (ORDER BY ${VectorSql.perm("vec_id")}, vec_id) - 1)::INT AS cid,
        |        embedding
-       |   FROM embeddings
+       |   FROM $src
        |  ORDER BY ${VectorSql.perm("vec_id")}, vec_id LIMIT $k)""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -592,7 +594,7 @@ object KMeansOps {
       // permutation, and one snap12 Lloyd step trains the centers — all
       // DuckDB-expressible, so unlike a held-out MLlib fit this evaluation
       // flow is hash-verified. The SQL mirror carries an emptied cluster's
-      // previous center via LEFT JOIN + coalesce — the same zero-count
+      // previous center through centerStepSql — the same zero-count
       // branch lloydStep takes (a seed cluster
       // CAN empty: two train seeds with identical embeddings leave the
       // higher cid with zero members after the low-cid argmin tiebreak, so
@@ -745,7 +747,7 @@ object KMeansOps {
     spark.read.text(path)
       .select(split(col("value"), ",").cast("array<double>").as("v"))
 
-  /** The staged 10000-point file (kept for specs/back-compat). */
+  /** The staged 10,000-point file — the input of [[coresetReps]]. */
   def refPoints(spark: SparkSession): DataFrame =
     refPointsAt(spark, refPointsPath)
 
@@ -1042,22 +1044,9 @@ object KMeansOps {
            |  FROM embeddings e CROSS JOIN ${frozenCentersSql()} c
            |  GROUP BY e.vec_id)""".stripMargin,
       "assign_nearest" -> assignSql,
-      "recompute_centers" ->
-        s"""SELECT a.cluster_id, count(*)::BIGINT AS n_points,
-           |       (round(avg(e.embedding[1]::DOUBLE),4) + 0) AS d0,
-           |       (round(avg(e.embedding[2]::DOUBLE),4) + 0) AS d1,
-           |       (round(avg(e.embedding[3]::DOUBLE),4) + 0) AS d2,
-           |       (round(avg(e.embedding[4]::DOUBLE),4) + 0) AS d3
-           |FROM ($assignSql) a JOIN embeddings e ON a.vec_id = e.vec_id
-           |GROUP BY a.cluster_id""".stripMargin,
-      "recompute_centers_agg" ->
-        s"""SELECT a.cluster_id, count(*)::BIGINT AS n_points,
-           |       (round(avg(e.embedding[1]::DOUBLE),4) + 0) AS d0,
-           |       (round(avg(e.embedding[2]::DOUBLE),4) + 0) AS d1,
-           |       (round(avg(e.embedding[3]::DOUBLE),4) + 0) AS d2,
-           |       (round(avg(e.embedding[4]::DOUBLE),4) + 0) AS d3
-           |FROM ($assignSql) a JOIN embeddings e ON a.vec_id = e.vec_id
-           |GROUP BY a.cluster_id""".stripMargin,
+      "recompute_centers" -> assignStatsSql(frozenCentersSql(), "embedding", V.sqDist),
+      // the typed-Aggregator twin of recompute_centers: the same rows
+      "recompute_centers_agg" -> assignStatsSql(frozenCentersSql(), "embedding", V.sqDist),
       "format_clusters" ->
         s"""SELECT cluster_id, count(*)::BIGINT AS n_members,
            |       cluster_id::VARCHAR || ':' || string_agg(
@@ -1087,50 +1076,26 @@ object KMeansOps {
            |(SELECT 'min' AS which, vec_id, l2_norm FROM
            |  (SELECT vec_id, round(${V.l2("embedding")},4) AS l2_norm FROM embeddings)
            |  ORDER BY l2_norm ASC, vec_id LIMIT 1)""".stripMargin,
-      "cluster_eval" ->
-        s"""WITH a AS ($assignSql),
-           |j AS (SELECT a.cluster_id, d.lang
-           |      FROM a JOIN documents d ON a.vec_id = d.doc_id),
-           |c AS (SELECT cluster_id, lang, count(*) AS cnt
-           |      FROM j GROUP BY cluster_id, lang)
-           |SELECT cluster_id, n_points, top_lang,
-           |       round(top_cnt::DOUBLE / n_points, 4) AS purity
-           |FROM (SELECT cluster_id, lang AS top_lang, cnt AS top_cnt,
-           |             sum(cnt) OVER (PARTITION BY cluster_id)::BIGINT AS n_points,
-           |             row_number() OVER (PARTITION BY cluster_id
-           |                                ORDER BY cnt DESC, lang DESC) AS rn
-           |      FROM c)
-           |WHERE rn = 1""".stripMargin,
-      "cluster_eval_holdout" -> {
-        val uu = s"((${P} + 0.5) / 4294967296.0)"
-        s"""WITH tr AS (SELECT vec_id, embedding FROM embeddings WHERE $uu < 0.7),
-           |c0 AS (SELECT (row_number() OVER (ORDER BY $P, vec_id) - 1)::INT AS cid,
-           |              embedding
-           |       FROM tr ORDER BY $P, vec_id LIMIT $K),
-           |a1 AS (${assignSqlFor("c0", "embedding", V.sqDist, "tr")}),
-           |c1 AS (SELECT c0.cid, coalesce(n.cv, c0.embedding::DOUBLE[]) AS cv
-           |       FROM c0 LEFT JOIN (
-           |         SELECT a.cluster_id AS cid,
-           |                list_value($snappedCentroidSql) AS cv
-           |         FROM a1 a JOIN embeddings e ON a.vec_id = e.vec_id
-           |         GROUP BY a.cluster_id) n USING (cid)),
-           |te AS (SELECT vec_id, embedding FROM embeddings WHERE $uu >= 0.7),
-           |a2 AS (${assignSqlFor("c1", "cv", V.sqDist, "te")}),
-           |j AS (SELECT a.cluster_id, d.lang
-           |      FROM a2 a JOIN documents d ON a.vec_id = d.doc_id),
-           |c AS (SELECT cluster_id, lang, count(*) AS cnt
-           |      FROM j GROUP BY cluster_id, lang)
-           |SELECT cluster_id, n_points, top_lang,
-           |       round(top_cnt::DOUBLE / n_points, 4) AS purity
-           |FROM (SELECT cluster_id, lang AS top_lang, cnt AS top_cnt,
-           |             sum(cnt) OVER (PARTITION BY cluster_id)::BIGINT AS n_points,
-           |             row_number() OVER (PARTITION BY cluster_id
-           |                                ORDER BY cnt DESC, lang DESC) AS rn
-           |      FROM c)
-           |WHERE rn = 1""".stripMargin
+      "cluster_eval" -> s"WITH ${langPuritySql(assignSql)}",
+      // train on the 70% side (seeds from its own id permutation, one
+      // snap12 step), assign the held-out 30%, vote on lang
+      "cluster_eval_holdout" ->
+        s"""WITH tr AS (SELECT vec_id, embedding FROM embeddings
+           |            WHERE ${V.unitUniform("vec_id")} < 0.7),
+           |te AS (SELECT vec_id, embedding FROM embeddings
+           |       WHERE ${V.unitUniform("vec_id")} >= 0.7),
+           |c0 AS ${frozenCentersSql(K, "tr")},
+           |${snapStepsSql(1, V.sqDist, "tr")},
+           |${langPuritySql(assignSqlFor("c1", "cv", V.sqDist, "te"))}""".stripMargin,
+      "init_farthest" -> seedRanksSql(K, largest = true) {
+        case (_, 0) => V.l1("p.v")
+        case (seeds, _) => minToSql(seeds, (p, s) => V.sqDist(s"$p.v", s"$s.v"))
       },
-      "init_farthest" -> farthestSql,
-      "init_plusplus" -> plusPlusSql,
+      "init_plusplus" -> seedRanksSql(FLAGSHIP_K, largest = false) {
+        case (_, 0) => V.perm("p.vec_id")
+        case (seeds, r) => s"-ln(${V.roundUniform("p.vec_id", r)}) / " +
+          s"greatest(${minToSql(seeds, (p, s) => V.sqDist(s"$p.v", s"$s.v"))}, 1e-300)"
+      },
       // the flagship loop itself, promoted from rows-only: 5 unrolled
       // snap12 steps + the tol early-stop CASE (lloydLoopSql doc) — the
       // only remaining rows-only queries are the 3 MLlib fits, which have
@@ -1173,60 +1138,191 @@ object KMeansOps {
     )
   }
 
-  /** Assignment SQL against an arbitrary centers relation (argmin with
-    * min-dist window + low-cid tiebreak — same semantics as the
-    * struct-ordering argmin on the Spark side). */
-  // NOTE: referenced from the `oracles` val above — must be initialization-
-  // order-safe (a plain val declared below `oracles` would still be 0 when
-  // `oracles` initializes; that bug once generated `list_value()` and
-  // segfaulted DuckDB 1.0.0 on the empty-list distance).
+  // ---------------------------------------------------------- DuckDB twins
+  //
+  // One SQL body per K-Means primitive — argminSql (the NearestCenter
+  // argmin), centerStepSql (lloydStep's snap12 update), greedySeedsSql
+  // (greedySeeds), purityOfSql (purityOf) and assignStatsSql
+  // (assignStats) — and every K-Means and IVF oracle is built from them.
+  // The distance and mean expressions are parameters, so the list form
+  // (64-d embeddings) and the column form (reference/UCI files, the
+  // integer coreset) keep their own exact arithmetic.
+  //
+  // NOTE: everything below is referenced from the strict `oracles` val
+  // above, so it must be a def, a lazy val or a constant final val (a
+  // plain val declared below `oracles` would still be 0 when `oracles`
+  // initializes; that bug once generated `list_value()` and segfaulted
+  // DuckDB 1.0.0 on the empty-list distance).
   private final val DIM = 64
 
+  /** The SQL twin of the argmin kernel ([[nearestCol]]): each row `e` of
+    * `src`, partitioned by `keys`, goes to the row `c` of `centers` at
+    * the least `dist(e, c)`, ties to the lower cid. `carry` columns ride
+    * through; `distAs` also returns that least distance. */
+  private def argminSql(src: String, keys: Seq[String],
+      centers: String, dist: (String, String) => String,
+      cidAs: String = "cluster_id", carry: Seq[String] = Nil,
+      distAs: Option[String] = None): String = {
+    val cols = (keys ++ carry).mkString(", ")
+    val minDist = distAs.fold("")(d => s", min(mdr) AS $d")
+    s"""SELECT $cols, min(cid)::INT AS $cidAs$minDist FROM (
+       |  SELECT $cols, cid, dr, min(dr) OVER (PARTITION BY ${keys.mkString(", ")}) AS mdr FROM (
+       |    SELECT ${(keys ++ carry).map("e." + _).mkString(", ")}, c.cid,
+       |           ${dist("e", "c")} AS dr
+       |    FROM $src e CROSS JOIN $centers c))
+       |WHERE dr = mdr GROUP BY $cols""".stripMargin
+  }
+
+  /** [[argminSql]] of an embeddings-shaped `srcRel` (vec_id, embedding)
+    * against the list column `centerCol` of `centersRel`: the list form
+    * every 64-d oracle assigns with. */
   private[operators] def assignSqlFor(centersRel: String, centerCol: String,
       dist: (String, String) => String,
       srcRel: String = "embeddings"): String =
-    s"""SELECT vec_id, min(cid)::INT AS cluster_id FROM (
-       |  SELECT vec_id, cid, dr, min(dr) OVER (PARTITION BY vec_id) AS mdr FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           ${dist("e.embedding", s"c.$centerCol")} AS dr
-       |    FROM $srcRel e CROSS JOIN $centersRel c))
-       |WHERE dr = mdr GROUP BY vec_id""".stripMargin
+    argminSql(srcRel, Seq("vec_id"), centersRel,
+      (e, c) => dist(s"$e.embedding", s"$c.$centerCol"))
 
   /** Shared frozen-center assignment SQL. */
   private lazy val assignSql: String =
     assignSqlFor(frozenCentersSql(), "embedding", VectorSql.sqDist)
 
-  /** The 64 snapped per-dimension means of a recompute step —
-    * rIeee@12 mirrors lloydStep's snap12 bit-for-bit (see its doc). */
-  private[operators] def snappedCentroidSql: String =
-    (1 to DIM).map(i => VectorSql.rIeee(s"avg(e.embedding[$i]::DOUBLE)", 12))
-      .mkString(",\n         ")
+  /** Squared Euclidean distance over the scalar columns `xs` of rows `p`
+    * and `c` — the column form of `VectorSql.sqDist`. */
+  private def colSqDist(xs: Seq[String])(p: String, c: String): String =
+    xs.map(x => s"($p.$x-$c.$x)*($p.$x-$c.$x)").mkString(" + ")
 
-  /** CTE chain training `k` centroid cells with `iters` unrolled snap12
-    * Lloyd iterations from the frozen seeds — the DuckDB mirror of
-    * `lloydStep(…lloydStep(pts, frozenCenters(k))…)`. The final relation is
-    * `c$iters(cid, cv)`. A cell that empties carries its previous center
-    * via the LEFT JOIN + coalesce, exactly lloydStep's zero-count branch
-    * (k=16 cells CAN empty — e.g. a
-    * duplicate-point seed loses the low-cid tiebreak and starts with zero
-    * members — unlike the verified-nonempty k=4 unroll above). */
-  private[operators] def trainedCellsSqlCtes(k: Int, iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      val prev = s"c${i - 1}"
-      val prevCv =
-        if (i == 1) s"$prev.embedding::DOUBLE[]" else s"$prev.cv"
-      val prevCol = if (i == 1) "embedding" else "cv"
-      s"""a$i AS (${assignSqlFor(prev, prevCol, VectorSql.sqDist)}),
-         |c$i AS (
-         |  SELECT $prev.cid, coalesce(n.cv, $prevCv) AS cv
-         |  FROM $prev LEFT JOIN (
-         |    SELECT a.cluster_id AS cid,
-         |           list_value($snappedCentroidSql) AS cv
-         |    FROM a$i a JOIN embeddings e ON a.vec_id = e.vec_id
-         |    GROUP BY a.cluster_id) n USING (cid))""".stripMargin
-    }
-    (s"c0 AS ${frozenCentersSql(k)}" +: steps).mkString(",\n")
+  /** The SQL twin of [[lloydStep]]'s center update: every center of
+    * `prev` moves to the means of its members, grouped from `members` by
+    * `memberCid`, and a center with no members keeps its previous value
+    * through the LEFT JOIN + coalesce — lloydStep's zero-count branch.
+    * `cols` holds (column, previous value, snapped mean) per output
+    * column. */
+  private def centerStepSql(prev: String, members: String,
+      memberCid: String, cols: Seq[(String, String, String)]): String = {
+    val kept = cols.map { case (c, old, _) => s"coalesce(n.$c, $old) AS $c" }
+    val means = cols.map { case (c, _, mean) => s"$mean AS $c" }
+    s"""SELECT $prev.cid, ${kept.mkString(", ")}
+       |  FROM $prev LEFT JOIN (
+       |    SELECT $memberCid AS cid,
+       |           ${means.mkString(", ")}
+       |    FROM $members
+       |    GROUP BY $memberCid) n USING (cid)""".stripMargin
   }
+
+  /** [[centerStepSql]] of a list-form center set: `cv` moves to the 64
+    * rIeee@12 means of its members' `e.embedding`, which mirror
+    * lloydStep's snap12 bit for bit (see its doc). */
+  private[operators] def cvStepSql(prev: String, prevCv: String,
+      members: String, memberCid: String): String =
+    centerStepSql(prev, members, memberCid, Seq(("cv", prevCv,
+      (1 to DIM).map(i => VectorSql.rIeee(s"avg(e.embedding[$i]::DOUBLE)", 12))
+        .mkString("list_value(", ",\n         ", ")"))))
+
+  /** `iters` unrolled snap12 Lloyd steps from the center relation
+    * `c0(cid, embedding)`: `a$i` assigns `src` to `c${i-1}` and `c$i`
+    * moves each center to its members' means — the twin of
+    * `lloydStep(…lloydStep(src, c0)…)`. Ends in `c$iters(cid, cv)`. */
+  private def snapStepsSql(iters: Int,
+      dist: (String, String) => String = VectorSql.sqDist,
+      src: String = "embeddings"): String =
+    (1 to iters).map { i =>
+      val prev = s"c${i - 1}"
+      val (prevCol, prevCv) =
+        if (i == 1) ("embedding", s"$prev.embedding::DOUBLE[]") else ("cv", s"$prev.cv")
+      s"""a$i AS (${assignSqlFor(prev, prevCol, dist, src)}),
+         |c$i AS (
+         |  ${cvStepSql(prev, prevCv, s"a$i a JOIN embeddings e ON a.vec_id = e.vec_id",
+              "a.cluster_id")})""".stripMargin
+    }.mkString(",\n")
+
+  /** CTE chain training `k` centroid cells with `iters` snap12 steps from
+    * the frozen seeds — the twin of [[trainedCells]] (`iters` = 2) and of
+    * every single-step query. The final relation is `c$iters(cid, cv)`.
+    * k=16 cells CAN empty (a duplicate-point seed loses the low-cid
+    * tiebreak and starts with zero members); [[centerStepSql]] carries
+    * them. */
+  private[operators] def trainedCellsSqlCtes(k: Int, iters: Int,
+      dist: (String, String) => String = VectorSql.sqDist): String =
+    s"c0 AS ${frozenCentersSql(k)},\n${snapStepsSql(iters, dist)}"
+
+  /** The SQL twin of [[greedySeeds]]: seed `r` is the first row `p` of
+    * `src` under `key(chosen seed CTEs, r)` — descending when `largest` —
+    * then `ties`, one `s$r` CTE per seed; `name(cid, cols…)` lists the
+    * seeds positionally (cid = pick order). */
+  private[operators] def greedySeedsSql(name: String, src: String,
+      cols: Seq[String], k: Int, largest: Boolean, ties: Seq[String])(
+      key: (Seq[String], Int) => String): String = {
+    val order = if (largest) "DESC" else "ASC"
+    val picks = (0 until k).map { r =>
+      val seeds = (0 until r).map(i => s"s$i")
+      s"""s$r AS (SELECT ${cols.map("p." + _).mkString(", ")}
+         |  FROM ${(s"$src p" +: seeds).mkString(", ")}
+         |  ORDER BY ${key(seeds, r)} $order, ${ties.map("p." + _).mkString(", ")}
+         |  LIMIT 1)""".stripMargin
+    }
+    val listed = (0 until k)
+      .map(r => s"SELECT $r AS cid, ${cols.mkString(", ")} FROM s$r")
+    (picks :+ listed.mkString(s"$name AS (", "\n  UNION ALL ", ")")).mkString(",\n")
+  }
+
+  /** `dist` from the seeding row `p` to its nearest chosen seed — the
+    * later-seed key of every farthest and ++ seeding. */
+  private[operators] def minToSql(seeds: Seq[String],
+      dist: (String, String) => String): String =
+    if (seeds.size == 1) dist("p", seeds.head)
+    else seeds.map(dist("p", _)).mkString("least(", ", ", ")")
+
+  /** The seeding queries' oracle: [[greedySeedsSql]] over the corpus,
+    * reported as (seed_rank, vec_id, l1_norm) — the twin of
+    * [[farthestSeeds]] / [[plusPlusSeeds]] as the queries report them. */
+  private def seedRanksSql(k: Int, largest: Boolean)(
+      key: (Seq[String], Int) => String): String =
+    s"""WITH pts AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |${greedySeedsSql("seeds", "pts", Seq("vec_id", "v"), k, largest, Seq("vec_id"))(key)}
+       |SELECT cid::INT AS seed_rank, vec_id, round(${VectorSql.l1("v")},4) AS l1_norm
+       |FROM seeds""".stripMargin
+
+  /** The SQL twin of [[farthestSeedsByContent]] over the scalar columns
+    * `xs` of `src`: first seed the max squared norm, each later seed the
+    * max squared distance to its nearest chosen seed, every tie by `xs`.
+    * Ends in `c0(cid, xs…)`. */
+  private def contentSeedsSql(src: String, xs: Seq[String], k: Int): String =
+    greedySeedsSql("c0", src, xs, k, largest = true, xs) {
+      case (_, 0) => xs.map(x => s"p.$x*p.$x").mkString(" + ")
+      case (seeds, _) => minToSql(seeds, colSqDist(xs))
+    }
+
+  /** The SQL twin of [[purityOf]]: majority-label purity per cluster of
+    * the relation `assigned(cluster_id, label, …)`, ties to the larger
+    * label. */
+  private def purityOfSql(assigned: String, label: String,
+      top: String): String =
+    s"""SELECT cluster_id, n_points, $top,
+       |       round(top_cnt::DOUBLE / n_points, 4) AS purity
+       |FROM (SELECT cluster_id, $label AS $top, cnt AS top_cnt,
+       |             sum(cnt) OVER (PARTITION BY cluster_id)::BIGINT AS n_points,
+       |             row_number() OVER (PARTITION BY cluster_id
+       |                                ORDER BY cnt DESC, $label DESC) AS rn
+       |      FROM (SELECT cluster_id, $label, count(*) AS cnt
+       |            FROM $assigned GROUP BY cluster_id, $label))
+       |WHERE rn = 1""".stripMargin
+
+  /** [[purityOfSql]] of an embeddings assignment `asg(vec_id, cluster_id)`
+    * labeled by each vector's document lang: a `j` CTE, then the vote. */
+  private def langPuritySql(asg: String): String =
+    s"""j AS (SELECT a.cluster_id, d.lang
+       |      FROM ($asg) a JOIN documents d ON a.vec_id = d.doc_id)
+       |${purityOfSql("j", "lang", "top_lang")}""".stripMargin
+
+  /** The SQL twin of [[assignStats]]: per-cluster count and first-4-
+    * dimension means of the corpus assigned to `centers`' `centerCol`. */
+  private def assignStatsSql(centers: String, centerCol: String,
+      dist: (String, String) => String): String =
+    s"""SELECT a.cluster_id, count(*)::BIGINT AS n_points,
+       |       ${(1 to 4).map(i => s"(round(avg(e.embedding[$i]::DOUBLE),4) + 0) AS d${i - 1}")
+              .mkString(",\n       ")}
+       |FROM (${assignSqlFor(centers, centerCol, dist)}) a JOIN embeddings e ON a.vec_id = e.vec_id
+       |GROUP BY a.cluster_id""".stripMargin
 
   /** Full DuckDB mirror of the [[lloyd]] LOOP — cap + tolerance, not a
     * fixed trip count: `maxIter` snap12 steps unroll via
@@ -1255,7 +1351,10 @@ object KMeansOps {
   /** The flagship loop's oracle CTE chain through the final per-vector
     * assignment relation `asg(vec_id, cluster_id, mdr)` — factored from
     * [[lloydLoopSql]] so consumers of the trained assignment
-    * (`cluster_topics`) share the EXACT loop the flagship oracle runs. */
+    * (`cluster_topics`) share the EXACT loop the flagship oracle runs.
+    * `js` is the trip rule (the first step that moved less than `tol`,
+    * else `maxIter`) and `cf` the centers after it; KMeansSpec pins both
+    * rules on the Scala side. */
   private[operators] def lloydAssignSqlCtes(k: Int, maxIter: Int,
       tol: Double): String = {
     import graft.functions.{VectorSql => V}
@@ -1272,33 +1371,45 @@ object KMeansOps {
        |mv AS ($mv),
        |js AS (SELECT coalesce(min(it), $maxIter) AS j FROM mv WHERE m < $tol),
        |cf AS ($fin),
-       |asg AS (
-       |  SELECT vec_id, min(cid)::INT AS cluster_id, min(mdr) AS mdr FROM (
-       |    SELECT vec_id, cid, dr, min(dr) OVER (PARTITION BY vec_id) AS mdr FROM (
-       |      SELECT e.vec_id, c.cid, ${V.sqDist("e.embedding", "c.cv")} AS dr
-       |      FROM embeddings e CROSS JOIN cf c))
-       |  WHERE dr = mdr GROUP BY vec_id)""".stripMargin
+       |asg AS (${argminSql("embeddings", Seq("vec_id"), "cf",
+                (e, c) => V.sqDist(s"$e.embedding", s"$c.cv"), distAs = Some("mdr"))})""".stripMargin
   }
 
-  /** DuckDB mirror of kmeans_reference_data (+`_100k`). The staged files
-    * are COMMITTED fixtures, so the tol+cap loop's trip count over each is
-    * a fixed constant — measured per file (5 = the cap for the 10,000-point
-    * file; the 100k constant is measured and pinned by KMeansSpec) — and
-    * the oracle unrolls exactly that many snap12 steps; no early-stop CASE
-    * needed because the input can never vary (unlike lloydLoopSql, whose
-    * input scales with sfDir). Content-keyed throughout: the files ship no
-    * row ids, so every argmin/argmax breaks ties by (x, y) — a total order
-    * because both files hold only distinct rows (staged-fixtures spec). */
+  /** One-step Lloyd from the frozen k=4 seeds under `dist`, then the
+    * count + first-4-means projection: the twin of kmeans_lloyd_2iter,
+    * kmeans_lloyd_manhattan and kmeans_fit_frozen. The k=4 frozen seeds
+    * never empty on the fixture, but two seeds sharing an embedding WOULD
+    * empty the higher cid, which [[centerStepSql]] carries exactly as
+    * lloydStep does (round-7 ADVICE: a fresh-centers-only step would drop
+    * it). */
+  private def lloydUnrollSql(dist: (String, String) => String): String =
+    s"""WITH ${trainedCellsSqlCtes(K, 1, dist)}
+       |${assignStatsSql("c1", "cv", dist)}""".stripMargin
+
+  /** One DuckDB reader for the committed CSV fixtures: header-less, every
+    * column's type spelled out (no auto-detection). */
+  private def csvSql(path: String, cols: Seq[(String, String)]): String =
+    s"SELECT ${cols.map(_._1).mkString(", ")} FROM read_csv('$path', " +
+      s"header=false, columns={${cols.map { case (c, t) => s"'$c': '$t'" }.mkString(", ")}})"
+
+  /** A reference points file as (x, y) DOUBLE rows. */
+  private def refPointsSql(path: String): String =
+    csvSql(path, Seq("x" -> "DOUBLE", "y" -> "DOUBLE"))
+
   /** Shared coreset fragment — ONE definition feeding the `kmeans_coreset`
     * oracle and the loop oracle's input CTE, so the two cannot drift. */
   private def coresetSql: String =
     s"""SELECT floor(x)::BIGINT AS cell_x, floor(y)::BIGINT AS cell_y,
        |       count(*)::BIGINT AS weight,
-       |       ${graft.functions.VectorSql.rIeee("sum(x) / count(*)", 6)} AS cx,
-       |       ${graft.functions.VectorSql.rIeee("sum(y) / count(*)", 6)} AS cy
-       |FROM (SELECT column0 AS x, column1 AS y
-       |      FROM read_csv('$refPointsPath', header=false))
+       |       ${VectorSql.rIeee("sum(x) / count(*)", 6)} AS cx,
+       |       ${VectorSql.rIeee("sum(y) / count(*)", 6)} AS cy
+       |FROM (${refPointsSql(refPointsPath)})
        |GROUP BY cell_x, cell_y""".stripMargin
+
+  /** The SQL twin of [[divHalfAway]]: round-half-away integer division on
+    * |a| (DuckDB `//` truncates toward zero). */
+  private def divHalfAwaySql(a: String, b: String): String =
+    s"(CASE WHEN ($a) < 0 THEN -1 ELSE 1 END * ((2 * abs($a) + ($b)) // (2 * ($b))))"
 
   /** DuckDB mirror of [[minibatch]] — the 4-trip Sculley loop unrolled:
     * pq quantizes once (the same floor(x·1e6+0.5) IEEE steps), each trip
@@ -1314,15 +1425,9 @@ object KMeansOps {
     val V = VectorSql
     def qList(e: String) =
       s"list_transform($e::DOUBLE[], x -> floor(x * 1000000 + 0.5)::BIGINT)"
-    def divHA(a: String, b: String) =
-      s"(CASE WHEN ($a) < 0 THEN -1 ELSE 1 END * ((2 * abs($a) + ($b)) // (2 * ($b))))"
     def assign(name: String, src: String, centers: String) =
-      s"""$name AS (SELECT vec_id, min(cid)::INT AS cid, min(dr) AS dr FROM (
-         |  SELECT p.vec_id, c.cid, ${V.sqDist("p.q", "c.cv")} AS dr,
-         |         min(${V.sqDist("p.q", "c.cv")})
-         |           OVER (PARTITION BY p.vec_id) AS mdr
-         |  FROM $src p CROSS JOIN $centers c)
-         |WHERE dr = mdr GROUP BY vec_id)""".stripMargin
+      s"$name AS (${argminSql(src, Seq("vec_id"), centers,
+        (p, c) => V.sqDist(s"$p.q", s"$c.cv"), "cid", distAs = Some("dr"))})"
     val sb = new StringBuilder
     sb.append("WITH pq AS MATERIALIZED (SELECT vec_id, " +
       s"${qList("embedding")} AS q FROM embeddings),\n")
@@ -1339,7 +1444,7 @@ object KMeansOps {
         |FROM a$t a JOIN b$t p USING (vec_id) GROUP BY a.cid),
         |""".stripMargin)
       val updList = (1 to DIM).map(i =>
-        s"(c.cv[$i] + ${divHA(s"u.sv[$i] - u.m * c.cv[$i]", "c.n + u.m")})::BIGINT")
+        s"(c.cv[$i] + ${divHalfAwaySql(s"u.sv[$i] - u.m * c.cv[$i]", "c.n + u.m")})::BIGINT")
         .mkString(", ")
       sb.append(s"""c$t AS MATERIALIZED (SELECT c.cid,
         |  CASE WHEN u.m IS NULL THEN c.cv ELSE list_value($updList) END AS cv,
@@ -1361,95 +1466,60 @@ object KMeansOps {
     * same exact integer micro-unit arithmetic (round(rep·1e6) ints,
     * integer squared distances, the identical round-half-away mean update
     * of [[divHalfAway]]), so both engines walk a bit-identical trajectory
-    * with no tolerance machinery. */
+    * with no tolerance machinery. Its update is the weighted integer
+    * mean, not the snap12 step, and the fixture never empties a cluster
+    * (coresetLloyd requires it), so it carries no previous center. */
   private def coresetLloydSql: String = {
-    val sb = new StringBuilder
-    sb.append(s"WITH cs AS (\n$coresetSql),\n")
-    sb.append("csm AS (SELECT round(cx * 1000000)::BIGINT AS x, " +
-      "round(cy * 1000000)::BIGINT AS y, weight AS w FROM cs),\n")
-    sb.append("s0 AS (SELECT x, y FROM csm ORDER BY x*x + y*y DESC, x, y LIMIT 1)")
-    for (r <- 1 until K) {
-      val prev = (0 until r).map(i => s"s$i")
-      val md = prev
-        .map(q => s"(m.x-$q.x)*(m.x-$q.x)+(m.y-$q.y)*(m.y-$q.y)")
-        .mkString("least(", ", ", ")")
-      sb.append(s""",
-        |s$r AS (SELECT m.x, m.y FROM csm m, ${prev.mkString(", ")}
-        |        ORDER BY $md DESC, m.x, m.y LIMIT 1)""".stripMargin)
-    }
-    sb.append(",\n" + (0 until K).map(i => s"SELECT $i AS cid, x, y FROM s$i")
-      .mkString("c0 AS (", " UNION ALL ", ")"))
+    val xy = Seq("x", "y")
     def assign(name: String, centers: String) =
-      s"""$name AS (SELECT x, y, w, min(cid)::INT AS cid FROM (
-         |  SELECT m.x, m.y, m.w AS w, c.cid,
-         |         (m.x-c.x)*(m.x-c.x)+(m.y-c.y)*(m.y-c.y) AS d,
-         |         min((m.x-c.x)*(m.x-c.x)+(m.y-c.y)*(m.y-c.y))
-         |           OVER (PARTITION BY m.x, m.y) AS md
-         |  FROM csm m CROSS JOIN $centers c)
-         |  WHERE d = md GROUP BY x, y, w)""".stripMargin
-    for (t <- 1 to CORESET_TRIPS) {
-      sb.append(",\n" + assign(s"a$t", s"c${t - 1}"))
-      // round-half-away division on |sum| (DuckDB // truncates toward
-      // zero — the sign-symmetric form matches the Scala divHalfAway)
-      def mean(col: String) =
-        s"(CASE WHEN sum(w * $col) < 0 THEN -1 ELSE 1 END * " +
-          s"((2 * abs(sum(w * $col)) + sum(w)) // (2 * sum(w))))::BIGINT"
-      sb.append(s""",
-        |c$t AS (SELECT cid,
-        |  ${mean("x")} AS x,
-        |  ${mean("y")} AS y
-        |FROM a$t GROUP BY cid)""".stripMargin)
+      s"$name AS (${argminSql("csm", xy, centers, colSqDist(xy), "cid", carry = Seq("w"))})"
+    def mean(c: String) = s"${divHalfAwaySql(s"sum(w * $c)", "sum(w)")}::BIGINT"
+    val trips = (1 to CORESET_TRIPS).map { t =>
+      s"""${assign(s"a$t", s"c${t - 1}")},
+         |c$t AS (SELECT cid, ${mean("x")} AS x, ${mean("y")} AS y
+         |  FROM a$t GROUP BY cid)""".stripMargin
     }
-    sb.append(",\n" + assign("af", s"c$CORESET_TRIPS"))
-    sb.append(s"""
-      |SELECT a.cid AS cluster_id, count(*)::BIGINT AS n_cells,
-      |       sum(a.w)::BIGINT AS weight,
-      |       (c.x / 1000000.0) AS cx, (c.y / 1000000.0) AS cy
-      |FROM af a JOIN c$CORESET_TRIPS c USING (cid)
-      |GROUP BY a.cid, c.x, c.y""".stripMargin)
-    sb.toString
+    s"""WITH cs AS (
+       |$coresetSql),
+       |csm AS (SELECT round(cx * 1000000)::BIGINT AS x,
+       |               round(cy * 1000000)::BIGINT AS y, weight AS w FROM cs),
+       |${contentSeedsSql("csm", xy, K)},
+       |${trips.mkString(",\n")},
+       |${assign("af", s"c$CORESET_TRIPS")}
+       |SELECT a.cid AS cluster_id, count(*)::BIGINT AS n_cells,
+       |       sum(a.w)::BIGINT AS weight,
+       |       (c.x / 1000000.0) AS cx, (c.y / 1000000.0) AS cy
+       |FROM af a JOIN c$CORESET_TRIPS c USING (cid)
+       |GROUP BY a.cid, c.x, c.y""".stripMargin
   }
 
-  private def refLloydSql(iters: Int, path: String = refPointsPath): String = {
-    import graft.functions.{VectorSql => V}
-    def sqd(p: String, c: String) =
-      s"($p.x-$c.x)*($p.x-$c.x)+($p.y-$c.y)*($p.y-$c.y)"
-    val laterSeeds = (1 to 3).map { r =>
-      val prev = (0 until r).map(i => s"s$i")
-      val md = if (r == 1) sqd("p", "s0")
-        else s"least(${prev.map(q => sqd("p", q)).mkString(", ")})"
-      s"""s$r AS (SELECT p.x, p.y FROM refpts p, ${prev.mkString(", ")}
-         |        ORDER BY $md DESC, p.x, p.y LIMIT 1)""".stripMargin
-    }
-    val c0 = (0 until K).map(i => s"SELECT $i AS cid, x, y FROM s$i")
-      .mkString("c0 AS (", " UNION ALL ", ")")
-    def assignCte(name: String, centers: String, outCid: String,
-        carryDist: Boolean) = {
-      val distSel = if (carryDist) ", min(mdr) AS mdr" else ""
-      s"""$name AS (SELECT x, y, min(cid)::INT AS $outCid$distSel FROM (
-         |    SELECT x, y, cid, dr, min(dr) OVER (PARTITION BY x, y) AS mdr FROM (
-         |      SELECT p.x, p.y, c.cid, ${sqd("p", "c")} AS dr
-         |      FROM refpts p CROSS JOIN $centers c))
-         |  WHERE dr = mdr GROUP BY x, y)""".stripMargin
-    }
-    val steps = (1 to iters).map { i =>
+  /** Content-keyed farthest seeds over the scalar columns `xs` of `src`,
+    * then `iters` snap12 steps: the twin of [[lloydStep]] iterated from
+    * [[farthestSeedsByContent]]. Ends in `c$iters(cid, xs…)`. */
+  private def contentLloydSql(src: String, xs: Seq[String], k: Int,
+      iters: Int): String =
+    (contentSeedsSql(src, xs, k) +: (1 to iters).map { i =>
       val prev = s"c${i - 1}"
-      s"""${assignCte(s"a$i", prev, "cid", carryDist = false)},
-         |c$i AS (SELECT $prev.cid, coalesce(n.x, $prev.x) AS x,
-         |               coalesce(n.y, $prev.y) AS y
-         |        FROM $prev LEFT JOIN (
-         |          SELECT cid, ${V.rIeee("avg(x)", 12)} AS x,
-         |                 ${V.rIeee("avg(y)", 12)} AS y
-         |          FROM a$i GROUP BY cid) n USING (cid))""".stripMargin
-    }
-    s"""WITH refpts AS (
-       |  SELECT column0 AS x, column1 AS y FROM read_csv('$path',
-       |    header=false, columns={'column0': 'DOUBLE', 'column1': 'DOUBLE'})),
-       |s0 AS (SELECT x, y FROM refpts ORDER BY x*x + y*y DESC, x, y LIMIT 1),
-       |${laterSeeds.mkString(",\n")},
-       |$c0,
-       |${steps.mkString(",\n")},
-       |${assignCte("af", s"c$iters", "cluster_id", carryDist = true)}
+      val step = centerStepSql(prev, s"a$i", "cid",
+        xs.map(x => (x, s"$prev.$x", VectorSql.rIeee(s"avg($x)", 12))))
+      s"""a$i AS (${argminSql(src, xs, prev, colSqDist(xs), "cid")}),
+         |c$i AS ($step)""".stripMargin
+    }).mkString(",\n")
+
+  /** DuckDB mirror of kmeans_reference_data (+`_100k`). The staged files
+    * are COMMITTED fixtures, so the tol+cap loop's trip count over each is
+    * a fixed constant — measured per file (5 = the cap for the 10,000-point
+    * file; the 100k constant is measured and pinned by KMeansSpec) — and
+    * the oracle unrolls exactly that many snap12 steps; no early-stop CASE
+    * needed because the input can never vary (unlike lloydLoopSql, whose
+    * input scales with sfDir). Content-keyed throughout: the files ship no
+    * row ids, so every argmin/argmax breaks ties by (x, y) — a total order
+    * because both files hold only distinct rows (staged-fixtures spec). */
+  private def refLloydSql(iters: Int, path: String = refPointsPath): String = {
+    val xy = Seq("x", "y")
+    s"""WITH refpts AS (${refPointsSql(path)}),
+       |${contentLloydSql("refpts", xy, K, iters)},
+       |af AS (${argminSql("refpts", xy, s"c$iters", colSqDist(xy), distAs = Some("mdr"))})
        |SELECT cluster_id, count(*)::BIGINT AS n_points,
        |       round(sqrt(avg(mdr)), 4) AS rmse,
        |       (round(avg(x), 4) + 0) AS cx, (round(avg(y), 4) + 0) AS cy
@@ -1458,139 +1528,22 @@ object KMeansOps {
 
   /** DuckDB mirror of the [[uciEvalQuery]] flow for any of the three UCI
     * datasets: unsupervised k-center fit on the unlabeled train split
-    * (content-keyed farthest seeds, unrolled k-1 rounds, + one snap12
-    * step), held-out assignment of the labeled test split, majority-label
-    * purity — the same CTE shapes as refLloydSql at the dataset's native
+    * (content-keyed farthest seeds + one snap12 step), held-out
+    * assignment of the labeled test split, majority-label purity — the
+    * reference-file oracle's shapes at the dataset's native
     * dimensionality. No split holds duplicate feature tuples (the
     * staged-fixtures spec verifies every staged file, TRAIN and TEST
-    * splits both), so feature tuples are
-    * valid argmin keys; `labelDuck` is INTEGER (HTRU_2, seeds) or VARCHAR
-    * (User-Modeling — label comparisons are binary-collation in both
-    * engines). */
+    * splits both), so feature tuples are valid argmin keys; `labelDuck`
+    * is INTEGER (HTRU_2, seeds) or VARCHAR (User-Modeling — label
+    * comparisons are binary-collation in both engines). */
   private def uciEvalSqlFor(trainPath: String, testPath: String, k: Int,
       dim: Int, labelDuck: String): String = {
-    import graft.functions.{VectorSql => V}
     val xs = (1 to dim).map(i => s"x$i")
-    val cols = xs.mkString(", ")
-    val pcols = xs.map(x => s"p.$x").mkString(", ")
-    val colsSpec = xs.map(x => s"'$x': 'DOUBLE'").mkString(", ")
-    def sqd(p: String, c: String) =
-      xs.map(x => s"($p.$x-$c.$x)*($p.$x-$c.$x)").mkString(" + ")
-    val laterSeeds = (1 until k).map { r =>
-      val prev = (0 until r).map(i => s"s$i")
-      val md = if (r == 1) sqd("p", "s0")
-        else s"least(${prev.map(q => sqd("p", q)).mkString(", ")})"
-      s"""s$r AS (SELECT $pcols FROM tr p, ${prev.mkString(", ")}
-         |       ORDER BY $md DESC, $pcols LIMIT 1)""".stripMargin
-    }
-    val c0 = (0 until k).map(i => s"SELECT $i AS cid, $cols FROM s$i")
-      .mkString("c0 AS (", "\n       UNION ALL ", ")")
-    s"""WITH tr AS (SELECT $cols FROM read_csv('$trainPath',
-       |  header=false, columns={$colsSpec})),
-       |te AS (SELECT $cols, label FROM read_csv('$testPath',
-       |  header=false, columns={$colsSpec, 'label': '$labelDuck'})),
-       |s0 AS (SELECT $cols FROM tr
-       |       ORDER BY ${xs.map(x => s"$x*$x").mkString(" + ")} DESC, $cols LIMIT 1),
-       |${laterSeeds.mkString(",\n")},
-       |$c0,
-       |a1 AS (SELECT $cols, min(cid)::INT AS cid FROM (
-       |    SELECT $cols, cid, dr, min(dr) OVER (PARTITION BY $cols) AS mdr FROM (
-       |      SELECT $pcols, c.cid, ${sqd("p", "c")} AS dr
-       |      FROM tr p CROSS JOIN c0 c))
-       |  WHERE dr = mdr GROUP BY $cols),
-       |c1 AS (SELECT c0.cid,
-       |       ${xs.map(x => s"coalesce(n.$x, c0.$x) AS $x").mkString(", ")}
-       |       FROM c0 LEFT JOIN (
-       |         SELECT cid, ${xs.map(x => V.rIeee(s"avg($x)", 12) + s" AS $x").mkString(", ")}
-       |         FROM a1 GROUP BY cid) n USING (cid)),
-       |a2 AS (SELECT label, min(cid)::INT AS cluster_id FROM (
-       |    SELECT $cols, label, cid, dr, min(dr) OVER (PARTITION BY $cols) AS mdr FROM (
-       |      SELECT $pcols, p.label, c.cid, ${sqd("p", "c")} AS dr
-       |      FROM te p CROSS JOIN c1 c))
-       |  WHERE dr = mdr GROUP BY $cols, label),
-       |cnt AS (SELECT cluster_id, label, count(*) AS cnt
-       |        FROM a2 GROUP BY cluster_id, label)
-       |SELECT cluster_id, n_points, top_label,
-       |       round(top_cnt::DOUBLE / n_points, 4) AS purity
-       |FROM (SELECT cluster_id, label AS top_label, cnt AS top_cnt,
-       |             sum(cnt) OVER (PARTITION BY cluster_id)::BIGINT AS n_points,
-       |             row_number() OVER (PARTITION BY cluster_id
-       |                                ORDER BY cnt DESC, label DESC) AS rn
-       |      FROM cnt)
-       |WHERE rn = 1""".stripMargin
-  }
-
-  private def lloydUnrollSql(dist: (String, String) => String): String = {
-    val centroid = snappedCentroidSql
-    // c1 carries an emptied cluster's previous center via LEFT JOIN +
-    // coalesce — the same zero-count branch lloydStep takes, and the same
-    // SQL form as cluster_eval_holdout / trainedCellsSqlCtes. The k=4 frozen seeds never empty on the fixture
-    // (verified at all tested SFs), but two seeds sharing an embedding
-    // WOULD empty the higher cid, and a fresh-centers-only c1 would then
-    // silently drop it while Spark carries it (round-7 ADVICE).
-    s"""WITH c0 AS ${frozenCentersSql()},
-       |a1 AS (${assignSqlFor("c0", "embedding", dist)}),
-       |c1 AS (
-       |  SELECT c0.cid, coalesce(n.cv, c0.embedding::DOUBLE[]) AS cv
-       |  FROM c0 LEFT JOIN (
-       |    SELECT a.cluster_id AS cid,
-       |           list_value($centroid) AS cv
-       |    FROM a1 a JOIN embeddings e ON a.vec_id = e.vec_id
-       |    GROUP BY a.cluster_id) n USING (cid)),
-       |a2 AS (${assignSqlFor("c1", "cv", dist)})
-       |SELECT a.cluster_id, count(*)::BIGINT AS n_points,
-       |       (round(avg(e.embedding[1]::DOUBLE),4) + 0) AS d0,
-       |       (round(avg(e.embedding[2]::DOUBLE),4) + 0) AS d1,
-       |       (round(avg(e.embedding[3]::DOUBLE),4) + 0) AS d2,
-       |       (round(avg(e.embedding[4]::DOUBLE),4) + 0) AS d3
-       |FROM a2 a JOIN embeddings e ON a.vec_id = e.vec_id
-       |GROUP BY a.cluster_id""".stripMargin
-  }
-
-  /** DuckDB: squared distance from `p.v` to the nearest of the chosen
-    * seed CTEs — the min-to-set term both unrolled seedings order by. */
-  private def minTo(seeds: Seq[String]): String = {
-    import graft.functions.{VectorSql => V}
-    if (seeds.size == 1) V.sqDist("p.v", s"${seeds.head}.v")
-    else s"least(${seeds.map(s0 => V.sqDist("p.v", s"$s0.v")).mkString(", ")})"
-  }
-
-  /** Unrolled farthest-point seeding (k=4, L1 first seed): each round is a
-    * top-1 over the min-distance-to-chosen-set, chained through CTEs. */
-  private lazy val farthestSql: String = {
-    import graft.functions.{VectorSql => V}
-    val rounds = (1 until K).map { r =>
-      val prev = (0 until r).map(i => s"s$i")
-      s"""s$r AS (SELECT p.vec_id, p.v FROM pts p, ${prev.mkString(", ")}
-         |  ORDER BY ${minTo(prev)} DESC, p.vec_id LIMIT 1)""".stripMargin
-    }
-    val outs = (0 until K).map { r =>
-      s"SELECT $r::INT AS seed_rank, vec_id, round(${V.l1("v")},4) AS l1_norm FROM s$r"
-    }
-    s"""WITH pts AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |s0 AS (SELECT vec_id, v FROM pts ORDER BY ${V.l1("v")} DESC, vec_id LIMIT 1),
-       |${rounds.mkString(",\n")}
-       |${outs.mkString("\nUNION ALL\n")}""".stripMargin
-  }
-
-  /** Unrolled k-means++ seeding (k=8): per round, one exponential-race
-    * weighted draw with the round index mixed into the per-id uniform —
-    * exactly plusPlusInit's expressions. */
-  private lazy val plusPlusSql: String = {
-    import graft.functions.{VectorSql => V}
-    def u(r: Int): String = V.roundUniform("p.vec_id", r)
-    val rounds = (1 until FLAGSHIP_K).map { r =>
-      val prev = (0 until r).map(i => s"s$i")
-      s"""s$r AS (SELECT p.vec_id, p.v FROM pts p, ${prev.mkString(", ")}
-         |  ORDER BY -ln(${u(r)}) / greatest(${minTo(prev)}, 1e-300) ASC,
-         |           p.vec_id LIMIT 1)""".stripMargin
-    }
-    val outs = (0 until FLAGSHIP_K).map { r =>
-      s"SELECT $r::INT AS seed_rank, vec_id, round(${V.l1("v")},4) AS l1_norm FROM s$r"
-    }
-    s"""WITH pts AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |s0 AS (SELECT vec_id, v FROM pts ORDER BY ${V.perm("vec_id")}, vec_id LIMIT 1),
-       |${rounds.mkString(",\n")}
-       |${outs.mkString("\nUNION ALL\n")}""".stripMargin
+    val feats = xs.map(_ -> "DOUBLE")
+    s"""WITH tr AS (${csvSql(trainPath, feats)}),
+       |te AS (${csvSql(testPath, feats :+ ("label" -> labelDuck))}),
+       |${contentLloydSql("tr", xs, k, 1)},
+       |a2 AS (${argminSql("te", xs, "c1", colSqDist(xs), carry = Seq("label"))})
+       |${purityOfSql("a2", "label", "top_label")}""".stripMargin
   }
 }

@@ -660,7 +660,7 @@ object SimilarityOps {
     * nearest-frozen-center by the delete/append parity specs — so one
     * lloydStep recomputes exactly the per-current-cell means. An
     * emptied cell keeps its old centroid (lloydStep's contract),
-    * mirrored by the oracle's LEFT JOIN + coalesce. */
+    * mirrored by the oracle's [[KMeansOps.centerStepSql]] carry. */
   private[graft] def ensureIvfRefreshed(s: SparkSession, d: String): String =
     ivfLayout(d, "-refreshed") { tmp =>
       val churn = s.read.parquet(s"${ensureIvfDeleted(s, d)}/vectors")
@@ -1923,11 +1923,7 @@ object SimilarityOps {
        |  SELECT d.vec_id, d.embedding, ad.cluster_id AS cell
        |  FROM delta d JOIN ad ON d.vec_id = ad.vec_id),
        |fresh AS (
-       |  SELECT c2.cid, coalesce(n.cv, c2.cv) AS cv
-       |  FROM c2 LEFT JOIN (
-       |    SELECT e.cell AS cid,
-       |           list_value(${KMeansOps.snappedCentroidSql}) AS cv
-       |    FROM pop e GROUP BY e.cell) n USING (cid)),
+       |  ${KMeansOps.cvStepSql("c2", "c2.cv", "pop e", "e.cell")}),
        |r AS (${KMeansOps.assignSqlFor("fresh", "cv", VectorSql.sqDist,
              "pop")})""".stripMargin
 
@@ -1955,53 +1951,37 @@ object SimilarityOps {
          |SELECT vec_id AS id, cluster_id AS cell FROM a""".stripMargin,
     // the frozen model, the same argmax hot cell (count DESC, cell —
     // both engines' tie rule), the two deterministic seeds (min-id
-    // member; farthest-from-it, max sqDist min-id ties), ONE snap12
-    // sub-step (assign → rIeee@12 per-dim means, empty-cell coalesce —
-    // lloydStep's contract), then the final member assignment; everyone
-    // outside the hot cell keeps their trained cell
-    "ivf_cell_split" -> {
-      val snapped = (1 to 64).map(i =>
-        graft.functions.VectorSql.rIeee(s"avg(m.v[$i])", 12))
-        .mkString(",\n           ")
+    // member; farthest-from-it, max sqDist min-id ties) through
+    // greedySeedsSql, ONE snap12 sub-step (argmin, then cvStepSql's
+    // snapped means with the empty-cell carry — lloydStep's contract),
+    // then the final member assignment; everyone outside the hot cell
+    // keeps their trained cell
+    "ivf_cell_split" ->
       s"""WITH ${KMeansOps.trainedCellsSqlCtes(NCELLS, 2)},
          |asg AS (${KMeansOps.assignSqlFor("c2", "cv", VectorSql.sqDist)}),
          |hot AS (SELECT cluster_id AS hcell FROM asg
          |        GROUP BY cluster_id
          |        ORDER BY count(*) DESC, cluster_id LIMIT 1),
-         |mem AS (SELECT e.vec_id, e.embedding::DOUBLE[] AS v
+         |mem AS (SELECT e.vec_id, e.embedding
          |        FROM embeddings e JOIN asg a USING (vec_id), hot
          |        WHERE a.cluster_id = hot.hcell),
-         |s1 AS (SELECT v FROM mem ORDER BY vec_id LIMIT 1),
-         |s2 AS (SELECT m.v FROM mem m, s1
-         |       ORDER BY ${VectorSql.sqDist("m.v", "s1.v")} DESC,
-         |                m.vec_id LIMIT 1),
-         |seeds(cid, cv) AS (
-         |  SELECT hot.hcell, s1.v FROM s1, hot
-         |  UNION ALL SELECT $NCELLS, s2.v FROM s2),
-         |sa AS (SELECT vec_id, min(cid)::INT AS scid FROM (
-         |    SELECT vec_id, cid, dr, min(dr) OVER (PARTITION BY vec_id)
-         |      AS mdr FROM (
-         |      SELECT m.vec_id, s.cid,
-         |             ${VectorSql.sqDist("m.v", "s.cv")} AS dr
-         |      FROM mem m CROSS JOIN seeds s))
-         |  WHERE dr = mdr GROUP BY vec_id),
-         |sc AS (SELECT s.cid, coalesce(n.cv, s.cv) AS cv
-         |       FROM seeds s LEFT JOIN (
-         |         SELECT sa.scid AS cid, list_value($snapped) AS cv
-         |         FROM sa JOIN mem m USING (vec_id)
-         |         GROUP BY sa.scid) n USING (cid)),
-         |fa AS (SELECT vec_id, min(cid)::INT AS cell FROM (
-         |    SELECT vec_id, cid, dr, min(dr) OVER (PARTITION BY vec_id)
-         |      AS mdr FROM (
-         |      SELECT m.vec_id, s.cid,
-         |             ${VectorSql.sqDist("m.v", "s.cv")} AS dr
-         |      FROM mem m CROSS JOIN sc s))
-         |  WHERE dr = mdr GROUP BY vec_id)
-         |SELECT vec_id AS id, cell FROM fa
+         |${KMeansOps.greedySeedsSql("g", "mem", Seq("embedding"), 2,
+              largest = true, Seq("vec_id")) {
+              case (_, 0) => "-p.vec_id"
+              case (seeds, _) => KMeansOps.minToSql(seeds,
+                (p, c) => VectorSql.sqDist(s"$p.embedding", s"$c.embedding"))
+            }},
+         |seeds AS (SELECT CASE WHEN g.cid = 0 THEN hot.hcell ELSE $NCELLS END
+         |                   AS cid, g.embedding
+         |          FROM g, hot),
+         |sa AS (${KMeansOps.assignSqlFor("seeds", "embedding", VectorSql.sqDist, "mem")}),
+         |sc AS (${KMeansOps.cvStepSql("seeds", "seeds.embedding::DOUBLE[]",
+                   "sa a JOIN mem e ON a.vec_id = e.vec_id", "a.cluster_id")}),
+         |fa AS (${KMeansOps.assignSqlFor("sc", "cv", VectorSql.sqDist, "mem")})
+         |SELECT vec_id AS id, cluster_id AS cell FROM fa
          |UNION ALL
          |SELECT a.vec_id, a.cluster_id AS cell
-         |FROM asg a, hot WHERE a.cluster_id != hot.hcell""".stripMargin
-    },
+         |FROM asg a, hot WHERE a.cluster_id != hot.hcell""".stripMargin,
     // the frozen model, the two argmin-population cells over the FULL
     // model domain (count ASC, cell — empty cells included via the LEFT
     // join), members relabeled to the surviving min id
@@ -2198,8 +2178,8 @@ object SimilarityOps {
          |FROM (SELECT unnest(range(0, $TABLES)) AS t) t, n""".stripMargin,
     // the refresh replayed end to end: churned population (base minus
     // the takedown, plus the assigned delta) at the frozen model, fresh
-    // per-cell snap12 means with the LEFT JOIN + coalesce empty-cell
-    // keep, then reassignment of the whole population to the fresh set
+    // per-cell snap12 means with cvStepSql's empty-cell carry, then
+    // reassignment of the whole population to the fresh set
     "ivf_index_refresh" ->
       s"""WITH $ivfRefreshCtes
          |SELECT vec_id AS id, cluster_id AS cell FROM r""".stripMargin,

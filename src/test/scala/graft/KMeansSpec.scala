@@ -47,6 +47,30 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  test("lloyd trip rules: tol = 0 runs maxIter steps; a converged restart stops after one") {
+    // the two rules the kmeans_lloyd oracle's `js`/`cf` CTEs replay
+    // (lloydAssignSqlCtes), and the op count of the kmeans_large benchmark
+    val pts = blobs.cache()
+    val init = KMeansOps.farthestInit(pts, 4, manhattanFirst = true)
+    val tol = 1e-6
+    val (converged, iters) = KMeansOps.lloyd(pts, init, maxIter = 20, tol)
+    assert(iters < 20, "the blob fixture must converge before the cap")
+    // tol = 0: `moved >= 0` always holds, so the loop runs every step even
+    // past convergence
+    val maxIter = iters + 3
+    assert(KMeansOps.lloyd(pts, init, maxIter, tol = 0.0)._2 === maxIter)
+    // restarted from its own converged centers: one step, which moves
+    // less than tol, and the loop returns that step's centers
+    val (again, restartIters) = KMeansOps.lloyd(pts, converged, 20, tol)
+    assert(restartIters === 1)
+    val step = KMeansOps.lloydStep(pts, converged)
+    val moved = converged.zip(step).map { case ((_, a), (_, b)) =>
+      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
+    }.max
+    assert(moved < tol, s"the restart step moved $moved")
+    assert(again.map(_._2.toSeq).toSeq === step.map(_._2.toSeq).toSeq)
+  }
+
   test("lloyd cost is monotonically non-increasing per iteration") {
     val pts = blobs.cache()
     var centers = KMeansOps.collectCenters(KMeansOps.sampleK(pts, 4))
@@ -134,8 +158,8 @@ class KMeansSpec extends SparkSpec {
   test("lloydStep carries an emptied cluster's previous center (dup seeds)") {
     // two IDENTICAL seeds: the low-cid argmin tiebreak drains cid 1 to zero
     // members, so the recompute must keep cid 1's previous center — the
-    // `fresh.getOrElse(cid, old)` branch, mirrored in SQL by the
-    // cluster_eval_holdout / trainedCells oracles' LEFT JOIN + coalesce
+    // zero-count branch, mirrored in SQL by the one center-step twin's
+    // LEFT JOIN + coalesce (KMeansOps.centerStepSql)
     // (round-6 ADVICE: "no cluster can empty" was not a proof — duplicated
     // seed points empty one).
     import spark.implicits._
