@@ -7,7 +7,8 @@ Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 With two arguments: for each query dumped by graft.Verify, load the Spark
 parquet result and the DuckDB oracle result, sort columns by name, sort rows,
 compare values (floats to 1e-9 after the engine-side rounding). Reports
-per-query row-count / schema / value match.
+per-query row-count / schema / value match and the seconds DuckDB spent on
+the oracle, then the total of those seconds and the script's wall time.
 
 With a third argument (the oracle_sql.json of another Verify run, say the
 parent commit's): compare the two oracle maps instead. The checkout path that
@@ -15,11 +16,13 @@ the reference-file oracles embed is normalised first; every entry whose SQL
 still differs is run on both sides in DuckDB over <sfDir>, against this
 checkout's copy of the reference files, and its typed rows (column names,
 column types, sorted values, floats exact) must be identical. No Spark dump
-is read, so any scale factor can be checked against one pair of dumps.
+is read, so any scale factor can be checked against one pair of dumps. Each
+differing entry's DuckDB seconds are printed for both sides, then each side's
+total and the script's wall time.
 
 NOT part of the shipped library.
 """
-import sys, json, glob, os, re
+import sys, json, glob, os, re, time
 import duckdb
 
 CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -66,9 +69,17 @@ def load_oracles(path):
 
 
 def typed_rows(con, sql):
+    """(typed columns, sorted rows, DuckDB seconds) of one oracle."""
+    t0 = time.perf_counter()
     rel = con.sql(sql.replace("<checkout>/", CHECKOUT + "/"))
-    return (list(zip(rel.columns, map(str, rel.types))),
-            norm_rows(rel.fetchall()))
+    rows = rel.fetchall()
+    secs = time.perf_counter() - t0
+    return list(zip(rel.columns, map(str, rel.types))), norm_rows(rows), secs
+
+
+def print_totals(t0, **sides):
+    print(" ".join(f"DuckDB {k} total {v:.1f} s," for k, v in sides.items())
+          + f" wall {time.perf_counter() - t0:.1f} s")
 
 
 def same_value(a, b):
@@ -78,15 +89,18 @@ def same_value(a, b):
 
 
 def compare_parent(sf_dir, out_dir, parent_json):
+    t0 = time.perf_counter()
     con = connect(sf_dir)
     mine = load_oracles(os.path.join(out_dir, "oracle_sql.json"))
     parent = load_oracles(parent_json)
     one_side = sorted(set(mine) ^ set(parent))
     moved = sorted(q for q in set(mine) & set(parent) if mine[q] != parent[q])
     bad = 0
+    total = {"parent": 0.0, "change": 0.0}
     for q in moved:
         try:
-            (pc, pr), (mc, mr) = typed_rows(con, parent[q]), typed_rows(con, mine[q])
+            pc, pr, ps = typed_rows(con, parent[q])
+            mc, mr, ms = typed_rows(con, mine[q])
         except Exception as e:
             bad += 1
             print(f"{q}  SQL_ERROR: {str(e)[:200]}")
@@ -103,20 +117,25 @@ def compare_parent(sf_dir, out_dir, parent_json):
                        f"ROWS_DIFFER row{diff} parent={pr[diff]} "
                        f"change={mr[diff]}")
         bad += not verdict.startswith("SAME_ROWS")
-        print(f"{q}  {verdict}")
+        total["parent"] += ps
+        total["change"] += ms
+        print(f"{q}  {verdict}  parent {ps:.2f} s, change {ms:.2f} s")
     for q in one_side:
         print(f"{q}  ONLY_IN_{'CHANGE' if q in mine else 'PARENT'}")
     print(f"\n{len(mine)} vs {len(parent)} oracles: "
           f"{len(set(mine) & set(parent)) - len(moved)} identical SQL, "
           f"{len(moved)} differ ({len(moved) - bad} same rows, {bad} not), "
           f"{len(one_side)} on one side only")
+    print_totals(t0, **total)
     return bad == 0 and not one_side
 
 
 def main(sf_dir, out_dir):
+    t0 = time.perf_counter()
     con = connect(sf_dir)
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
+    secs = {}
     dump_dirs = sorted(d for d in glob.glob(os.path.join(out_dir, "*"))
                        if os.path.isdir(d))
     for d in dump_dirs:
@@ -134,6 +153,7 @@ def main(sf_dir, out_dir):
         if name not in oracle:
             results[name] = f"ROWS_ONLY({len(got_rows)})"
             continue
+        t1 = time.perf_counter()
         try:
             exp_rel = con.sql(oracle[name])
             exp_types = dict(zip(exp_rel.columns, map(str, exp_rel.types)))
@@ -141,6 +161,8 @@ def main(sf_dir, out_dir):
         except Exception as e:
             results[name] = f"ORACLE_SQL_ERROR: {str(e)[:200]}"
             continue
+        finally:
+            secs[name] = time.perf_counter() - t1
         exp_cols = sorted(exp.columns)
         if exp_cols != got_cols:
             results[name] = f"SCHEMA_MISMATCH spark={got_cols} duck={exp_cols}"
@@ -171,9 +193,11 @@ def main(sf_dir, out_dir):
     n_ok = sum(1 for v in results.values() if v == "OK")
     n_rows_only = sum(1 for v in results.values() if v.startswith("ROWS_ONLY"))
     for k in sorted(results):
-        print(f"{k:<{width}}  {results[k]}")
+        duck = f"{secs[k]:8.2f} s" if k in secs else " " * 10
+        print(f"{k:<{width}}  {duck}  {results[k]}")
     print(f"\n{n_ok} OK, {n_rows_only} rows-only, "
           f"{len(results) - n_ok - n_rows_only} FAILING of {len(results)}")
+    print_totals(t0, oracle=sum(secs.values()))
 
 
 if __name__ == "__main__":

@@ -1221,7 +1221,11 @@ object KMeansOps {
   /** `iters` unrolled snap12 Lloyd steps from the center relation
     * `c0(cid, embedding)`: `a$i` assigns `src` to `c${i-1}` and `c$i`
     * moves each center to its members' means — the twin of
-    * `lloydStep(…lloydStep(src, c0)…)`. Ends in `c$iters(cid, cv)`. */
+    * `lloydStep(…lloydStep(src, c0)…)`. Ends in `c$iters(cid, cv)`.
+    * Every step is `AS MATERIALIZED`: DuckDB otherwise inlines each CTE
+    * at every reference, and `c$i` feeds both `a${i+1}` and `c${i+1}`
+    * (and the loop oracle's `mv`/`cf`), so the chain would re-expand
+    * exponentially in `iters`. */
   private def snapStepsSql(iters: Int,
       dist: (String, String) => String = VectorSql.sqDist,
       src: String = "embeddings"): String =
@@ -1229,8 +1233,8 @@ object KMeansOps {
       val prev = s"c${i - 1}"
       val (prevCol, prevCv) =
         if (i == 1) ("embedding", s"$prev.embedding::DOUBLE[]") else ("cv", s"$prev.cv")
-      s"""a$i AS (${assignSqlFor(prev, prevCol, dist, src)}),
-         |c$i AS (
+      s"""a$i AS MATERIALIZED (${assignSqlFor(prev, prevCol, dist, src)}),
+         |c$i AS MATERIALIZED (
          |  ${cvStepSql(prev, prevCv, s"a$i a JOIN embeddings e ON a.vec_id = e.vec_id",
               "a.cluster_id")})""".stripMargin
     }.mkString(",\n")

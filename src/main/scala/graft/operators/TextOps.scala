@@ -794,89 +794,71 @@ object TextOps {
     * multi-level BPE ladder formation, not just bigram counting. */
   private[graft] val BPE_TRAIN_STEPS = 12
 
-  /** Core of `bpe_train`: learn `steps` BPE merges — the tokenizer-
-    * induction twin of the K-Means control plane (§2.5): a driver loop
-    * whose per-trip state is ONE row (the argmax pair), with all per-trip
-    * work on the word-frequency HISTOGRAM ([[bpeMerges]] — the corpus is
-    * touched once to build it). Each trip: (1) count adjacent symbol
-    * pairs per distinct word weighted by frequency (equal to the corpus
-    * counts exactly — pairs never cross a space; overlap counted,
-    * standard BPE), a hash aggregate bounded by vocab; (2) take the
-    * (count DESC, pair ASC) argmax — deterministic cross-engine (both
-    * binary collations order BMP codepoints identically); (3) rewrite
-    * the histogram words with `replace` (identical left-to-right
-    * non-overlapping semantics in both engines — token_count_bpe's
-    * discipline), merged symbol = a fresh private-use code point
-    * (U+E101…, disjoint from BPE_MERGES' frozen U+E000 table). Output =
-    * the learned merge table (step, pair, n_occ). */
-  private[graft] def bpeTrain(docs0: DataFrame, steps: Int): DataFrame = {
-    val s = docs0.sparkSession
-    import s.implicits._
-    bpeMerges(docs0, steps).toDF("step", "pair", "n_occ")
-  }
-
   /** The merged symbol each training step mints (U+E101… — disjoint from
     * BPE_MERGES' frozen U+E000 table). */
   private[graft] def learnedSym(k: Int): String =
     new String(Character.toChars(0xE100 + k))
 
-  /** The training loop itself — returns the learned merge list.
-    *
-    * Trains on the WORD-FREQUENCY HISTOGRAM, not the corpus (the classic
-    * BPE trainer shape): pairs never cross a space, so per-distinct-word
-    * pair counts weighted by word frequency equal the full-corpus counts
-    * EXACTLY — overlap counting, the rewrite's left-to-right
-    * non-overlapping `replace`, and the (count DESC, pair ASC) argmax all
-    * confine to single words, so every trip's winning pair and n_occ are
-    * bit-identical to the corpus-scan form (OperatorSpec's hand-computed
-    * ladder pins this; the DuckDB oracle still scans the corpus, so the
-    * hash compare re-proves the equivalence every round). The corpus is
-    * touched ONCE to build the histogram; all `steps` trips then run on
-    * the vocab-bounded relation — at 100 TB the trainer's per-trip input
-    * is the vocabulary, not the corpus, which is why production
-    * tokenizer training is feasible at all (r15 verdict item 2: the
-    * corpus-scan loop paid 64 corpus passes ≈ 33 s of the bench; the
-    * histogram loop pays one).
-    *
-    * Control plane is ADAPTIVE (r21 optimization, guide §1.2 "the
-    * distributed algorithm first"): a histogram that fits the driver cap
-    * runs the merge loop IN DRIVER MEMORY ([[bpeMergesDriver]] — the
-    * HF/SentencePiece architecture bpe_train_regex already uses: one
-    * distributed corpus pass for the histogram, zero Spark jobs per
-    * trip), a histogram over the cap falls back to the per-trip
-    * distributed loop ([[bpeMergesDistributed]]). Both control planes
-    * compute the bit-identical merge list (same overlap counting, same
-    * (count DESC, pair ASC) argmax under UTF-8 byte order == codepoint
-    * order, same left-to-right non-overlapping rewrite); the DuckDB
-    * oracle and OperatorSpec's hand-computed ladder re-prove it every
-    * round. Measured motivation: the 64-step distributed loop paid a
-    * ~100 ms Spark job per trip — 6-7 s of pure scheduling in
-    * bpe_train_bytes, the bench's 2nd-priciest query — for vocab-bounded
-    * per-trip work that takes microseconds in memory. */
-  private[graft] def bpeMerges(docs0: DataFrame,
-      steps: Int): Seq[(Int, String, Long)] = {
-    // no spread (r22): the plain split+explode histogram pass is the
-    // token_topk shape — scan-partition parallelism suffices and the
-    // repartition's fixed cost measured as pure overhead. 1-char words
-    // can never contribute a pair in any trip (replace only shortens),
-    // so they are dropped up front.
-    val hist = docs0
+  /** The split-on-space training histogram `(w, freq)` of a corpus `t` —
+    * the classic BPE trainer input. Pairs never cross a space, so
+    * per-distinct-word pair counts weighted by word frequency equal the
+    * full-corpus counts EXACTLY (overlap counting, the rewrite's
+    * left-to-right non-overlapping `replace` and the (count DESC, pair
+    * ASC) argmax all confine to single words; OperatorSpec's
+    * hand-computed ladder pins this, and the corpus-scanning DuckDB
+    * oracle re-proves it every round). The corpus is touched ONCE; at
+    * 100 TB the trainer's per-trip input is the vocabulary, not the
+    * corpus (r15 verdict item 2: the corpus-scan loop paid 64 corpus
+    * passes ≈ 33 s of the bench; the histogram loop pays one). No spread
+    * (r22): the plain split+explode pass is the token_topk shape. 1-char
+    * words can never contribute a pair in any trip (replace only
+    * shortens), so they are dropped up front. Checkpointed because the
+    * distributed plane re-reads it every trip. */
+  private[graft] def wordHistogram(docs0: DataFrame): DataFrame =
+    docs0
       .select(explode(split(col("t"), " ")).as("w"))
       .where(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .localCheckpoint()
-    // BOUNDED driver materialization with a distributed escape hatch:
-    // take(cap+1) stops reading past the cap, so an over-cap vocabulary
-    // (conceivable at 100 TB: the distinct-word space is corpus-scaled)
-    // costs one truncated scan of the checkpointed histogram and then
-    // runs the distributed loop unchanged — the driver never holds more
-    // than cap+1 (word, freq) rows under either plane.
+
+  /** The one BPE trainer: learn `steps` merges from the histogram
+    * `hist(w, freq)` — the tokenizer-induction twin of the K-Means
+    * control plane (§2.5): a loop whose per-trip state is ONE row (the
+    * argmax pair). Each trip counts adjacent symbol pairs per distinct
+    * word weighted by frequency (overlap counted, standard BPE), takes
+    * the (count DESC, pair ASC) argmax — deterministic cross-engine
+    * (both binary collations order BMP codepoints identically) — and
+    * rewrites the words with `replace` (identical left-to-right
+    * non-overlapping semantics in both engines — token_count_bpe's
+    * discipline), the merged symbol being `sym(k)`, a fresh private-use
+    * code point. Returns the learned merge table (step, pair, n_occ).
+    *
+    * Control plane is ADAPTIVE (r21 optimization, guide §1.2 "the
+    * distributed algorithm first"): a histogram that fits the driver cap
+    * runs the merge loop IN DRIVER MEMORY ([[bpeMergesDriver]] — the
+    * HF/SentencePiece architecture: one distributed corpus pass for the
+    * histogram, zero Spark jobs per trip), a histogram over the cap falls
+    * back to the per-trip distributed loop ([[bpeMergesDistributed]]).
+    * Both planes compute the bit-identical merge list (same overlap
+    * counting, same argmax under UTF-8 byte order == codepoint order,
+    * same rewrite, same `skipEmptyTrips` exhaustion rule); PropertySpec
+    * pins them to each other. Measured motivation: the 64-step
+    * distributed loop paid a ~100 ms Spark job per trip — 6-7 s of pure
+    * scheduling in bpe_train_bytes, the bench's 2nd-priciest query — for
+    * vocab-bounded per-trip work that takes microseconds in memory.
+    * take(cap+1) stops reading past the cap, so an over-cap vocabulary
+    * (conceivable at 100 TB: the distinct-word space is corpus-scaled)
+    * costs one truncated scan of the histogram and then runs the
+    * distributed loop unchanged — the driver never holds more than
+    * cap+1 (word, freq) rows under either plane. */
+  private[graft] def bpeMerges(hist: DataFrame, steps: Int,
+      sym: Int => String, skipEmptyTrips: Boolean): Seq[(Int, String, Long)] = {
     val head = hist.take(BPE_DRIVER_HIST_CAP + 1)
     if (head.length <= BPE_DRIVER_HIST_CAP)
       bpeMergesDriver(
         head.iterator.map(r => (r.getString(0), r.getLong(1))).toIndexedSeq,
-        steps, learnedSym, skipEmptyTrips = false)
-    else bpeMergesDistributed(hist, steps)
+        steps, sym, skipEmptyTrips)
+    else bpeMergesDistributed(hist, steps, sym, skipEmptyTrips)
   }
 
   /** Driver-cap on the histogram rows [[bpeMerges]] may collect (~1M
@@ -891,12 +873,12 @@ object TextOps {
     * localCheckpoints every 8th trip: the histogram is tiny, so
     * materialization is cheap, but a 64-deep replace chain in one
     * codegen projection would blow the generated-method budget. */
-  private[graft] def bpeMergesDistributed(hist0: DataFrame,
-      steps: Int): Seq[(Int, String, Long)] = {
+  private[graft] def bpeMergesDistributed(hist0: DataFrame, steps: Int,
+      sym: Int => String, skipEmptyTrips: Boolean): Seq[(Int, String, Long)] = {
     var hist = hist0
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     for (k <- 1 to steps) {
-      val best = hist
+      hist
         // re-guard each trip: a rewritten word can shrink below 2 symbols
         // and sequence(1, 0) DESCENDS rather than returning empty
         .where(length(col("w")) >= 2)
@@ -905,14 +887,20 @@ object TextOps {
           .as("pair"), col("freq"))
         .groupBy(col("pair")).agg(sum(col("freq")).as("n_occ"))
         .orderBy(col("n_occ").desc, col("pair")).limit(1)
-        .collect()(0)
-      merges += ((k, best.getString(0), best.getLong(1)))
-      hist = hist.select(org.apache.spark.sql.functions.replace(col("w"),
-        lit(best.getString(0)), lit(learnedSym(k))).as("w"), col("freq"))
+        .collect() match {
+        case Array(best) =>
+          merges += ((k, best.getString(0), best.getLong(1)))
+          hist = hist.select(org.apache.spark.sql.functions.replace(col("w"),
+            lit(best.getString(0)), lit(sym(k))).as("w"), col("freq"))
+        case _ => if (!skipEmptyTrips) throw exhausted(k)
+      }
       if (k % 8 == 0 && k < steps) hist = hist.localCheckpoint()
     }
     merges.toSeq
   }
+
+  private def exhausted(k: Int) = new IllegalStateException(
+    s"BPE trip $k found no pair to merge (histogram exhausted)")
 
   /** Codepoint-sequence "<" — exactly UTF8String's binary sort order
     * (UTF-8 byte order == codepoint order), so the driver argmax
@@ -935,17 +923,17 @@ object TextOps {
 
   /** The merge loop over a COLLECTED histogram — pure driver memory,
     * zero Spark jobs per trip (see [[bpeMerges]] for the adaptive
-    * control-plane split and [[bpeMergesInMemory]] for the architecture
-    * rationale). Semantics are the distributed loop's, codepoint-exact:
-    * pairs are 2-CODEPOINT substrings (Spark `substring`/`length` walk
-    * codepoints, so the driver walks an int[] codepoint array), the
-    * argmax is (count DESC, pair ASC) under [[cpLess]] (== UTF8String
+    * control-plane split and its rationale). Semantics are the
+    * distributed loop's, codepoint-exact: pairs are 2-CODEPOINT
+    * substrings (Spark `substring`/`length` walk codepoints, so the
+    * driver walks an int[] codepoint array), the argmax is (count DESC, pair ASC) under [[cpLess]] (== UTF8String
     * binary order), rewrites are Java `String.replace` (left-to-right
     * non-overlapping — both engines' shared semantics; a valid-codepoint
     * pattern can only match at codepoint boundaries, so UTF-16 search ==
-    * UTF-8 search). `skipEmptyTrips=false` mirrors the distributed
-    * loop's fail-loudly on a pair-less trip (collect()(0) there);
-    * `true` mirrors the regex family's historical skip. */
+    * UTF-8 search). Distinct words stay distinct under rewriting (the
+    * step symbol is fresh), so the histogram never re-groups. A
+    * pair-less trip fails loudly unless `skipEmptyTrips` (the regex
+    * family's rule), exactly as in the distributed loop. */
   private[graft] def bpeMergesDriver(hist0: IndexedSeq[(String, Long)],
       steps: Int, sym: Int => String,
       skipEmptyTrips: Boolean): Seq[(Int, String, Long)] = {
@@ -972,26 +960,10 @@ object TextOps {
         out += ((k, bp, bn))
         val s = sym(k)
         h = h.map { case (w, f) => (w.replace(bp, s), f) }
-      } else if (!skipEmptyTrips)
-        throw new IllegalStateException(
-          s"BPE trip $k found no pair to merge (histogram exhausted)")
+      } else if (!skipEmptyTrips) throw exhausted(k)
     }
     out.toSeq
   }
-
-  /** Session cache of learned merge tables, keyed (sfDir, steps) — the
-    * IVF discipline (index build ≠ probe) applied to the tokenizer:
-    * `bpe_train` IS the timed build and writes the cache; the apply-side
-    * `token_count_learned` reads it (training only on a cache miss, e.g.
-    * a dev filter running the apply alone). The merge list is O(steps)
-    * driver data, not a held DataFrame. */
-  private val learnedMergeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Int, String, Long)]]
-
-  private[graft] def learnedMergesFor(s: SparkSession, d: String,
-      steps: Int): Seq[(Int, String, Long)] =
-    learnedMergeCache.getOrElseUpdate((d, steps),
-      bpeMerges(Tables.documents(s, d).select(col("text").as("t")), steps))
 
   /** Byte-level trainer config (round-14 verdict item 3): a REALISTIC
     * merge count (64, vs the 12-step char demo) learned from a
@@ -1018,6 +990,11 @@ object TextOps {
     * bit-identical in both engines. */
   private[graft] val UNI_FROM = "aeiou"
   private[graft] val UNI_TO = "äéíöü"
+
+  /** The shim over column `c`, and its DuckDB twin over expression `e`. */
+  private[graft] def uniShim(c: Column): Column = translate(c, UNI_FROM, UNI_TO)
+  private[graft] def uniShimSql(e: String): String =
+    s"translate($e, '$UNI_FROM', '$UNI_TO')"
 
   /** `bpe_train_utf8`'s bytes-rendering shim — the byte-fallback base
     * alphabet of GPT-2/tiktoken made explicit: a string is rendered as
@@ -1063,22 +1040,11 @@ object TextOps {
       s"'$UTF8_ASCII_TO')"
   }
 
-  /** Cached trainer for the utf8-bytes family (`bpe_train_utf8` is the
-    * timed build and writes the cache; `token_count_utf8` reads it,
-    * training only on a miss). Family-tagged key — can never collide
-    * with the split-on-space or regex tables at the same step count. */
-  private[graft] def learnedUtf8MergesFor(s: SparkSession,
-      d: String): Seq[(Int, String, Long)] =
-    learnedMergeCache.getOrElseUpdate((d + "#utf8", BPE_TRAIN_STEPS),
-      bpeMerges(bpeByteSample(Tables.documents(s, d))
-        .select(utf8ByteSyms(translate(col("text"), UNI_FROM, UNI_TO))
-          .as("t")), BPE_TRAIN_STEPS))
-
-  private[graft] def learnedByteMergesFor(s: SparkSession,
-      d: String): Seq[(Int, String, Long)] =
-    learnedMergeCache.getOrElseUpdate((d, BPE_BYTES_STEPS),
-      bpeMerges(bpeByteSample(Tables.documents(s, d))
-        .select(col("text").as("t")), BPE_BYTES_STEPS))
+  /** The unicode shim's text rendered as UTF-8 byte symbols — the
+    * utf8 family's corpus and its apply's input — and its DuckDB twin. */
+  private[graft] def utf8Text(c: Column): Column = utf8ByteSyms(uniShim(c))
+  private[graft] def utf8TextSql(e: String): String =
+    utf8ByteSymsSql(uniShimSql(e))
 
   /** The identical training loop unrolled for DuckDB — one
     * p/b/s CTE triple per step, `AS MATERIALIZED` so the chain
@@ -1107,10 +1073,28 @@ object TextOps {
     sb.toString
   }
 
-  private[graft] def bpeTrainSql(steps: Int): String =
-    bpeTrainCtes(steps) + "\n" + (1 to steps)
-      .map(k => s"SELECT $k AS step, pair, n_occ FROM b$k")
-      .mkString("\nUNION ALL\n")
+  /** The split-on-space families' apply: `merges` folded in order over
+    * `text` as ONE codegen chain of `replace` expressions (no UDF) —
+    * function-composition-identical to the trainer's sequential
+    * rewrites, without re-materializing a state per merge. */
+  private[graft] def foldTokens(text: Column,
+      merges: Seq[(Int, String, Long)]): Column =
+    merges.foldLeft(text) { case (acc, (k, p, _)) =>
+      org.apache.spark.sql.functions.replace(acc, lit(p), lit(learnedSym(k)))
+    }
+
+  /** [[foldTokens]]' DuckDB twin as an apply oracle: family `f`'s
+    * training chain, then every document's `text` expression folded
+    * through the b_1…b_steps pairs and counted. The fold is NOT
+    * coalesce-guarded against an empty b_k (the guard would duplicate
+    * the accumulator → 2^steps SQL text); it relies on the measured
+    * merge-capacity pin — the fixture always yields every merge
+    * (OperatorSpec pins the counts). */
+  private[graft] def foldTokensSql(f: BpeFamily, text: String): String =
+    f.trainCtes + "\n" + s"SELECT doc_id, length(${
+      (1 to f.steps).foldLeft(text) { (acc, k) =>
+        s"replace($acc, (SELECT pair FROM b$k), chr(${57600 + k}))"
+      }})::INT AS n_tokens FROM documents"
 
   // ---- GPT-2-style regex pre-tokenizer + 256-merge trainer (r17 verdict
   // item 8: "train at 256+ merges with a GPT-2-style regex pre-tokenizer
@@ -1228,44 +1212,6 @@ object TextOps {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("w")).limit(BPE_REGEX_VOCAB)
 
-  /** The merge loop over a COLLECTED histogram — pure driver memory, zero
-    * Spark jobs. This is deliberately a different control plane from
-    * [[bpeMerges]]' per-trip distributed loop, because it is what
-    * production trainers actually do (HF/SentencePiece: distributed word
-    * count, in-memory merge loop): once the histogram is pruned to the
-    * vocab cap, per-step work is O(vocab·len), microseconds — paying a
-    * Spark job per step would make the 256-step trainer ~100× slower for
-    * no distribution benefit (bpe_train_bytes' measured driver-trip floor
-    * is the bench's priciest single query at 64 steps). The collect is a
-    * BOUNDED driver materialization: ≤[[BPE_REGEX_VOCAB]] rows by
-    * construction, independent of corpus size.
-    *
-    * Ordering contracts, both cross-engine safe on this symbol set
-    * (ASCII + Ġ + U+E2xx — all BMP, no surrogates, so UTF-16 unit order
-    * == codepoint order == UTF-8 byte order): the argmax is
-    * (count DESC, pair ASC), the prune is (freq DESC, w ASC). Rewrites
-    * are Java `String.replace` — left-to-right non-overlapping, the
-    * engines' shared semantics. Distinct words stay distinct under
-    * rewriting (the step symbol is fresh, so `replace(w, sym, pair)`
-    * inverts it), so the histogram never re-groups. */
-  private[graft] def bpeMergesInMemory(hist: Seq[(String, Long)],
-      steps: Int): Seq[(Int, String, Long)] =
-    bpeMergesDriver(hist.toIndexedSeq, steps, regexSym,
-      skipEmptyTrips = true)
-
-  /** Cached trainer for the regex family (the bpe_train build≠apply
-    * discipline): `bpe_train_regex` is the timed build; apply-side
-    * consumers read the cache, training only on a miss. The cache key
-    * carries a family tag so a hypothetical 12- or 64-step regex trainer
-    * could never collide with the split-on-space tables. */
-  private[graft] def learnedRegexMergesFor(s: SparkSession,
-      d: String): Seq[(Int, String, Long)] =
-    learnedMergeCache.getOrElseUpdate((d + "#gpt2", BPE_REGEX_STEPS),
-      bpeMergesInMemory(
-        regexHistogram(s, d).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq,
-        BPE_REGEX_STEPS))
-
   /** Parenthesized balanced UNION ALL — a left-deep 256-arm union chain
     * exceeds DuckDB's binder expression-depth cap (1000); the balanced
     * tree binds at depth ~log2(arms). */
@@ -1276,28 +1222,51 @@ object TextOps {
       "(" + balancedUnion(l) + " UNION ALL " + balancedUnion(r) + ")"
     }
 
-  /** The regex trainer unrolled for DuckDB, HISTOGRAM form: h0 is the
-    * pruned pre-token histogram (one corpus scan, like the Spark side),
-    * then per step a best-pair aggregate + a histogram rewrite. Unlike
-    * [[bpeTrainCtes]]' corpus-rewriting chain this stays vocab-bounded
-    * per step, which is what makes 256 steps replayable at all; the
-    * histogram==corpus counting equality is the one [[bpeMerges]]
-    * documents and bpe_train's corpus-scanning oracle re-proves every
-    * round. b_k is deliberately NOT materialized: its two consumers each
-    * re-run a vocab-bounded aggregate, and dropping the hint keeps the
-    * named-CTE count at 2/step — DuckDB's binder depth cap rejects 4
-    * named CTEs/step at 256 steps (measured), and CTE machinery overhead
-    * dominated the materialized variant (57 s → 7 s). */
-  private[graft] def bpeRegexCtes(steps: Int): String = {
+  /** The trainer queries' merge table (step, pair, n_occ) read off a
+    * chain's b_1…b_steps. */
+  private def mergeRowsSql(steps: Int): String =
+    balancedUnion((1 to steps).map(k => s"SELECT $k AS step, pair, n_occ FROM b$k"))
+
+  /** The regex family's DuckDB chain over `corpus` (text column `t`),
+    * HISTOGRAM form: h0 is the pruned pre-token histogram (one corpus
+    * scan, like the Spark side), then per step a best-pair aggregate b_k
+    * and a histogram rewrite h_k. Unlike [[bpeTrainCtes]]' corpus-
+    * rewriting chain this stays vocab-bounded per step, which is what
+    * makes 256 steps replayable at all; the histogram==corpus counting
+    * equality is the one [[wordHistogram]] documents and bpe_train's
+    * corpus-scanning oracle re-proves every round.
+    *
+    * `apply = Some((keys, text, src))` adds the apply chain: dpre holds
+    * the Ġ-mapped pre-tokens of `src`'s `text` with the `keys` columns
+    * carried (a ", "-terminated list), dv0 each DISTINCT pre-token, and a
+    * dv_k rewrite rides every step, so `dv$steps(w0, w)` maps each
+    * pre-token to its merged form — the apply replayed at vocabulary cost
+    * too, including pre-tokens the top-V prune dropped from TRAINING,
+    * which still get every merge APPLIED (the standard OOV contract).
+    *
+    * b_k is deliberately NOT materialized: its consumers each re-run a
+    * vocab-bounded aggregate, and dropping the hint keeps the named-CTE
+    * count at 2/step (3 with the apply chain) — DuckDB's binder depth cap
+    * rejects 4 named CTEs/step at 256 steps (measured), and CTE machinery
+    * overhead dominated the materialized variant (57 s → 7 s). */
+  private[graft] def regexBpeCtes(corpus: String, steps: Int,
+      apply: Option[(String, String, String)] = None): String = {
     val sb = new StringBuilder(
       s"""WITH corpus AS MATERIALIZED (
-         |  $REGEX_CORPUS_SQL),
+         |  $corpus),
          |h0 AS MATERIALIZED (
          |  SELECT w, count(*)::BIGINT AS freq FROM (
          |    SELECT replace(unnest(regexp_extract_all(t, '$GPT2_PRE_PAT_SQL')),
          |           ' ', chr(288)) AS w FROM corpus)
          |  WHERE length(w) >= 2
          |  GROUP BY w ORDER BY freq DESC, w LIMIT $BPE_REGEX_VOCAB)""".stripMargin)
+    for ((keys, text, src) <- apply) sb.append(
+      s""",
+         |dpre AS MATERIALIZED (
+         |  SELECT ${keys}replace(tok, ' ', chr(288)) AS w FROM (
+         |    SELECT ${keys}unnest(regexp_extract_all($text, '$GPT2_PRE_PAT_SQL'))
+         |      AS tok FROM $src)),
+         |dv0 AS MATERIALIZED (SELECT DISTINCT w AS w0, w FROM dpre)""".stripMargin)
     for (k <- 1 to steps) {
       sb.append(s""",
         |b$k AS (
@@ -1309,24 +1278,36 @@ object TextOps {
         |  SELECT coalesce(replace(w, (SELECT pair FROM b$k),
         |      chr(${0xE200 + k})), w)
         |    AS w, freq FROM h${k - 1})""".stripMargin)
+      if (apply.nonEmpty) sb.append(s""",
+        |dv$k AS MATERIALIZED (
+        |  SELECT w0, coalesce(replace(w, (SELECT pair FROM b$k),
+        |      chr(${0xE200 + k})), w)
+        |    AS w FROM dv${k - 1})""".stripMargin)
     }
     sb.toString
   }
 
-  private[graft] def bpeRegexTrainSql(steps: Int): String =
-    bpeRegexCtes(steps) + "\n" + balancedUnion(
-      (1 to steps).map(k => s"SELECT $k AS step, pair, n_occ FROM b$k"))
+  /** The regex family's apply: pre-tokenize `text` with [[GPT2_PRE_PAT]],
+    * then ONE generated call folds every merge per pre-token
+    * ([[org.apache.spark.sql.graft.BpeTokens]] — a 256-deep replace chain
+    * would blow the generated-method budget that already caps the
+    * 64-merge chain). Counts the symbols left. */
+  private[graft] def regexTokens(text: Column,
+      merges: Seq[(Int, String, Long)]): Column =
+    org.apache.spark.sql.graft.BpeTokens.column(
+      regexp_extract_all(text, lit(GPT2_PRE_PAT), lit(0)),
+      merges.map(_._2), merges.map(m => regexSym(m._1)))
 
   /** bpe_vocab_regex's oracle: the training chain, the merge rows
-    * collected (balanced union into v0), then a DESCENDING
-    * reverse-replace chain — v_i replaces chr(0xE200 + (steps − i + 1))
-    * with that step's pair; since pair_j contains only symbols < j, the
-    * descent leaves every row fully expanded to base characters. */
-  private[graft] def bpeVocabRegexSql(steps: Int): String = {
-    val sb = new StringBuilder(bpeRegexCtes(steps))
+    * collected into v0, then a DESCENDING reverse-replace chain — v_i
+    * replaces chr(0xE200 + (steps − i + 1)) with that step's pair; since
+    * pair_j contains only symbols < j, the descent leaves every row fully
+    * expanded to base characters. */
+  private[graft] def bpeVocabRegexSql: String = {
+    val steps = REGEX_BPE.steps
+    val sb = new StringBuilder(REGEX_BPE.trainCtes)
     sb.append(",\nv0 AS MATERIALIZED (SELECT step, pair AS x FROM (\n")
-    sb.append(balancedUnion(
-      (1 to steps).map(k => s"SELECT $k AS step, pair FROM b$k")))
+    sb.append(mergeRowsSql(steps))
     sb.append("))")
     for (i <- 1 to steps) {
       val j = steps - i + 1
@@ -1343,42 +1324,13 @@ object TextOps {
   }
 
   /** tokenizer_eval_regex's oracle: the training chain over the TAGGED
-    * corpus (same histogram — the tag is dropped for h0), the
-    * distinct-pre-token rewrite chain over the FULL corpus vocabulary,
-    * then the per-domain rollup with the chars/token ratio on the
-    * shared rIeee@4 grid. */
-  private[graft] def tokenizerEvalRegexSql(steps: Int): String = {
-    val sb = new StringBuilder(
-      s"""WITH corpus AS MATERIALIZED (
-         |  $REGEX_CORPUS_TAGGED_SQL),
-         |h0 AS MATERIALIZED (
-         |  SELECT w, count(*)::BIGINT AS freq FROM (
-         |    SELECT replace(unnest(regexp_extract_all(t, '$GPT2_PRE_PAT_SQL')),
-         |           ' ', chr(288)) AS w FROM corpus)
-         |  WHERE length(w) >= 2
-         |  GROUP BY w ORDER BY freq DESC, w LIMIT $BPE_REGEX_VOCAB),
-         |dpre AS MATERIALIZED (
-         |  SELECT dom, replace(tok, ' ', chr(288)) AS w FROM (
-         |    SELECT dom, unnest(regexp_extract_all(t, '$GPT2_PRE_PAT_SQL'))
-         |      AS tok FROM corpus)),
-         |dv0 AS MATERIALIZED (SELECT DISTINCT w AS w0, w FROM dpre)""".stripMargin)
-    for (k <- 1 to steps) {
-      sb.append(s""",
-        |b$k AS (
-        |  SELECT pair, sum(freq)::BIGINT AS n_occ
-        |  FROM (SELECT substring(w, i, 2) AS pair, freq
-        |        FROM h${k - 1}, unnest(range(1, length(w))) AS r(i))
-        |  GROUP BY pair ORDER BY n_occ DESC, pair LIMIT 1),
-        |h$k AS MATERIALIZED (
-        |  SELECT coalesce(replace(w, (SELECT pair FROM b$k),
-        |      chr(${0xE200 + k})), w)
-        |    AS w, freq FROM h${k - 1}),
-        |dv$k AS MATERIALIZED (
-        |  SELECT w0, coalesce(replace(w, (SELECT pair FROM b$k),
-        |      chr(${0xE200 + k})), w)
-        |    AS w FROM dv${k - 1})""".stripMargin)
-    }
-    sb.append(s"""
+    * corpus (same histogram — the tag is dropped for h0) with the apply
+    * chain over the FULL corpus vocabulary, then the per-domain rollup
+    * with the chars/token ratio on the shared rIeee@4 grid. */
+  private[graft] def tokenizerEvalRegexSql(steps: Int): String =
+    regexBpeCtes(REGEX_CORPUS_TAGGED_SQL, steps,
+      Some(("dom, ", "t", "corpus"))) +
+      s"""
       |SELECT c.dom, c.n_texts, c.n_chars, tk.n_tokens,
       |       ${graft.functions.VectorSql.rIeee(
            "c.n_chars::DOUBLE / tk.n_tokens", 4)} AS chars_per_token
@@ -1386,104 +1338,96 @@ object TextOps {
       |        sum(length(t))::BIGINT AS n_chars FROM corpus GROUP BY dom) c
       |JOIN (SELECT d.dom, sum(length(v.w))::BIGINT AS n_tokens
       |      FROM dpre d JOIN dv$steps v ON d.w = v.w0 GROUP BY d.dom) tk
-      |  USING (dom)""".stripMargin)
-    sb.toString
-  }
+      |  USING (dom)""".stripMargin
 
-  /** tokenizer_vocab_sweep's oracle: the training chain over the corpus
-    * (h_k/b_k) with the parallel distinct-pre-token rewrite chain (dv_k
-    * — tokenCountRegexSql's 3-named-CTEs-per-step shape, which binds
-    * under DuckDB's depth cap where 4 does not), read at EACH sweep
-    * depth: dv_64/dv_128/dv_256 are the same chain's intermediate
-    * states, so the oracle gets all three vocabularies from one unrolled
-    * training exactly as the engine takes prefixes of one merge list. */
-  private[graft] def tokenizerVocabSweepSql(depths: Seq[Int]): String = {
-    val steps = depths.max
-    val sb = new StringBuilder(
-      s"""WITH corpus AS MATERIALIZED (
-         |  $REGEX_CORPUS_SQL),
-         |h0 AS MATERIALIZED (
-         |  SELECT w, count(*)::BIGINT AS freq FROM (
-         |    SELECT replace(unnest(regexp_extract_all(t, '$GPT2_PRE_PAT_SQL')),
-         |           ' ', chr(288)) AS w FROM corpus)
-         |  WHERE length(w) >= 2
-         |  GROUP BY w ORDER BY freq DESC, w LIMIT $BPE_REGEX_VOCAB),
-         |dpre AS MATERIALIZED (
-         |  SELECT replace(tok, ' ', chr(288)) AS w FROM (
-         |    SELECT unnest(regexp_extract_all(t, '$GPT2_PRE_PAT_SQL'))
-         |      AS tok FROM corpus)),
-         |dv0 AS MATERIALIZED (SELECT DISTINCT w AS w0, w FROM dpre),
-         |ctot AS (SELECT sum(length(t))::BIGINT AS n_chars FROM corpus)""".stripMargin)
-    for (k <- 1 to steps) {
-      sb.append(s""",
-        |b$k AS (
-        |  SELECT pair, sum(freq)::BIGINT AS n_occ
-        |  FROM (SELECT substring(w, i, 2) AS pair, freq
-        |        FROM h${k - 1}, unnest(range(1, length(w))) AS r(i))
-        |  GROUP BY pair ORDER BY n_occ DESC, pair LIMIT 1),
-        |h$k AS MATERIALIZED (
-        |  SELECT coalesce(replace(w, (SELECT pair FROM b$k),
-        |      chr(${0xE200 + k})), w)
-        |    AS w, freq FROM h${k - 1}),
-        |dv$k AS MATERIALIZED (
-        |  SELECT w0, coalesce(replace(w, (SELECT pair FROM b$k),
-        |      chr(${0xE200 + k})), w)
-        |    AS w FROM dv${k - 1})""".stripMargin)
-    }
-    sb.append("\n" + depths.map { dep =>
-      s"""SELECT $dep AS n_merges, ctot.n_chars, tk.n_tokens,
-         |       ${graft.functions.VectorSql.rIeee(
-             "ctot.n_chars::DOUBLE / tk.n_tokens", 4)} AS chars_per_token
-         |FROM ctot, (SELECT sum(length(v.w))::BIGINT AS n_tokens
-         |            FROM dpre d JOIN dv$dep v ON d.w = v.w0) tk""".stripMargin
-    }.mkString("\nUNION ALL\n"))
-    sb.toString
-  }
+  /** tokenizer_vocab_sweep's oracle: the training chain with the apply
+    * chain over the corpus, read at EACH sweep depth: dv_64/dv_128/dv_256
+    * are the same chain's intermediate states, so the oracle gets all
+    * three vocabularies from one unrolled training exactly as the engine
+    * takes prefixes of one merge list. */
+  private[graft] def tokenizerVocabSweepSql(depths: Seq[Int]): String =
+    regexBpeCtes(REGEX_CORPUS_SQL, depths.max, Some(("", "t", "corpus"))) +
+      ",\nctot AS (SELECT sum(length(t))::BIGINT AS n_chars FROM corpus)\n" +
+      depths.map { dep =>
+        s"""SELECT $dep AS n_merges, ctot.n_chars, tk.n_tokens,
+           |       ${graft.functions.VectorSql.rIeee(
+               "ctot.n_chars::DOUBLE / tk.n_tokens", 4)} AS chars_per_token
+           |FROM ctot, (SELECT sum(length(v.w))::BIGINT AS n_tokens
+           |            FROM dpre d JOIN dv$dep v ON d.w = v.w0) tk""".stripMargin
+      }.mkString("\nUNION ALL\n")
 
-  /** token_count_regex's oracle: the training chain plus a parallel
-    * rewrite chain over the DISTINCT document pre-tokens (dv_k), so the
-    * apply side is replayed at vocabulary cost too — including pre-tokens
-    * the top-V prune dropped from TRAINING, which still get every merge
-    * APPLIED (the standard OOV contract: merges apply to any word). The
-    * final join fans the per-distinct-pre-token symbol counts back out to
-    * documents. 3 named CTEs/step binds under the depth cap (4 does not).
-    */
-  private[graft] def tokenCountRegexSql(steps: Int): String = {
-    val sb = new StringBuilder(
-      s"""WITH corpus AS MATERIALIZED (
-         |  $REGEX_CORPUS_SQL),
-         |h0 AS MATERIALIZED (
-         |  SELECT w, count(*)::BIGINT AS freq FROM (
-         |    SELECT replace(unnest(regexp_extract_all(t, '$GPT2_PRE_PAT_SQL')),
-         |           ' ', chr(288)) AS w FROM corpus)
-         |  WHERE length(w) >= 2
-         |  GROUP BY w ORDER BY freq DESC, w LIMIT $BPE_REGEX_VOCAB),
-         |dpre AS MATERIALIZED (
-         |  SELECT doc_id, replace(tok, ' ', chr(288)) AS w FROM (
-         |    SELECT doc_id, unnest(regexp_extract_all(text, '$GPT2_PRE_PAT_SQL'))
-         |      AS tok FROM documents)),
-         |dv0 AS MATERIALIZED (SELECT DISTINCT w AS w0, w FROM dpre)""".stripMargin)
-    for (k <- 1 to steps) {
-      sb.append(s""",
-        |b$k AS (
-        |  SELECT pair, sum(freq)::BIGINT AS n_occ
-        |  FROM (SELECT substring(w, i, 2) AS pair, freq
-        |        FROM h${k - 1}, unnest(range(1, length(w))) AS r(i))
-        |  GROUP BY pair ORDER BY n_occ DESC, pair LIMIT 1),
-        |h$k AS MATERIALIZED (
-        |  SELECT coalesce(replace(w, (SELECT pair FROM b$k),
-        |      chr(${0xE200 + k})), w)
-        |    AS w, freq FROM h${k - 1}),
-        |dv$k AS MATERIALIZED (
-        |  SELECT w0, coalesce(replace(w, (SELECT pair FROM b$k),
-        |      chr(${0xE200 + k})), w)
-        |    AS w FROM dv${k - 1})""".stripMargin)
-    }
-    sb.append(s"""
+  /** token_count_regex's oracle: the training chain with the apply chain
+    * over the documents' pre-tokens, and the final join fanning the
+    * per-distinct-pre-token symbol counts back out to documents. */
+  private[graft] def tokenCountRegexSql(steps: Int): String =
+    regexBpeCtes(REGEX_CORPUS_SQL, steps,
+      Some(("doc_id, ", "text", "documents"))) +
+      s"""
       |SELECT d.doc_id, sum(length(v.w))::INT AS n_tokens
-      |FROM dpre d JOIN dv$steps v ON d.w = v.w0 GROUP BY d.doc_id""".stripMargin)
-    sb.toString
+      |FROM dpre d JOIN dv$steps v ON d.w = v.w0 GROUP BY d.doc_id""".stripMargin
+
+  /** Session cache of learned merge tables, keyed (family name, sfDir) —
+    * the IVF discipline (index build ≠ probe) applied to the tokenizer.
+    * The merge list is O(steps) driver data, not a held DataFrame. */
+  private[graft] val learnedMergeCache = scala.collection.concurrent.TrieMap
+    .empty[(String, String), Seq[(Int, String, Long)]]
+
+  /** A BPE merge family, spelled once: its training histogram `hist`,
+    * merge count, the symbol plane its steps mint, its exhaustion rule
+    * (see [[bpeMergesDriver]]), its cache entry `(name, sfDir)` — `name`
+    * is its trainer query — and `trainCtes`, the DuckDB chain replaying
+    * its training into b_1…b_steps. The trainer query is the timed build:
+    * [[train]] retrains and stores. Apply queries read the stored merges
+    * through [[merges]], training only on a cache miss (a dev filter
+    * running the apply alone). */
+  private[graft] final case class BpeFamily(name: String, steps: Int,
+      sym: Int => String, skipEmptyTrips: Boolean,
+      hist: (SparkSession, String) => DataFrame, trainCtes: String) {
+    def train(s: SparkSession, d: String): Seq[(Int, String, Long)] = {
+      val learned = bpeMerges(hist(s, d), steps, sym, skipEmptyTrips)
+      learnedMergeCache((name, d)) = learned
+      learned
+    }
+
+    def merges(s: SparkSession, d: String): Seq[(Int, String, Long)] =
+      learnedMergeCache.getOrElse((name, d), train(s, d))
+
+    /** The trainer query's oracle: the chain, then the merge table. */
+    def trainSql: String = trainCtes + "\n" + mergeRowsSql(steps)
   }
+
+  /** A split-on-space family over the documents' text rendered by `text`
+    * (`textSql` in DuckDB), on [[bpeByteSample]]'s quarter when
+    * `sampled`; a pair-less trip fails loudly. */
+  private def wordBpe(name: String, steps: Int, sampled: Boolean,
+      text: Column => Column = identity,
+      textSql: String => String = identity): BpeFamily =
+    BpeFamily(name, steps, learnedSym, skipEmptyTrips = false,
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        wordHistogram((if (sampled) bpeByteSample(docs) else docs)
+          .select(text(col("text")).as("t")))
+      },
+      bpeTrainCtes(steps, if (sampled) bpeSampleWhere else "", textSql("text")))
+
+  /** The character-level demo: 12 merges over the full corpus. */
+  private[graft] val CHAR_BPE = wordBpe("bpe_train", BPE_TRAIN_STEPS,
+    sampled = false)
+  private[graft] val BYTE_BPE = wordBpe("bpe_train_bytes", BPE_BYTES_STEPS,
+    sampled = true)
+  private[graft] val UNICODE_BPE = wordBpe("bpe_train_unicode",
+    BPE_TRAIN_STEPS, sampled = true, uniShim, uniShimSql)
+  /** True byte-level BPE: the UTF-8 bytes of the unicode shim. */
+  private[graft] val UTF8_BPE = wordBpe("bpe_train_utf8", BPE_TRAIN_STEPS,
+    sampled = true, utf8Text, utf8TextSql)
+
+  /** The GPT-2-style family: the pruned multi-domain pre-token
+    * histogram, 256 merges in the U+E2xx plane; a pair-less trip is
+    * skipped (the family's historical rule — spec-pinned not to happen at
+    * 256 on the fixtures). */
+  private[graft] val REGEX_BPE = BpeFamily("bpe_train_regex",
+    BPE_REGEX_STEPS, regexSym, skipEmptyTrips = true, regexHistogram,
+    regexBpeCtes(REGEX_CORPUS_SQL, BPE_REGEX_STEPS))
 
   /** Core of `quality_entropy` (factored out so OperatorSpec can assert
     * hand-computable histograms: "aaaa"→0, "abab"→1, "abcd"→2 bits). */
@@ -1963,19 +1907,14 @@ object TextOps {
       // sequential rewrites, without re-materializing 12 states. Merges
       // come from the session cache `bpe_train` populated (training only
       // on a cache miss) — the IVF build≠probe timing discipline.
-      val chain = learnedMergesFor(s, d, BPE_TRAIN_STEPS)
-        .foldLeft(col("text")) { case (acc, (k, p, _)) =>
-          org.apache.spark.sql.functions.replace(acc, lit(p),
-            lit(learnedSym(k)))
-        }
-      Tables.documents(s, d)
-        .select(col("doc_id"), length(chain).as("n_tokens"))
+      Tables.documents(s, d).select(col("doc_id"),
+        length(foldTokens(col("text"), CHAR_BPE.merges(s, d))).as("n_tokens"))
     },
     "bpe_train" -> { (s, d) =>
       // BPE tokenizer INDUCTION (token_count_bpe consumes a frozen merge
       // table; this learns one): 12 driver-loop trips over the word-
       // frequency histogram (the corpus is scanned ONCE to build it —
-      // see [[bpeMerges]] for the exact-equality argument), each trip
+      // see [[wordHistogram]] for the exact-equality argument), each trip
       // counting within-word symbol pairs weighted by word frequency and
       // merging the argmax into a fresh private-use symbol — K-Means'
       // iterative control plane (§2.5) applied to vocabulary learning.
@@ -1985,10 +1924,7 @@ object TextOps {
       // timed build of the build≠apply pair: the learned table lands in
       // the session cache `token_count_learned` applies from.
       import s.implicits._
-      val merges = bpeMerges(
-        Tables.documents(s, d).select(col("text").as("t")), BPE_TRAIN_STEPS)
-      learnedMergeCache((d, BPE_TRAIN_STEPS)) = merges
-      merges.toDF("step", "pair", "n_occ")
+      CHAR_BPE.train(s, d).toDF("step", "pair", "n_occ")
     },
     "bpe_train_bytes" -> { (s, d) =>
       // byte-level BPE at a REALISTIC merge count (64 — the regime where
@@ -1999,10 +1935,7 @@ object TextOps {
       // samples its corpus); same loop, same per-trip discipline, same
       // unrolled MATERIALIZED-CTE oracle as bpe_train, 64 triples deep.
       import s.implicits._
-      val merges = bpeMerges(bpeByteSample(Tables.documents(s, d))
-        .select(col("text").as("t")), BPE_BYTES_STEPS)
-      learnedMergeCache((d, BPE_BYTES_STEPS)) = merges
-      merges.toDF("step", "pair", "n_occ")
+      BYTE_BPE.train(s, d).toDF("step", "pair", "n_occ")
     },
     "bpe_train_unicode" -> { (s, d) =>
       // the trainer on MULTI-BYTE text — the gap the byte-level form's
@@ -2015,13 +1948,10 @@ object TextOps {
       // DuckDB is codepoint-native), so the hash gate proves the
       // tokenizer machinery is not ASCII-bound — merged pairs like "ät"
       // and ladder symbols interleave with multi-byte input exactly as
-      // with single-byte. Same quarter sample as the bytes form; no
-      // cache write (nothing applies a transliterated table).
+      // with single-byte. Same quarter sample as the bytes form (its
+      // cache entry has no reader: nothing applies a transliterated table).
       import s.implicits._
-      bpeMerges(bpeByteSample(Tables.documents(s, d))
-          .select(translate(col("text"), UNI_FROM, UNI_TO).as("t")),
-          BPE_TRAIN_STEPS)
-        .toDF("step", "pair", "n_occ")
+      UNICODE_BPE.train(s, d).toDF("step", "pair", "n_occ")
     },
     "bpe_train_utf8" -> { (s, d) =>
       // TRUE byte-level BPE (r18 verdict item 5): where bpe_train_bytes
@@ -2037,15 +1967,10 @@ object TextOps {
       // (continuation-byte pairs win early trips). Same quarter sample,
       // same 12-trip histogram trainer, same unrolled MATERIALIZED-CTE
       // oracle with the bytes-rendering shim as srcText. The trainer
-      // writes the "#utf8"-tagged cache entry that learnedUtf8MergesFor
-      // / token_count_utf8 read — the byte family's induction→apply link.
+      // writes the UTF8_BPE cache entry token_count_utf8 reads — the
+      // byte family's induction→apply link.
       import s.implicits._
-      val merges = bpeMerges(bpeByteSample(Tables.documents(s, d))
-          .select(utf8ByteSyms(translate(col("text"), UNI_FROM, UNI_TO))
-            .as("t")),
-          BPE_TRAIN_STEPS)
-      learnedMergeCache((d + "#utf8", BPE_TRAIN_STEPS)) = merges
-      merges.toDF("step", "pair", "n_occ")
+      UTF8_BPE.train(s, d).toDF("step", "pair", "n_occ")
     },
     "token_count_utf8" -> { (s, d) =>
       // induction→application close for the BYTE-level family (every
@@ -2058,15 +1983,9 @@ object TextOps {
       // two symbols until its byte pair re-merges — the spec pins
       // raw-bytes > n_tokens ≥ chars can break only via merges). Train
       // on the sample, budget everything — the real pipeline split.
-      val merges = learnedUtf8MergesFor(s, d)
-      val chain = merges.foldLeft(
-        utf8ByteSyms(translate(col("text"), UNI_FROM, UNI_TO))) {
-        case (acc, (k, p, _)) =>
-          org.apache.spark.sql.functions.replace(acc, lit(p),
-            lit(learnedSym(k)))
-      }
-      Tables.documents(s, d)
-        .select(col("doc_id"), length(chain).cast("int").as("n_tokens"))
+      Tables.documents(s, d).select(col("doc_id"),
+        length(foldTokens(utf8Text(col("text")), UTF8_BPE.merges(s, d)))
+          .as("n_tokens"))
     },
     "bpe_train_regex" -> { (s, d) =>
       // the production-shaped trainer (r17 verdict item 8): GPT-2-style
@@ -2077,19 +1996,14 @@ object TextOps {
       // and 256 merges — 4× bpe_train_bytes' count, 21× the demo's. The
       // control plane changes with the count: ONE distributed corpus
       // pass builds the pruned histogram, then the merge loop runs in
-      // DRIVER MEMORY over the ≤V collected rows ([[bpeMergesInMemory]]
-      // — the HF/SentencePiece architecture; per-step Spark jobs would
-      // be pure scheduling overhead at this vocab size). Writes the
+      // DRIVER MEMORY over the ≤V collected rows ([[bpeMerges]]' driver
+      // plane — the HF/SentencePiece architecture; per-step Spark jobs
+      // would be pure scheduling overhead at this vocab size). Writes the
       // session cache token_count_regex applies from. Trains
       // UNCONDITIONALLY (the bpe_train_bytes discipline: this IS the
       // timed build; only apply-side consumers read the cache).
       import s.implicits._
-      val merges = bpeMergesInMemory(
-        regexHistogram(s, d).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq,
-        BPE_REGEX_STEPS)
-      learnedMergeCache((d + "#gpt2", BPE_REGEX_STEPS)) = merges
-      merges.toDF("step", "pair", "n_occ")
+      REGEX_BPE.train(s, d).toDF("step", "pair", "n_occ")
     },
     "bpe_vocab_regex" -> { (s, d) =>
       // the VOCABULARY EXPORT — what a serving tokenizer actually loads:
@@ -2105,29 +2019,21 @@ object TextOps {
       // sym_j for j = 256…1 re-introduces only symbols < j, so the
       // descent terminates fully expanded).
       import s.implicits._
-      val merges = learnedRegexMergesFor(s, d)
       val exp = scala.collection.mutable.Map.empty[Char, String]
-      val out = merges.map { case (k, p, _) =>
+      val out = REGEX_BPE.merges(s, d).map { case (k, p, _) =>
         val e = p.flatMap(c => exp.getOrElse(c, c.toString))
-        exp((0xE200 + k).toChar) = e
+        exp(REGEX_BPE.sym(k).head) = e
         (k, e, e.codePointCount(0, e.length))
       }
       out.toDF("step", "expansion", "n_chars")
     },
     "token_count_regex" -> { (s, d) =>
       // the 256-merge regex tokenizer applied to the FULL documents
-      // corpus: pre-tokenize (regexp_extract_all, codegen), then ONE
-      // generated call folds all 256 merges per pre-token
-      // ([[org.apache.spark.sql.graft.BpeTokens]] — a 256-deep replace
-      // chain would blow the generated-method budget that already caps
-      // the 64-merge chain). OOV pre-tokens (pruned from TRAINING) still
+      // corpus through [[regexTokens]] (one codegen pre-tokenize plus one
+      // generated merge call). OOV pre-tokens (pruned from TRAINING) still
       // get every merge APPLIED — the standard BPE apply contract.
-      val merges = learnedRegexMergesFor(s, d)
       Tables.documents(s, d).select(col("doc_id"),
-        org.apache.spark.sql.graft.BpeTokens.column(
-          regexp_extract_all(col("text"), lit(GPT2_PRE_PAT), lit(0)),
-          merges.map(_._2), merges.map(m => regexSym(m._1)))
-          .as("n_tokens"))
+        regexTokens(col("text"), REGEX_BPE.merges(s, d)).as("n_tokens"))
     },
     "tokenizer_eval_regex" -> { (s, d) =>
       // the tokenizer EVAL — the per-domain compression table a
@@ -2140,12 +2046,10 @@ object TextOps {
       // family arc: train (bpe_train_regex) → export (bpe_vocab_regex)
       // → apply (token_count_regex) → EVAL.
       import graft.functions.VectorOps.rIeee
-      val merges = learnedRegexMergesFor(s, d)
+      val merges = REGEX_BPE.merges(s, d)
       regexCorpusTagged(s, d)
         .select(col("dom"), length(col("t")).as("nc"),
-          org.apache.spark.sql.graft.BpeTokens.column(
-            regexp_extract_all(col("t"), lit(GPT2_PRE_PAT), lit(0)),
-            merges.map(_._2), merges.map(m => regexSym(m._1))).as("nt"))
+          regexTokens(col("t"), merges).as("nt"))
         .groupBy(col("dom"))
         .agg(count(lit(1)).as("n_texts"), sum(col("nc")).as("n_chars"),
           sum(col("nt")).as("n_tokens"))
@@ -2170,15 +2074,12 @@ object TextOps {
       // tokenizer_eval_regex's domain total (same corpus, same merges —
       // the two reports cannot drift).
       import graft.functions.VectorOps.rIeee
-      val merges = learnedRegexMergesFor(s, d)
+      val merges = REGEX_BPE.merges(s, d)
       val depths = Seq(64, 128, 256)
       val counted = regexCorpus(s, d).select(
         length(col("t")).as("nc") +:
         depths.map { dep =>
-          val m = merges.takeWhile(_._1 <= dep)
-          org.apache.spark.sql.graft.BpeTokens.column(
-            regexp_extract_all(col("t"), lit(GPT2_PRE_PAT), lit(0)),
-            m.map(_._2), m.map(x => regexSym(x._1))).as(s"nt$dep")
+          regexTokens(col("t"), merges.takeWhile(_._1 <= dep)).as(s"nt$dep")
         }: _*)
       val agg = counted.agg(sum(col("nc")).as("n_chars"),
         depths.map(dep => sum(col(s"nt$dep")).as(s"t$dep")): _*)
@@ -2223,13 +2124,8 @@ object TextOps {
       // the sample, budget everything — the real pipeline split): one
       // codegen replace-chain projection folding all 64 learned merges
       // in order, token_count_learned's shape at 5.3x the chain depth.
-      val chain = learnedByteMergesFor(s, d)
-        .foldLeft(col("text")) { case (acc, (k, p, _)) =>
-          org.apache.spark.sql.functions.replace(acc, lit(p),
-            lit(learnedSym(k)))
-        }
-      Tables.documents(s, d)
-        .select(col("doc_id"), length(chain).as("n_tokens"))
+      Tables.documents(s, d).select(col("doc_id"),
+        length(foldTokens(col("text"), BYTE_BPE.merges(s, d))).as("n_tokens"))
     },
     "drift_report" -> { (s, d) =>
       // distribution-drift monitor (PSI, population stability index) —
@@ -3703,65 +3599,31 @@ object TextOps {
          |       ${graft.functions.VectorSql.rIeee(
              "log2(sum(c)) - sum(c * log2(c)) / sum(c)", 4)} AS entropy
          |FROM cnt GROUP BY doc_id""".stripMargin,
-    "bpe_train" -> bpeTrainSql(BPE_TRAIN_STEPS),
+    "bpe_train" -> CHAR_BPE.trainSql,
     // the unrolled trainer over the transliterated sample — the same
     // CTE ladder, source text swapped for the in-query shim
-    "bpe_train_unicode" ->
-      (bpeTrainCtes(BPE_TRAIN_STEPS, bpeSampleWhere,
-        s"translate(text, '$UNI_FROM', '$UNI_TO')") + "\n" +
-        (1 to BPE_TRAIN_STEPS)
-          .map(k => s"SELECT $k AS step, pair, n_occ FROM b$k")
-          .mkString("\nUNION ALL\n")),
+    "bpe_train_unicode" -> UNICODE_BPE.trainSql,
     // the same CTE ladder over the BYTES-rendered shim corpus: srcText =
     // the shared translate/replace byte renderer, so both engines train
     // on the identical byte-symbol strings
-    "bpe_train_utf8" ->
-      (bpeTrainCtes(BPE_TRAIN_STEPS, bpeSampleWhere,
-        utf8ByteSymsSql(s"translate(text, '$UNI_FROM', '$UNI_TO')")) + "\n" +
-        (1 to BPE_TRAIN_STEPS)
-          .map(k => s"SELECT $k AS step, pair, n_occ FROM b$k")
-          .mkString("\nUNION ALL\n")),
+    "bpe_train_utf8" -> UTF8_BPE.trainSql,
     // train on the sample, apply to the FULL byte-rendered corpus — the
-    // token_count_learned_bytes shape with the byte shim as the base
-    // expression of the inline 12-deep replace fold. Like that fold,
-    // this chain is NOT coalesce-guarded against an empty b_k (the guard
-    // would duplicate the accumulator → 2^12 SQL text); it relies on the
-    // same measured merge-capacity pin — the fixture always yields 12
-    // byte merges (OperatorSpec pins the split-then-re-merge ladder)
-    "token_count_utf8" -> (
-      bpeTrainCtes(BPE_TRAIN_STEPS, bpeSampleWhere,
-        utf8ByteSymsSql(s"translate(text, '$UNI_FROM', '$UNI_TO')")) + "\n" +
-        s"SELECT doc_id, length(${
-          (1 to BPE_TRAIN_STEPS).foldLeft(
-            utf8ByteSymsSql(s"translate(text, '$UNI_FROM', '$UNI_TO')")) {
-            (acc, k) =>
-              s"replace($acc, (SELECT pair FROM b$k), chr(${57600 + k}))"
-          }})::INT AS n_tokens FROM documents"),
-    "token_count_learned" -> (bpeTrainCtes(BPE_TRAIN_STEPS) +
-      s"\nSELECT doc_id, length(t)::INT AS n_tokens FROM s$BPE_TRAIN_STEPS"),
-    "bpe_train_bytes" -> (bpeTrainCtes(BPE_BYTES_STEPS, bpeSampleWhere) +
-      "\n" + (1 to BPE_BYTES_STEPS)
-        .map(k => s"SELECT $k AS step, pair, n_occ FROM b$k")
-        .mkString("\nUNION ALL\n")),
+    // token_count_learned_bytes fold with the byte shim as its base
+    "token_count_utf8" -> foldTokensSql(UTF8_BPE, utf8TextSql("text")),
+    "token_count_learned" -> (CHAR_BPE.trainCtes +
+      s"\nSELECT doc_id, length(t)::INT AS n_tokens FROM s${CHAR_BPE.steps}"),
+    "bpe_train_bytes" -> BYTE_BPE.trainSql,
     // train on the sample, apply to the FULL corpus: the learned pairs
     // come from the 64 materialized b_k rows; the apply is the same
-    // 64-deep replace fold Spark runs, nested inline. This fold is the
-    // one replace chain NOT coalesce-guarded against an empty b_k (the
-    // guard would duplicate the accumulator → 2^64 SQL text); it relies
-    // on the measured merge-capacity pin the trainer CTEs no longer need
-    "token_count_learned_bytes" -> (
-      bpeTrainCtes(BPE_BYTES_STEPS, bpeSampleWhere) + "\n" +
-        s"SELECT doc_id, length(${
-          (1 to BPE_BYTES_STEPS).foldLeft("text") { (acc, k) =>
-            s"replace($acc, (SELECT pair FROM b$k), chr(${57600 + k}))"
-          }})::INT AS n_tokens FROM documents"),
+    // 64-deep replace fold Spark runs, nested inline
+    "token_count_learned_bytes" -> foldTokensSql(BYTE_BPE, "text"),
     // the regex trainer replayed in its histogram form (vocab-bounded
     // per step — 256 corpus rewrites would not be): one regex scan to
     // h0, 256 b/h steps, balanced-union merge-table collection
-    "bpe_train_regex" -> bpeRegexTrainSql(BPE_REGEX_STEPS),
+    "bpe_train_regex" -> REGEX_BPE.trainSql,
     // training chain + descending reverse-replace expansion of the
     // merge rows to base characters (the serving-vocab view)
-    "bpe_vocab_regex" -> bpeVocabRegexSql(BPE_REGEX_STEPS),
+    "bpe_vocab_regex" -> bpeVocabRegexSql,
     // the training chain + a distinct-pre-token rewrite chain (dv_k) +
     // the fan-out join back to documents — the apply replayed at
     // vocabulary cost, OOV pre-tokens included

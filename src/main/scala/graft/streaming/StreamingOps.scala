@@ -290,23 +290,19 @@ object StreamingOps {
     * token-budget meter a live curation pipeline runs per arriving doc
     * (admission quotas and pack planning consume token counts, not
     * char counts). The merge table is the OFFLINE model artifact
-    * (bpe_train_regex's session cache; a cache miss trains once,
-    * batch-side — the stream itself never touches the trainer), folded
-    * into the one [[org.apache.spark.sql.graft.BpeTokens]] generated
-    * call, so the stream is a stateless append-mode projection: zero
-    * state, row-identical to the batch token_count_regex by
-    * construction (StreamingSpec pins it). */
+    * (`REGEX_BPE.merges`, the session cache bpe_train_regex writes; a
+    * cache miss trains once, batch-side — the stream itself never
+    * touches the trainer), applied through the batch apply's
+    * [[graft.operators.TextOps.regexTokens]], so the stream is a
+    * stateless append-mode projection: zero state, row-identical to the
+    * batch token_count_regex by construction (StreamingSpec pins it). */
   def tokenCountStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.TextOps
-    val merges = TextOps.learnedRegexMergesFor(spark, sfDir)
+    val merges = TextOps.REGEX_BPE.merges(spark, sfDir)
     spark.readStream.schema(docsSchema)
       .parquet(stageDir(spark, sfDir, "documents"))
       .select(col("doc_id"),
-        org.apache.spark.sql.graft.BpeTokens.column(
-          regexp_extract_all(col("text"), lit(TextOps.GPT2_PRE_PAT),
-            lit(0)),
-          merges.map(_._2), merges.map(m => TextOps.regexSym(m._1)))
-          .as("n_tokens"))
+        TextOps.regexTokens(col("text"), merges).as("n_tokens"))
   }
 
   /** Streaming tumbling 1h window per event_type with a 2h watermark.

@@ -1723,16 +1723,18 @@ class OperatorSpec extends SparkSpec {
     // "ababab"×2 → ab:6 (ba:4) merges first; state "XXX" → XX:4 merges
     // (X = U+E101); state "YX" → YX:2 (Y = U+E102). Steps 2 and 3 both
     // merge previously-merged symbols — the ladder in miniature.
+    import graft.operators.TextOps
+    def train(docs: org.apache.spark.sql.DataFrame, steps: Int) = TextOps.bpeMerges(
+      TextOps.wordHistogram(docs), steps, TextOps.learnedSym,
+      skipEmptyTrips = false)
     val docs = Seq("ababab", "ababab").toDF("t")
-    val got = graft.operators.TextOps.bpeTrain(docs, 3)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+    val got = train(docs, 3)
     val x = new String(Character.toChars(0xE101))
     val y = new String(Character.toChars(0xE102))
     assert(got.toSeq === Seq((1, "ab", 6L), (2, x + x, 4L), (3, y + x, 2L)))
     // tie-break: ab/bb/ba all count 1 → lexicographically smallest wins
-    val tie = graft.operators.TextOps.bpeTrain(Seq("abba").toDF("t"), 1)
-      .collect()(0)
-    assert(tie.getString(1) === "ab" && tie.getLong(2) === 1L)
+    val tie = train(Seq("abba").toDF("t"), 1).head
+    assert(tie._2 === "ab" && tie._3 === 1L)
     // and the declared 12-step run really reaches the ladder regime
     val full = SparkEntry.queries("bpe_train")(spark, sf).collect()
       .sortBy(_.getInt(0))
@@ -1820,8 +1822,9 @@ class OperatorSpec extends SparkSpec {
       "pruned histogram is not the deterministic top-V prefix")
   }
 
-  test("bpeMergesInMemory: hand ladder, tie-break, and exhaustion stop") {
+  test("regex-family trainer: hand ladder, tie-break, and exhaustion stop") {
     import graft.operators.TextOps
+    import spark.implicits._
     // hand ladder on ("aabaab",2),("aac",1):
     //   step 1: aa=2*2+1=5, ab=2*2=4, ba=2, ac=1 -> ("aa",5), aa->S1
     //   step 2: over S1bS1b / S1c: S1b=4, bS1=2, S1c=1 -> (S1+"b",4) --
@@ -1831,16 +1834,17 @@ class OperatorSpec extends SparkSpec {
     //   step 3: over S2S2 / S1c: S2S2=2 wins -> the ladder merges a
     //           merged symbol with itself
     val S1 = TextOps.regexSym(1); val S2 = TextOps.regexSym(2)
-    val m = TextOps.bpeMergesInMemory(
-      Seq(("aabaab", 2L), ("aac", 1L)), 3)
+    def train(hist: Seq[(String, Long)], steps: Int) = TextOps.bpeMerges(
+      hist.toDF("w", "freq"), steps, TextOps.regexSym, skipEmptyTrips = true)
+    val m = train(Seq(("aabaab", 2L), ("aac", 1L)), 3)
     assert(m === Seq((1, "aa", 5L), (2, S1 + "b", 4L), (3, S2 + S2, 2L)))
     // count tie breaks pair-ASC, the cross-engine (binary-collation)
     // ordering: ab:1 vs ba:1 -> "ab"
-    val tie = TextOps.bpeMergesInMemory(Seq(("ab", 1L), ("ba", 1L)), 1)
+    val tie = train(Seq(("ab", 1L), ("ba", 1L)), 1)
     assert(tie === Seq((1, "ab", 1L)))
     // exhaustion: a 1-pair vocabulary stops emitting, never loops or
     // fabricates (the oracle's empty-b_k arm mirrors the omission)
-    val short = TextOps.bpeMergesInMemory(Seq(("ab", 1L)), 5)
+    val short = train(Seq(("ab", 1L)), 5)
     assert(short.map(_._1) === Seq(1))
   }
 
@@ -1902,6 +1906,55 @@ class OperatorSpec extends SparkSpec {
     val regex256 = got.values.map(_.toLong).sum
     assert(regex256 < bytes64,
       s"regex-256 ($regex256 tokens) did not beat bytes-64 ($bytes64)")
+  }
+
+  test("each cached BPE family's apply queries read the list its trainer stored") {
+    // build ≠ apply: a trainer query retrains and stores its merge list;
+    // its apply queries must read that very list and never retrain. The
+    // stored list is the trainer's rows, the family's getter hands back
+    // that same object, and each apply query follows the stored list:
+    // with a 3-merge sentinel stored in its place, every doc's count is
+    // the driver-side replay of those 3 merges, not of the trained ones.
+    import graft.operators.TextOps._
+    type Merges = Seq[(Int, String, Long)]
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"), utf8Text(col("text")))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    def fold(t: String, m: Merges, sym: Int => String): Int = {
+      val end = m.foldLeft(t) { case (acc, (k, p, _)) => acc.replace(p, sym(k)) }
+      end.codePointCount(0, end.length)
+    }
+    val rx = GPT2_PRE_PAT.r
+    // (family, its apply queries, per-doc replay over (text, utf8 bytes))
+    val families: Seq[(BpeFamily, Seq[String], (Merges, String, String) => Int)] = Seq(
+      (CHAR_BPE, Seq("token_count_learned"), (m, t, _) => fold(t, m, learnedSym)),
+      (BYTE_BPE, Seq("token_count_learned_bytes"),
+        (m, t, _) => fold(t, m, learnedSym)),
+      (UTF8_BPE, Seq("token_count_utf8"), (m, _, b) => fold(b, m, learnedSym)),
+      (REGEX_BPE, Seq("token_count_regex", "streaming_token_count"),
+        (m, t, _) => rx.findAllIn(t)
+          .map(tok => fold(tok.replace(' ', 0x0120.toChar), m, regexSym)).sum))
+    for ((f, applies, replay) <- families) {
+      val rows = SparkEntry.queries(f.name)(spark, sf).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
+      val stored = learnedMergeCache((f.name, sf))
+      assert(stored === rows, s"${f.name}: the stored list is not the trainer's rows")
+      assert(f.merges(spark, sf) eq stored, s"${f.name}: the getter retrained")
+      val sentinel = stored.take(3)
+      assert(docs.exists { case (_, t, b) =>
+        replay(sentinel, t, b) != replay(stored, t, b) },
+        s"${f.name}: the sentinel cannot tell the two lists apart")
+      learnedMergeCache((f.name, sf)) = sentinel
+      try applies.foreach { q =>
+        val got = SparkEntry.queries(q)(spark, sf).collect()
+          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+        assert(got.size === docs.length, s"$q: not every doc counted")
+        docs.foreach { case (id, t, b) =>
+          assert(got(id) === replay(sentinel, t, b),
+            s"$q doc $id: the count does not follow the stored list")
+        }
+      } finally learnedMergeCache((f.name, sf)) = stored
+    }
   }
 
   test("tokenizer_eval_regex: a consistent per-domain compression table") {
@@ -2842,7 +2895,8 @@ class OperatorSpec extends SparkSpec {
     // pair — training reassembles the codepoint the rendering split
     val tiny = Seq.fill(5)("café olé").toDF("t")
       .select(TextOps.utf8ByteSyms(col("t")).as("t"))
-    val merges = TextOps.bpeMerges(tiny, 2)
+    val merges = TextOps.bpeMerges(TextOps.wordHistogram(tiny), 2,
+      TextOps.learnedSym, skipEmptyTrips = false)
     assert(merges.head._2 === "" + bsym(0xC3) + bsym(0xA9),
       "first merge is not the split codepoint re-merging from its bytes")
     // and the declared fixture query: 12 merges, 2 symbols each, with a

@@ -10,6 +10,16 @@ class PlanSpec extends SparkSpec {
   private def executed(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** The full root paths of every file scan in `plan` — the plan string
+    * cuts a scan's Location to spark.sql.maxMetadataStringLength, so a
+    * path suffix read there depends on how long the checkout path is. */
+  private def scanRoots(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.map(_.toString)
+      }.flatten
+
   test("events ts normalization is plan-transparent (prune + pushdown)") {
     // Tables.events wraps the scan in a normalizing Project (any lake
     // timestamp encoding → canonical epoch-nanos long); that Project must
@@ -350,16 +360,21 @@ class PlanSpec extends SparkSpec {
     // its plan must be a single pruned scan of the delta layout: no
     // exchange, no argmin re-assignment, and no scan of the embeddings
     // fixture or the standing vector files
-    val plan = executed("ivf_index_incremental")
+    val exec = SparkEntry.queries("ivf_index_incremental")(spark, sf)
+      .queryExecution.executedPlan
+    val plan = exec.toString
     assert(!plan.contains("Exchange"),
       "reading the appended layout must not shuffle")
     assert(!plan.toLowerCase.contains("nearestcenter"),
       "assignment must happen at ingest ETL time, not in-query")
     assert(plan.split("Scan parquet", -1).length - 1 == 1,
       "exactly one scan: the delta layout")
-    assert(!plan.contains("embeddings.parquet"),
-      "the corpus fixture must not be rescanned")
-    assert(plan.contains("-delta"), "scan must target the delta layout")
+    val roots = scanRoots(exec)
+    assert(roots.nonEmpty, "no file scan found in the executed plan")
+    assert(!roots.exists(_.contains("embeddings.parquet")),
+      s"the corpus fixture must not be rescanned: $roots")
+    assert(roots.forall(_.contains("-delta")),
+      s"scan must target the delta layout: $roots")
   }
 
   test("pack_binpack shuffles once (the lane exchange); repetition_strip never") {
@@ -1094,15 +1109,18 @@ class PlanSpec extends SparkSpec {
     // refresh is maintenance ETL (ensureIvfRefreshed); the DECLARED
     // relation is one pruned scan of the refreshed files — no exchange,
     // no in-query reassignment, no corpus rescan
-    val plan = executed("ivf_index_refresh")
+    val exec = SparkEntry.queries("ivf_index_refresh")(spark, sf)
+      .queryExecution.executedPlan
+    val plan = exec.toString
     assert(!plan.contains("Exchange"),
       "reading the refreshed layout must not shuffle")
     assert(!plan.toLowerCase.contains("nearestcenter"),
       "reassignment must happen at maintenance ETL time, not in-query")
     assert(plan.split("Scan parquet", -1).length - 1 == 1,
       "exactly one scan: the refreshed layout")
-    assert(plan.contains("-refreshed"),
-      "scan must target the refreshed layout")
+    val roots = scanRoots(exec)
+    assert(roots.nonEmpty && roots.forall(_.contains("-refreshed")),
+      s"scan must target the refreshed layout: $roots")
   }
 
   test("shard_manifest: bounded windows only; one corpus-scaled aggregate") {

@@ -832,20 +832,20 @@ class PropertySpec extends SparkSpec {
 
   test("the two BPE trainers agree on generated corpora (loop shapes differ, " +
       "semantics must not)") {
-    // The repo ships TWO trainer control planes: bpeMerges (adaptive:
-    // driver merge loop for in-cap histograms, distributed per-trip
-    // fallback — bpe_train/_bytes/_unicode; the fallback is pinned
-    // against the driver plane in the dedicated dual-plane test below)
-    // and bpeMergesInMemory (histogram-collect + driver loop —
-    // bpe_train_regex). Both claim
-    // the same textbook semantics: overlap-counted within-word pairs
-    // weighted by frequency, (count DESC, pair ASC) argmax,
-    // left-to-right non-overlapping rewrite. This pins them to each
-    // other on generated corpora — a semantic drift in either loop
-    // (overlap handling, tie order, rewrite direction) breaks equality
-    // here before it surfaces as an unexplained oracle mismatch. The
-    // minted alphabets differ by design (U+E1xx vs U+E2xx), so pairs
-    // compare through a symbol-index normalization.
+    // The one trainer (bpeMerges) is fed two ways: the split-on-space
+    // families build their histogram from a corpus (wordHistogram —
+    // bpe_train/_bytes/_unicode/_utf8) and mint U+E1xx symbols; the
+    // regex family hands it a pre-built histogram and mints U+E2xx with
+    // the skip-on-exhaustion rule (bpe_train_regex). Both claim the same
+    // textbook semantics: overlap-counted within-word pairs weighted by
+    // frequency, (count DESC, pair ASC) argmax, left-to-right
+    // non-overlapping rewrite. This pins the two feeds to each other on
+    // generated corpora — a drift in the histogram build or either
+    // family's settings breaks equality here before it surfaces as an
+    // unexplained oracle mismatch (the distributed fallback is pinned
+    // against the driver plane in the dedicated dual-plane test below).
+    // The minted alphabets differ by design, so pairs compare through a
+    // symbol-index normalization.
     import graft.operators.TextOps
     val alphas = "abcde"
     def word(i: Int, c: Int): String = {
@@ -858,14 +858,14 @@ class PropertySpec extends SparkSpec {
       val words = (0 until 12).map(i => (word(i, c), 1L + (i % 3)))
       val docs = words.flatMap { case (w, f) => Seq.fill(f.toInt)(w) }
       val steps = 6
-      val dist = TextOps.bpeTrain(
-        Seq(docs.mkString(" ")).toDF("t"), steps).collect()
-        .sortBy(_.getInt(0))
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      val dist = TextOps.bpeMerges(
+        TextOps.wordHistogram(Seq(docs.mkString(" ")).toDF("t")), steps,
+        TextOps.learnedSym, skipEmptyTrips = false)
       // histogram equivalent of the same corpus (len>=2 filter matches)
       val hist = words.groupBy(_._1).view.mapValues(_.map(_._2).sum)
         .toSeq.filter(_._1.length >= 2)
-      val mem = TextOps.bpeMergesInMemory(hist, steps)
+      val mem = TextOps.bpeMerges(hist.toDF("w", "freq"), steps,
+        TextOps.regexSym, skipEmptyTrips = true)
       def norm(sym0: Int)(p: String): String = p.map { ch =>
         if (ch >= 0xE000.toChar) ('A' + (ch - sym0)).toChar else ch
       }
@@ -913,7 +913,8 @@ class PropertySpec extends SparkSpec {
           ("a😀a", 2L)), 3))
     for (((hist, steps), ci) <- cases.zipWithIndex) {
       val histDf = hist.toDF("w", "freq").localCheckpoint()
-      val dist = TextOps.bpeMergesDistributed(histDf, steps)
+      val dist = TextOps.bpeMergesDistributed(histDf, steps,
+        TextOps.learnedSym, skipEmptyTrips = false)
       val drv = TextOps.bpeMergesDriver(hist, steps, TextOps.learnedSym,
         skipEmptyTrips = false)
       assert(dist === drv, s"case $ci: distributed $dist vs driver $drv")
